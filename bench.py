@@ -814,7 +814,7 @@ def time_queries(spark, queries, names, sf_dir, reps=REPS, tag=""):
         # time fn()+collect as one unit: streaming queries and iterative
         # algorithms execute inside fn(), not at collect time.
         # HOLD each rep's DataFrame handle for the whole measurement:
-        # round-9's scoped_persist ties persisted intermediates to the
+        # a builder's QueryScope ties persisted intermediates to the
         # result handle, so dropping it between reps would unpersist the
         # plan-deduped cache entry and turn the reps into cache-rebuild
         # measurements — the warm-up philosophy here is that reps measure

@@ -18,6 +18,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
+from flink_net_spark.tables import shuffle_partitions
+
 
 class JobClient:
     """≙ JobManagerController job-scoped endpoints (status/stop/cancel/
@@ -142,12 +144,8 @@ class JobManager:
         # checkpoint pins its own state partitioning anyway, and leaving the
         # session-global conf mutated would silently rescale every other
         # query sharing the SparkSession.
-        prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(new_shuffle_partitions))
-        try:
+        with shuffle_partitions(self.spark, new_shuffle_partitions):
             return spec.start(self.spark)
-        finally:
-            self.spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @dataclass

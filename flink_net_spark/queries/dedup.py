@@ -18,12 +18,22 @@ Scale design:
 
 from __future__ import annotations
 
+import functools
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_net_spark.functions import hashing as H
 from flink_net_spark.queries import query
-from flink_net_spark.tables import load_table, scoped_persist, spread_small_scan
+from flink_net_spark.tables import (
+    QueryScope,
+    derived_shuffle_partitions,
+    load_table,
+    release_persisted,
+    scoped,
+    shuffle_partitions,
+    spread_small_scan,
+)
 
 MINHASH_K = 16
 LSH_BANDS = 8  # 2 rows per band
@@ -145,19 +155,17 @@ def _lsh_candidates(sh: DataFrame) -> DataFrame:
     )
 
 
-def _minhash_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[DataFrame]]:
+def _minhash_pairs(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> tuple[DataFrame, DataFrame]:
     """Verified near-dup pairs (doc_a < doc_b, jaccard ≥ threshold), plus
-    the list of persisted intermediates backing them — an explicit
-    ``(pairs, caches)`` tuple (the ``kn_scored_transitions`` contract;
-    the r9 ADVICE minor: an ad-hoc attribute on the DataFrame broke
-    silently for any consumer that transformed it first).  Consumers pass
-    the caches to ``scoped_persist`` with their FINAL result, or release
-    them directly once their eager work is done.
+    the shingle frame backing them, persisted in ``scope`` — a consumer
+    whose eager work is done with it may ``scope.drop`` it early.
 
     The shingle DF feeds three subtrees (signatures + both verify sides);
     persist() shares one scan/compute across them — Catalyst does not
     dedupe common subtrees on its own."""
-    sh = _spark_shingle_hash_df(spark, sf_dir).persist()
+    sh = scope.persist(_spark_shingle_hash_df(spark, sf_dir))
     cand = _lsh_candidates(sh)
     x = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     y = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
@@ -169,7 +177,7 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[Da
         .withColumn("jaccard", inter * F.lit(1.0) / union)
         .filter(F.col("jaccard") >= JACCARD_VERIFY_THRESHOLD)
     )
-    return out, [sh]
+    return out, sh
 
 
 @query(
@@ -182,17 +190,17 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[Da
     ORDER BY doc_a, doc_b
     """,
 )
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataFrame:
     """MinHash+LSH near-dup detection: word-3gram shingles → 16 minhashes →
     8 bands × 2 rows → bucket-join candidates → exact-Jaccard verify.
 
     Fully deterministic (fixed hash coefficients), so the oracle replicates
     the *pipeline*, not just the ground truth."""
-    pairs, caches = _minhash_pairs(spark, sf_dir)
-    return scoped_persist(
+    pairs, _sh = _minhash_pairs(spark, sf_dir, scope)
+    return (
         pairs.select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-        .orderBy("doc_a", "doc_b"),
-        *caches,
+        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -238,7 +246,8 @@ CONTAINMENT_THRESHOLD = 0.7  # max-directional containment to report a pair
     ORDER BY doc_a, doc_b
     """,
 )
-def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def dedup_containment(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataFrame:
     """Asymmetric containment dedup (Broder 1997, "On the resemblance and
     containment of documents"): for each banded-LSH candidate pair report
     both directional containments C(A,B) = |A∩B|/|A| and the symmetric
@@ -261,8 +270,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical shape to dedup_minhash_lsh — the shuffle carries
     (doc_id, band_key) pairs and the bounded candidate set; shingle
     arrays join in only for candidates."""
-    sh = _spark_shingle_hash_df(spark, sf_dir).persist()
-    return scoped_persist(_containment_verify(_lsh_candidates(sh), sh), sh)
+    sh = scope.persist(_spark_shingle_hash_df(spark, sf_dir))
+    return _containment_verify(_lsh_candidates(sh), sh)
 
 
 def _containment_verify(cand: DataFrame, sh: DataFrame, dedupe: bool = False) -> DataFrame:
@@ -361,7 +370,10 @@ _DUCK_CONTAINMENT_TAIL = f"""
     {_DUCK_CONTAINMENT_TAIL}
     """,
 )
-def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def dedup_containment_prefix(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """Containment dedup with EXACT recall at the threshold, via prefix
     filtering (Chaudhuri et al. 2006 "A Primitive Operator for Similarity
     Joins"; Bayardo et al. 2007 "Scaling Up All Pairs Similarity Search")
@@ -398,7 +410,7 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing one hot shingle set) drives that quadratic — a boilerplate-
     removal problem first (dedup_prefix_clusters /
     dedup_substring_winnow)."""
-    sh = _spark_shingle_hash_df(spark, sf_dir).persist()
+    sh = scope.persist(_spark_shingle_hash_df(spark, sf_dir))
     fp = _FP32.format(x="g")
     pref = sh.select(
         "doc_id",
@@ -428,7 +440,7 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frames, so duplicated candidates cost only a re-verified pair per
     # shared prefix shingle, and the distinct moves to the tiny post-
     # threshold survivor set (dedupe=True).
-    return scoped_persist(_containment_verify(cand, sh, dedupe=True), sh)
+    return _containment_verify(cand, sh, dedupe=True)
 
 
 @query(
@@ -456,7 +468,10 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id
     """,
 )
-def dedup_resolve_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def dedup_resolve_groups(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """Pairs → keep-set resolution: connected components over the verified
     MinHash near-dup pairs by iterative min-label propagation; the minimum
     doc_id of each component is the canonical survivor (``keep = true``) —
@@ -471,20 +486,7 @@ def dedup_resolve_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     un-truncated loop compiles a 1000+-join plan and recomputes from
     scratch on any cache eviction).  The oracle walks the same components
     with a recursive CTE."""
-    from flink_net_spark.tables import (
-        acquire_persisted,
-        checkpoint_tracked,
-        release_acquired,
-        release_rdd_ids,
-        release_rdds_with_result,
-    )
-
-    mp, mp_caches = _minhash_pairs(spark, sf_dir)
-    # Refcounted use: a live dedup_minhash_lsh result may be scoped (same
-    # semantic plan key) to these caches — releasing through _PLAN_REFS
-    # instead of a direct unpersist() leaves its cache alive until BOTH
-    # users are done (r10 ADVICE).
-    mp_keys = acquire_persisted(*mp_caches)
+    mp, sh = _minhash_pairs(spark, sf_dir, scope)
     pairs = mp.select("doc_a", "doc_b")
     # r17 (guide §2.2): the convergence loop runs under an input-derived
     # shuffle-partition count — the pair graph is pairs-not-documents sized
@@ -492,34 +494,25 @@ def dedup_resolve_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 32-task stages.  Measured at sf0.1 (tools/exp_iter_parts.py,
     # fingerprints identical): 2.80 → 1.99 s warm median.  MIN-over-BIGINT
     # label propagation is partition-count-independent.
-    from flink_net_spark.tables import (
-        derived_shuffle_partitions,
-        scoped_shuffle_partitions,
-    )
-
-    with scoped_shuffle_partitions(
-        spark, derived_shuffle_partitions(sf_dir, ["documents"])
-    ):
-        edge_ids: list[int] = []
-        edges = checkpoint_tracked(
+    with shuffle_partitions(spark, derived_shuffle_partitions(sf_dir, ["documents"])):
+        edges = scope.checkpoint(
             pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).union(
                 pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
             ),
-            edge_ids,
+            eager=True,
         )
-        label_ids: list[int] = []
-        labels = checkpoint_tracked(
+        ck = scope.checkpoint(
             edges.select(F.col("u").alias("id")).distinct().withColumn("label", F.col("id")),
-            label_ids,
+            eager=True,
         )
+        labels = ck
         for _ in range(50):  # bound: diameter of the largest component
             nbr = (
                 edges.join(labels.withColumnRenamed("id", "v_id"), F.col("v") == F.col("v_id"))
                 .groupBy("u")
                 .agg(F.min("label").alias("nbr_min"))
             )
-            new_ids: list[int] = []
-            new_labels = checkpoint_tracked(  # eager: materializes + truncates lineage
+            new_ck = scope.checkpoint(  # eager: materializes + truncates lineage
                 labels.withColumnRenamed("label", "old_label")
                 .join(nbr.withColumnRenamed("u", "id"), "id", "left")
                 .select(
@@ -529,31 +522,27 @@ def dedup_resolve_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).alias("label"),
                     "old_label",
                 ),
-                new_ids,
+                eager=True,
             )
-            changed = new_labels.filter(F.col("label") != F.col("old_label")).count()
+            changed = new_ck.filter(F.col("label") != F.col("old_label")).count()
             # the new checkpoint is materialized: its parent round's cache is
             # superseded — release it now instead of leaking one per iteration
-            release_rdd_ids(spark, label_ids)
-            label_ids = new_ids
-            labels = new_labels.select("id", "label")
+            scope.drop(ck)
+            ck = new_ck
+            labels = ck.select("id", "label")
             if changed == 0:
                 break
     # the loop ran eagerly off the localCheckpoints; the shingle cache
     # behind the pair generation and the edge checkpoint are no longer
     # referenced — release them now.  The FINAL label checkpoint backs the
-    # returned plan, so it rides the result handle's lifetime.
-    release_acquired(mp_keys)
-    release_rdd_ids(spark, edge_ids)
-    return release_rdds_with_result(
-        labels.select(
-            F.col("id").alias("doc_id"),
-            F.col("label").alias("group_id"),
-            (F.col("label") == F.col("id")).alias("keep"),
-        ).orderBy("doc_id"),
-        spark,
-        label_ids,
-    )
+    # returned plan, so it stays in the scope.
+    scope.drop(sh)
+    scope.drop(edges)
+    return labels.select(
+        F.col("id").alias("doc_id"),
+        F.col("label").alias("group_id"),
+        (F.col("label") == F.col("id")).alias("keep"),
+    ).orderBy("doc_id")
 
 
 _NGRAM_BLOCK_CAP = 1000
@@ -711,7 +700,10 @@ _SIMHASH_BANDS = 4  # 15-bit bands; pigeonhole: ≤3 differing bits touch ≤3 o
     ORDER BY doc_a, doc_b
     """,
 )
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def dedup_simhash_pairs(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """SimHash near-dup pairing by banded Hamming join.
 
     The 32-bit simhash splits into 4 byte-bands; any pair within Hamming
@@ -725,10 +717,9 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: without it Catalyst's projection collapse inlines the whole
     # text→token→shingle→simhash expression into BOTH join sides and the
     # verify projection, recomputing the full pipeline per candidate row
-    sh = (
+    sh = scope.persist(
         _spark_shingle_hash_df(spark, sf_dir)
         .select("doc_id", F.expr(_spark_simhash()).alias("simhash"))
-        .persist()
     )
     bands = sh.select(
         "doc_id",
@@ -757,12 +748,11 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    return scoped_persist(
+    return (
         cand.withColumn("hamming", F.expr("CAST(bit_count(sa ^ sb) AS BIGINT)"))
         .filter(F.col("hamming") <= _HAMMING_MAX)
         .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b"),
-        sh,
+        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -883,13 +873,16 @@ _DUCK_SUB_GRAMS = f"""
     ORDER BY doc_a, doc_b
     """,
 )
-def dedup_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def dedup_substring_pairs(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """Document pairs sharing at least one k-token verbatim span, with the
     shared-window count and containment overlap
     (``n_shared / min(windows_a, windows_b)`` — the substring analogue of
     Jaccard containment).  See the section comment for the scale contract;
     the self-join input is pre-shrunk to windows with ``2 <= df <= cap``."""
-    gr = _substring_grams(spark, sf_dir).persist()
+    gr = scope.persist(_substring_grams(spark, sf_dir))
     elig = (
         gr.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -908,7 +901,7 @@ def dedup_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wa = nw.select(F.col("doc_id").alias("doc_a"), F.col("n_windows").alias("nw_a"))
     wb = nw.select(F.col("doc_id").alias("doc_b"), F.col("n_windows").alias("nw_b"))
-    return scoped_persist(
+    return (
         pairs.join(wa, "doc_a")
         .join(wb, "doc_b")
         .select(
@@ -919,8 +912,7 @@ def dedup_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_shared_windows") * F.lit(1.0) / F.least("nw_a", "nw_b"), 4
             ).alias("overlap"),
         )
-        .orderBy("doc_a", "doc_b"),
-        gr,
+        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -984,7 +976,10 @@ def _pack_nbuck(sf_dir: str, table: str = "documents") -> int:
     ORDER BY d.doc_id
     """,
 )
-def dedup_substring_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def dedup_substring_stats(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """Per-document duplicated-span profile: how many of the doc's k-token
     windows appear verbatim in at least one OTHER document (df >= 2 — no
     boilerplate cap here: a doc that is mostly boilerplate should score as
@@ -1026,13 +1021,12 @@ def dedup_substring_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     would balloon one bucket; corpora like that are what the winnowed
     profile (dedup_substring_winnow, @mf 0.66) exists for."""
     d = spread_small_scan(load_table(spark, sf_dir, "documents"))
-    base = (
+    base = scope.persist(
         d.withColumn("th", F.expr(H.spark_token_hashes("text")))
         .select(
             "doc_id",
             F.expr(H.spark_hashed_shingles("th", SUBSTR_WINDOW)).alias("sh"),
         )
-        .persist()
     )
     gr = base.select("doc_id", F.explode("sh").alias("g")).select(
         "doc_id", F.expr(_FP32.format(x="g")).alias("gram")
@@ -1058,7 +1052,7 @@ def dedup_substring_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.size("sh").cast("long").alias("n_windows")
     )
     n_dup = F.coalesce("n_dup", F.lit(0).cast("long"))
-    return scoped_persist(
+    return (
         nw.join(nd, "doc_id", "left")
         .select(
             "doc_id",
@@ -1071,8 +1065,7 @@ def dedup_substring_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("dup_ratio"),
         )
-        .orderBy("doc_id"),
-        base,
+        .orderBy("doc_id")
     )
 
 
@@ -1239,7 +1232,10 @@ def dedup_substring_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY source_a, source_b
     """,
 )
-def dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def dedup_source_overlap(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """Pairwise source contamination: distinct-shingle intersection size and
     Jaccard per source pair (pairs sharing zero shingles are omitted).
 
@@ -1261,9 +1257,9 @@ def dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = d.withColumn("th", F.expr(H.spark_token_hashes("text"))).select(
         "source", F.explode(F.expr(H.spark_hashed_shingles("th"))).alias("h")
     )
-    byh = sh.groupBy("h").agg(
-        F.sort_array(F.collect_set("source")).alias("ss")
-    ).persist()
+    byh = scope.persist(
+        sh.groupBy("h").agg(F.sort_array(F.collect_set("source")).alias("ss"))
+    )
     sizes = (
         byh.select(F.explode("ss").alias("source"))
         .groupBy("source")
@@ -1286,7 +1282,7 @@ def dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     xs = sizes.withColumnRenamed("source", "sa").withColumnRenamed("n", "n_a")
     ys = sizes.withColumnRenamed("source", "sb").withColumnRenamed("n", "n_b")
-    return scoped_persist(
+    return (
         pairs.join(F.broadcast(xs), "sa")
         .join(F.broadcast(ys), "sb")
         .select(
@@ -1299,8 +1295,7 @@ def dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "jaccard_e6"
             ),
         )
-        .orderBy("source_a", "source_b"),
-        byh,
+        .orderBy("source_a", "source_b")
     )
 
 
@@ -1389,7 +1384,10 @@ def _lsh_audit_oracle() -> str:
 
 
 @query("dedup_lsh_recall_audit", oracle=_lsh_audit_oracle(), scale_safe=False)
-def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def dedup_lsh_recall_audit(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """MinHash-LSH banding audit on a constant-count hash sample: exact
     near-dup pairs vs band-caught pairs, with e6 recall/precision.  See
     the module comment for why the sampled estimate transfers to the full
@@ -1416,11 +1414,10 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r2") <= _LSH_AUDIT_TARGET_DOCS)
         .select("doc_id")
     )
-    samp = (
+    samp = scope.persist(
         spread_small_scan(docs.join(F.broadcast(keys), "doc_id"))
         .withColumn("th", F.expr(H.spark_token_hashes("text")))
         .select("doc_id", F.expr(H.spark_hashed_shingles("th")).alias("sh"))
-        .persist()
     )
     a = samp.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sha"))
     b = samp.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("shb"))
@@ -1477,7 +1474,7 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_hit = tp.join(caught, ["doc_a", "doc_b"]).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_caught_true")
     )
-    return scoped_persist(
+    return (
         n_samp.crossJoin(n_true)
         .crossJoin(n_cand)
         .crossJoin(n_hit)
@@ -1494,8 +1491,7 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CASE WHEN n_candidate_pairs > 0 THEN "
                 "(1000000 * n_caught_true) div n_candidate_pairs END"
             ).alias("precision_e6"),
-        ),
-        samp,
+        )
     )
 
 
@@ -1649,7 +1645,10 @@ _INC_MOD = 10  # doc_id % 10 == 0 → the incoming batch
     ORDER BY d.doc_id
     """,
 )
-def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def dedup_incremental_minhash(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """Incremental ingest dedup (section comment): every incoming-batch doc
     reports its banded-candidate count against the existing corpus index,
     its best verified match (max Jaccard, tie → lowest existing doc_id)
@@ -1658,7 +1657,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.  Same deterministic shingle→minhash→band pipeline as
     dedup_minhash_lsh, asymmetric new→existing join instead of the
     all-pairs self-join."""
-    sh = _spark_shingle_hash_df(spark, sf_dir).persist()
+    sh = scope.persist(_spark_shingle_hash_df(spark, sf_dir))
     sig = sh.withColumn("sig", F.expr(H.spark_minhash_sig("sh", MINHASH_K)))
     bands = sig.select(
         "doc_id",
@@ -1697,7 +1696,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % _INC_MOD == 0
     ).select("doc_id")
-    return scoped_persist(
+    return (
         incoming.join(best, incoming.doc_id == best.new_id, "left")
         .select(
             "doc_id",
@@ -1708,8 +1707,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("jaccard") >= JACCARD_VERIFY_THRESHOLD, F.lit(False)
             ).alias("is_dup"),
         )
-        .orderBy("doc_id"),
-        sh,
+        .orderBy("doc_id")
     )
 
 
@@ -1734,7 +1732,10 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY d.doc_id
     """,
 )
-def dedup_span_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def dedup_span_novelty(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """Per-document span NOVELTY in ingestion order (doc_id as arrival
     proxy): the fraction of a doc's k-token windows whose FIRST occurrence
     in the corpus is this doc.  The dedup-aware freshness signal a
@@ -1756,13 +1757,12 @@ def dedup_span_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-gram firsts — bounded by corpus docs, not windows.
     ``n_windows`` is the scan-side array size (zero shuffle)."""
     d = spread_small_scan(load_table(spark, sf_dir, "documents"))
-    base = (
+    base = scope.persist(
         d.withColumn("th", F.expr(H.spark_token_hashes("text")))
         .select(
             "doc_id",
             F.expr(H.spark_hashed_shingles("th", SUBSTR_WINDOW)).alias("sh"),
         )
-        .persist()
     )
     # combined = unsigned-32-bit gram << 31 | doc_id.  The packing needs
     # 0 <= doc_id < 2^31 (max c is then exactly 2^63 - 1 — no int64
@@ -1804,7 +1804,7 @@ def dedup_span_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nw = base.select("doc_id", F.size("sh").cast("long").alias("n_windows"))
     n_novel = F.coalesce("n_novel", F.lit(0).cast("long"))
-    return scoped_persist(
+    return (
         nw.join(nov, "doc_id", "left")
         .select(
             "doc_id",
@@ -1817,8 +1817,7 @@ def dedup_span_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("novelty_ratio"),
         )
-        .orderBy("doc_id"),
-        base,
+        .orderBy("doc_id")
     )
 
 
@@ -1851,7 +1850,8 @@ RATE_DECILES = 10
     ORDER BY decile
     """,
 )
-def dedup_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def dedup_rate_curve(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataFrame:
     """Exact-duplicate rate as the corpus grows, per ingestion decile —
     the capacity-planning curve dedup pipelines publish (what fraction of
     NEWLY ingested documents were already in the corpus?), the doc-level
@@ -1873,7 +1873,7 @@ def dedup_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange carries (16 B md5, doc_id) rows, never text."""
     d = spread_small_scan(load_table(spark, sf_dir, "documents"))
     mx = d.agg((F.max("doc_id") + 1).alias("n"))
-    h = d.select("doc_id", F.md5("text").alias("ch")).persist()
+    h = scope.persist(d.select("doc_id", F.md5("text").alias("ch")))
     fs = h.groupBy("ch").agg(F.min("doc_id").alias("first_id"))
     fl = h.join(fs, "ch").select(
         "doc_id", (F.col("doc_id") > F.col("first_id")).alias("is_dup")
@@ -1894,7 +1894,7 @@ def dedup_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("decile")
     )
-    return scoped_persist(out, h)
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -1928,7 +1928,8 @@ def _keep_best_oracle() -> str:
 
 
 @query("dedup_keep_best", oracle=_keep_best_oracle())
-def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def dedup_keep_best(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataFrame:
     """KEEPER SELECTION over resolved near-dup groups — the step after
     group resolution that production dedup actually ships: instead of
     ``dedup_resolve_groups``' arbitrary min-id survivor, each group keeps
@@ -1970,20 +1971,11 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("group_id")
     )
-    # the upstream result's checkpointed label RDDs back THIS plan too:
-    # pin the upstream handle to this result's lifetime (GC path) AND
-    # forward a deterministic release so release_persisted(out) frees the
-    # upstream blocks without waiting for the collector (r13 ADVICE).
-    # Contract: a consumer that derives a new DataFrame from this result
-    # must keep THIS handle alive until the derived job finishes —
-    # dropping it lets the upstream finalizer unpersist lineage-truncated
-    # checkpoint blocks mid-collect.
-    from flink_net_spark.tables import attach_release, release_persisted
-
-    out._fns_upstream = base
-
-    def _release_upstream(b=base):
-        release_persisted(b)
-
-    attach_release(out, _release_upstream)
+    # the upstream result's checkpointed label RDDs back THIS plan too: the
+    # scope keeps the upstream handle alive with this result and releases
+    # it with this result (r13 ADVICE).  Contract: a consumer that derives
+    # a new DataFrame from this result must keep THIS handle alive until
+    # the derived job finishes — dropping it lets the GC backstop unpersist
+    # lineage-truncated checkpoint blocks mid-collect.
+    scope.on_release(functools.partial(release_persisted, base))
     return out

@@ -24,7 +24,7 @@ from flink_net_spark.operators.multimodal import (
 )
 from flink_net_spark.operators.udaf import apply_udaf, median_abs_deviation
 from flink_net_spark.queries import query
-from flink_net_spark.tables import load_table, spread_small_scan
+from flink_net_spark.tables import QueryScope, load_table, scoped, spread_small_scan
 
 # the payload string, DuckDB-side (same UTF-8 bytes as attach_payloads'
 # binary cast; DuckDB's md5 takes VARCHAR and hashes its UTF-8 bytes)
@@ -303,7 +303,8 @@ _DUCK_PHASH = f"""
     ORDER BY doc_a, doc_b
     """,
 )
-def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def mm_phash_dedup(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataFrame:
     """Perceptual-hash image dedup: 60-bit aHash fingerprints over the
     decoded payload (operators/multimodal.py::perceptual_hash — real PIL
     aHash when the payload decodes, the deterministic code-point block
@@ -320,14 +321,12 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent; the round-7 edge-fixture lesson), mirrored bit-for-bit
     by the SQL oracle."""
     from flink_net_spark.operators.multimodal import perceptual_hash
-    from flink_net_spark.tables import scoped_persist
-
     d = spread_small_scan(load_table(spark, sf_dir, "documents")).filter(
         F.length("text") > 0
     )
     # persist: the banded self-join reads the fingerprints twice; without
     # it the Arrow decode stage runs once per join side
-    ph = perceptual_hash(attach_payloads(d)).select("doc_id", "phash").persist()
+    ph = scope.persist(perceptual_hash(attach_payloads(d)).select("doc_id", "phash"))
     bands = _phash_bands(ph)
     a = bands.alias("a")
     b = bands.alias("b")
@@ -346,12 +345,11 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    return scoped_persist(
+    return (
         cand.withColumn("hamming", F.expr("CAST(bit_count(pa ^ pb) AS BIGINT)"))
         .filter(F.col("hamming") <= _PHASH_HAMMING_MAX)
         .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b"),
-        ph,
+        .orderBy("doc_a", "doc_b")
     )
 
 

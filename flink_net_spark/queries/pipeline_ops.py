@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_net_spark.functions import hashing as H
 from flink_net_spark.queries import query
-from flink_net_spark.tables import load_table, spread_small_scan
+from flink_net_spark.tables import QueryScope, load_table, scoped, spread_small_scan
 
 # --------------------------------------------------------------------------
 # Deterministic stratified sampling.
@@ -975,7 +975,10 @@ def _bloom_oracle() -> str:
 
 
 @query("curation_bloom_decontaminate", oracle=_bloom_oracle())
-def curation_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def curation_bloom_decontaminate(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """Bloom-filter decontamination with exact verification as checked data.
 
     Build: the protected corpus' (doc_id % 50 == 0) distinct word-3gram
@@ -1002,16 +1005,13 @@ def curation_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle bytes; this form's only corpus-sized exchange is the distinct
     (doc_id, gram) dedup)."""
     from flink_net_spark.queries.dedup import _spark_shingle_hash_df
-    from flink_net_spark.tables import scoped_persist
-
     sh = _spark_shingle_hash_df(spark, sf_dir)
     # persisted: consumed by BOTH the filter build and the broadcast
     # exact probe (r16); bounded by the protected corpus' distinct grams
-    eval_sh = (
+    eval_sh = scope.persist(
         sh.filter(F.col("doc_id") % _BLOOM_EVAL_MOD == 0)
         .select(F.explode("sh").alias("g"))
         .distinct()
-        .persist()
     )
     pos_arr = "array(" + ", ".join(_bloom_pos_exprs("g")) + ")"
     bloom_words = (
@@ -1077,7 +1077,7 @@ def curation_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-    return scoped_persist(out, eval_sh)
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -1236,7 +1236,10 @@ def vocab_topk_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "curation_perplexity_gate",
     oracle=None,  # set below — needs text._KN_CTES after import
 )
-def curation_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def curation_perplexity_gate(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """Perplexity-tercile gate over EVERY document: per (source, tier)
     emit doc count, summed transitions, and the mean-NLL range.
 
@@ -1254,9 +1257,7 @@ def curation_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(n/3), ceil(2n/3)) are pure integer predicates — no quantile
     interpolation, no float ordering."""
     from flink_net_spark.queries.text import kn_scored_transitions
-    from flink_net_spark.tables import scoped_persist
-
-    scored, k0row, caches = kn_scored_transitions(spark, sf_dir)
+    scored, k0row = kn_scored_transitions(spark, sf_dir)
     doc_nll = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tr"),
         F.sum("nll_e6").cast("bigint").alias("s_nll"),
@@ -1264,7 +1265,7 @@ def curation_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread_small_scan(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "source"
     )
-    per_doc = (
+    per_doc = scope.persist(
         d.join(doc_nll, "doc_id", "left")
         .crossJoin(F.broadcast(k0row))
         .select(
@@ -1273,7 +1274,6 @@ def curation_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("COALESCE(n_tr, 0L)").alias("n_tr"),
             F.expr("COALESCE(s_nll div n_tr, k0_e6)").alias("mean_e6"),
         )
-        .persist()
     )
     nrow = per_doc.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     hist = per_doc.groupBy(F.col("mean_e6").alias("v")).agg(
@@ -1295,7 +1295,7 @@ def curation_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tr",
         "mean_e6",
     )
-    return scoped_persist(
+    return (
         tiered.groupBy("source", "tier")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1303,9 +1303,7 @@ def curation_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("mean_e6").cast("bigint").alias("min_mean_nll_e6"),
             F.max("mean_e6").cast("bigint").alias("max_mean_nll_e6"),
         )
-        .orderBy("source", "tier"),
-        *caches,
-        per_doc,
+        .orderBy("source", "tier")
     )
 
 
@@ -1457,7 +1455,10 @@ def _dsir_oracle() -> str:
 
 
 @query("curation_dsir_importance", oracle=_dsir_oracle())
-def curation_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def curation_dsir_importance(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """DSIR importance scoring: rank raw documents by how lang='en'-like
     their hashed bag-of-words is, emitting the top-10 per source with the
     exact micro-nat log importance weight.  See the module comment above
@@ -1484,12 +1485,14 @@ def curation_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token aggregations, duplicated again under the broadcast subtree -
     # six corpus-scale exchanges; this shape has two token passes total:
     # the count build and the broadcast-join scoring pass).
-    bc = tk.groupBy("b").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c"),
-        F.sum(F.expr("CASE WHEN lang = 'en' THEN 1 ELSE 0 END"))
-        .cast("bigint")
-        .alias("tc"),
-    ).persist()
+    bc = scope.persist(
+        tk.groupBy("b").agg(
+            F.count(F.lit(1)).cast("bigint").alias("c"),
+            F.sum(F.expr("CASE WHEN lang = 'en' THEN 1 ELSE 0 END"))
+            .cast("bigint")
+            .alias("tc"),
+        )
+    )
     tot = bc.agg(
         F.expr(f"CAST(SUM(c) AS BIGINT) + {DSIR_BUCKETS}").alias("rb"),
         F.expr(f"CAST(SUM(tc) AS BIGINT) + {DSIR_BUCKETS}").alias("tb"),
@@ -1520,14 +1523,11 @@ def curation_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("source").orderBy(F.col("score_e6").desc(), "doc_id")
-    from flink_net_spark.tables import scoped_persist
-
-    return scoped_persist(
+    return (
         doc.withColumn("rk", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rk") <= _DSIR_TOPK)
         .select("source", "rk", "doc_id", "n_tok", "score_e6")
-        .orderBy("source", "rk"),
-        bc,
+        .orderBy("source", "rk")
     )
 
 

@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_net_spark.queries import query
-from flink_net_spark.tables import load_table, scoped_persist
+from flink_net_spark.tables import QueryScope, load_table, scoped
 
 
 # --------------------------------------------------------------------------
@@ -1694,7 +1694,8 @@ def agg_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY t
     """,
 )
-def agg_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def agg_ks_drift(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov distance — the distribution-
     drift monitor data pipelines run between corpus snapshots (did the
     `value` distribution of each event class move against the 'view'
@@ -1720,7 +1721,7 @@ def agg_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("t"),
         F.expr("CAST(ROUND(value * 1000, 0) AS BIGINT)").alias("v"),
     )
-    cnt = ev.groupBy("t", "v").agg(F.count(F.lit(1)).alias("c")).persist()
+    cnt = scope.persist(ev.groupBy("t", "v").agg(F.count(F.lit(1)).alias("c")))
     base = cnt.filter(F.col("t") == "view").select("v", F.col("c").alias("nb"))
     oth = cnt.filter(F.col("t") != "view").select(
         "t", "v", F.col("c").alias("na")
@@ -1766,7 +1767,7 @@ def agg_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-    return scoped_persist(out, cnt)
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -2119,7 +2120,10 @@ QSK_PCTS = (25, 50, 75, 90, 99)
     ORDER BY q_pct
     """,
 )
-def agg_quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def agg_quantile_sketch_merge(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """MERGEABLE quantile sketch with a hash-checked accuracy contract —
     the quantile twin of ``agg_hll_sketch_union``: each source
     (l_returnflag) builds an independent fixed-width histogram sketch
@@ -2154,7 +2158,7 @@ def agg_quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = v.groupBy("src", F.expr(f"c div {QSK_BW}").alias("b")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    sk.persist()
+    scope.persist(sk)
     mg = sk.groupBy("b").agg(F.sum("n").alias("n"))
     mc = mg.select(
         "b",
@@ -2224,7 +2228,7 @@ def agg_quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("q_pct")
     )
-    return scoped_persist(out, sk)
+    return out
 
 
 # --------------------------------------------------------------------------

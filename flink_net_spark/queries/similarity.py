@@ -19,7 +19,7 @@ from pyspark.sql.window import Window
 
 from flink_net_spark.functions import hashing as H
 from flink_net_spark.queries import query
-from flink_net_spark.tables import load_table, scoped_persist, spread_small_scan
+from flink_net_spark.tables import QueryScope, load_table, scoped, spread_small_scan
 
 TOPK = 10
 N_QUERIES = 5  # vec_id 0..4 serve as the query set
@@ -1091,7 +1091,8 @@ SEMDEDUP_COS_THRESHOLD = 0.40
     ORDER BY vec_id
     """,
 )
-def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def sim_semdedup(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataFrame:
     """SemDeDup semantic deduplication: assign each embedding to its
     nearest seed centroid (the emb_kmeans_assign step), then inside each
     cluster drop every vector having cosine >= threshold with a LOWER-id
@@ -1124,14 +1125,13 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the assignment feeds FOUR branches (sizes, both join sides,
     # the final keep/drop join-back) — without it each branch replays the
     # centroid scoring and its argmin window shuffle
-    asg = (
+    asg = scope.persist(
         spread_small_scan(e)
         .crossJoin(F.broadcast(c))
         .withColumn("dist", dist)
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("vec_id", F.col("cid").alias("cluster_id"), "v", "nrm")
-        .persist()
     )
     sizes = asg.groupBy("cluster_id").agg(
         F.expr(f"CAST(CEIL(COUNT(*) / {RANGE_BLOCK_CAP}.0) AS BIGINT)").alias("n_sub")
@@ -1160,7 +1160,7 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id")
         .agg(F.max("cosine").alias("max_sim"))
     )
-    return scoped_persist(
+    return (
         asg.select("vec_id", "cluster_id")
         .join(nn, "vec_id", "left")
         .select(
@@ -1169,8 +1169,7 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("max_sim").isNull().alias("keep"),
             F.round("max_sim", 4).alias("max_sim_to_earlier"),
         )
-        .orderBy("vec_id"),
-        asg,
+        .orderBy("vec_id")
     )
 
 
@@ -1647,10 +1646,10 @@ _RRF_FUSE_SQL = f"""
     ORDER BY query_id, rank"""
 
 
-def _rrf_lex_leg(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(lex_r, terms): top-{RRF_POOL} lexical candidates per probe query
-    from an idf-weighted distinct-term-overlap inverted index, plus the
-    persisted (doc_id, term) index backing the three legs of the plan.
+def _rrf_lex_leg(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataFrame:
+    """Top-{RRF_POOL} lexical candidates per probe query from an
+    idf-weighted distinct-term-overlap inverted index; the (doc_id, term)
+    index backing the three legs of the plan is persisted in ``scope``.
     Stopword-grade terms (weight 1e6 div df rounds to 0) are pruned
     BEFORE the posting-list join — the hottest lists never join at all.
 
@@ -1666,7 +1665,7 @@ def _rrf_lex_leg(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
         F.col("text") != ""
     )
     term_hash = H.spark_char_polyhash("w")
-    terms = (
+    terms = scope.persist(
         docs.select(
             "doc_id",
             F.explode(
@@ -1676,7 +1675,6 @@ def _rrf_lex_leg(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
                 )
             ).alias("term"),
         )
-        .persist()
     )
     df_w = terms.groupBy("term").agg(
         F.expr("1000000 div COUNT(*)").alias("w")
@@ -1702,7 +1700,7 @@ def _rrf_lex_leg(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
         .filter(F.col("lex_rank") <= RRF_POOL)
         .select("query_id", "neighbor_id", F.col("lex_rank").cast("long").alias("lex_rank"))
     )
-    return lex_r, terms
+    return lex_r
 
 
 def _rrf_fuse(lex_r: DataFrame, emb_r: DataFrame) -> DataFrame:
@@ -1760,7 +1758,8 @@ def _rrf_fuse(lex_r: DataFrame, emb_r: DataFrame) -> DataFrame:
     {_RRF_FUSE_SQL}
     """,
 )
-def sim_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def sim_rrf_hybrid(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataFrame:
     """Hybrid retrieval: top-{TOPK} fused neighbors per probe document from
     a lexical leg (idf-weighted distinct-term overlap, exact integer
     weights 1e6 div df) and a dense leg (embedding cosine), combined by
@@ -1781,7 +1780,7 @@ def sim_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hence scale_safe=False); the measured 1:1 swap onto an audited ANN
     leg is ``sim_rrf_hybrid_ann`` below, since RRF consumes only
     (query, neighbor, rank) tuples."""
-    lex_r, terms = _rrf_lex_leg(spark, sf_dir)
+    lex_r = _rrf_lex_leg(spark, sf_dir, scope)
     e = _emb_with_norm(spark, sf_dir)
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
@@ -1796,12 +1795,7 @@ def sim_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("emb_rank") <= RRF_POOL)
         .select("query_id", "neighbor_id", F.col("emb_rank").cast("long").alias("emb_rank"))
     )
-    # Cache lifetime: `terms` backs three legs of the fused plan, so its
-    # release is scoped to the RETURNED result, not to the intermediate
-    # handle (scoping it to `terms` itself ties the finalizer to the same
-    # object _PLAN_REFS strongly references — the finalizer could never
-    # fire and the distinct (doc_id, term) cache leaked for the session).
-    return scoped_persist(_rrf_fuse(lex_r, emb_r), terms)
+    return _rrf_fuse(lex_r, emb_r)
 
 
 def _rrf_hybrid_ann_oracle() -> str:
@@ -1818,7 +1812,10 @@ def _rrf_hybrid_ann_oracle() -> str:
 
 
 @query("sim_rrf_hybrid_ann", oracle=_rrf_hybrid_ann_oracle())
-def sim_rrf_hybrid_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def sim_rrf_hybrid_ann(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """The measured scale path of ``sim_rrf_hybrid`` (VERDICT r10 #6): the
     SAME lexical leg and integer RRF fusion, with the dense leg swapped
     1:1 onto the audited IVF ANN query — ``sim_ann_ivf``'s own registered
@@ -1831,11 +1828,11 @@ def sim_rrf_hybrid_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     reciprocal weights make depth beyond the serving top-k nearly
     score-free, and the ANN leg is what a corpus-scale system can actually
     retrieve."""
-    lex_r, terms = _rrf_lex_leg(spark, sf_dir)
+    lex_r = _rrf_lex_leg(spark, sf_dir, scope)
     emb_r = sim_ann_ivf(spark, sf_dir).select(
         "query_id", "neighbor_id", F.col("rank").alias("emb_rank")
     )
-    return scoped_persist(_rrf_fuse(lex_r, emb_r), terms)
+    return _rrf_fuse(lex_r, emb_r)
 
 
 # --------------------------------------------------------------------------
@@ -2342,7 +2339,10 @@ def _planted_recall_oracle() -> str:
 
 
 @query("sim_ann_planted_recall", oracle=_planted_recall_oracle())
-def sim_ann_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def sim_ann_planted_recall(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """Recall of each ANN variant against the PLANTED near-neighbor set
     (section comment): every leg is the registered production query run
     over the planted corpus via its ``emb=`` override — the exact serving
@@ -2362,8 +2362,8 @@ def sim_ann_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k (the compression/recall trade, Jegou 2011 §IV)."""
     # one planted-corpus materialization shared by all four legs (each leg
     # scans it 2-3 times for queries/centroids/corpus); released with the
-    # returned result via scoped_persist
-    emb = _planted_embeddings(spark, sf_dir).persist()
+    # returned result
+    emb = scope.persist(_planted_embeddings(spark, sf_dir))
     planted = (
         load_table(spark, sf_dir, "embeddings")
         .filter((F.col("vec_id") >= PLANT_LO) & (F.col("vec_id") < PLANT_HI))
@@ -2436,7 +2436,7 @@ def sim_ann_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = legs[0]
     for lg in legs[1:]:
         out = out.unionAll(lg)
-    return scoped_persist(
+    return (
         out.select(
             "method",
             "n_planted_pairs",
@@ -2446,8 +2446,7 @@ def sim_ann_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(CASE WHEN n_planted_pairs > 0"
                 " THEN (1000000 * n_caught) div n_planted_pairs END AS BIGINT)"
             ).alias("recall_e6"),
-        ).orderBy("method"),
-        emb,
+        ).orderBy("method")
     )
 
 
@@ -2866,7 +2865,8 @@ MAXSIM_PRUNE_M = 32  # per-query-token candidate fan-in
     ORDER BY p.query_id, p.rank
     """,
 )
-def sim_maxsim_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def sim_maxsim_pruned(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataFrame:
     """CANDIDATE-PRUNED MaxSim — the actual ColBERT SERVING shape
     (Khattab & Zaharia 2020 §3.6: per-query-token ANN retrieval feeds a
     bounded candidate set; exact MaxSim reranks only the candidates):
@@ -2911,7 +2911,7 @@ def sim_maxsim_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         [([{"qv": qv, "vq": vq} for qv, vq in qtok],)],
         "qs array<struct<qv:bigint,vq:array<bigint>>>",
     )
-    mx = (
+    mx = scope.persist(
         spread_small_scan(e.filter(F.col("vec_id") >= nq), min_partitions=8)
         .crossJoin(F.broadcast(q1))
         .select(
@@ -2929,7 +2929,6 @@ def sim_maxsim_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "qv")
         .agg(F.max("dot").alias("m"))
         .withColumn("query_id", F.expr(f"qv div {MAXSIM_QTOK}"))
-        .persist()
     )
     # per-token nomination: salted two-phase top-M (the exhaustive leg's
     # rank discipline applied to candidate generation)
@@ -2986,7 +2985,7 @@ def sim_maxsim_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "rank", "doc_id", "score", "n_candidates", "n_caught")
         .orderBy("query_id", "rank")
     )
-    return scoped_persist(out, mx)
+    return out
 
 
 # --------------------------------------------------------------------------

@@ -32,8 +32,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_net_spark.queries import query
+from flink_net_spark.session import env_positive_int
 from flink_net_spark.sources import replay_table_as_stream
 from flink_net_spark.streaming import session, tumbling, with_bounded_out_of_orderness
+from flink_net_spark.tables import QueryScope, scoped, shuffle_partitions
 
 HOUR_MS = 3_600_000
 
@@ -70,9 +72,8 @@ def _write_marker_atomic(path: str, content: str) -> None:
 
 
 def _inc_state_shards(n_band_rows: int) -> int:
-    env = os.environ.get("SPARK_GRAFT_INC_STATE_SHARDS")
-    if env:
-        return int(env)
+    if env := env_positive_int("SPARK_GRAFT_INC_STATE_SHARDS"):
+        return env
     n = max(1, n_band_rows // _INC_TARGET_BUCKETS_PER_SHARD)
     return max(_INC_SHARDS_MIN, min(_INC_SHARDS_MAX, 1 << (n.bit_length() - 1)))
 
@@ -144,6 +145,11 @@ def _stage_dir(sf_dir: str, name: str, src: str | list[str] = "events") -> str:
     return path
 
 
+# Shuffle partitions of the bounded stream drains (state volume; see
+# _run_stream), env-overridable for cluster sizing.
+STREAM_SHUFFLE_PARTITIONS = env_positive_int("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", 8)
+
+
 def _run_stream(df: DataFrame, mode: str = "complete") -> DataFrame:
     """Drain a bounded stream into a memory sink, return the materialized table.
 
@@ -159,13 +165,7 @@ def _run_stream(df: DataFrame, mode: str = "complete") -> DataFrame:
     spark = df.sparkSession
     table = f"fns_mem_{uuid.uuid4().hex[:10]}"
     ckpt = tempfile.mkdtemp(prefix="fns_ckpt_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # env-overridable for cluster sizing (state volume), default 8 (above)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8"),
-    )
-    try:
+    with shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
         q = (
             df.writeStream.format("memory")
             .queryName(table)
@@ -176,8 +176,6 @@ def _run_stream(df: DataFrame, mode: str = "complete") -> DataFrame:
         q.processAllAvailable()
         q.stop()
         q.awaitTermination(30)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(table)
 
 
@@ -892,12 +890,8 @@ def stream_cdc_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = tempfile.mkdtemp(prefix="fns_cdc_snap_")
     ckpt = tempfile.mkdtemp(prefix="fns_cdc_ckpt_")
     sink = UpsertSink(out_dir, ("user_id",), "event_id")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
         run_to_completion(sink.writer(ev, ckpt))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         sink.snapshot(spark)
         .select(
@@ -1239,7 +1233,10 @@ def _lazy_inc_minhash_oracle() -> str:
 
 
 @query("stream_incremental_minhash", oracle=_lazy_inc_minhash_oracle())
-def stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def stream_incremental_minhash(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """Incremental MinHash-LSH ingest dedup AS A LIVE STREAM (r14 verdict
     #7 — the batch ``dedup_incremental_minhash`` semantics replayed
     through real micro-batches): banded signature rows arrive as a file
@@ -1277,9 +1274,9 @@ def stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         MINHASH_K,
     )
     from flink_net_spark.streaming.stateful import map_groups_with_state
-    from flink_net_spark.tables import load_table, scoped_persist
+    from flink_net_spark.tables import load_table
 
-    sh = _spark_shingle_hash_df(spark, sf_dir).persist()
+    sh = scope.persist(_spark_shingle_hash_df(spark, sf_dir))
 
     # v2: NULL band keys filtered at staging — bump invalidates v1 stages
     stage = _stage_dir(sf_dir, "minhash_bands_v2", src="documents")
@@ -1426,7 +1423,7 @@ def stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % _INC_MOD == 0)
         .select("doc_id")
     )
-    return scoped_persist(
+    return (
         incoming.join(best, incoming.doc_id == best.new_id, "left")
         .select(
             "doc_id",
@@ -1437,6 +1434,5 @@ def stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("jaccard") >= JACCARD_VERIFY_THRESHOLD, F.lit(False)
             ).alias("is_dup"),
         )
-        .orderBy("doc_id"),
-        sh,
+        .orderBy("doc_id")
     )

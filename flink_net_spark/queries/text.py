@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from flink_net_spark.functions import detmath as DM
 from flink_net_spark.functions import hashing as H
 from flink_net_spark.queries import query
-from flink_net_spark.tables import load_table, scoped_persist, spread_small_scan
+from flink_net_spark.tables import QueryScope, load_table, scoped, spread_small_scan
 
 STOPWORDS = ("the", "a")  # present in the synthetic vocabulary
 
@@ -716,7 +716,8 @@ def text_quality_logit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tok GROUP BY doc_id ORDER BY doc_id
     """,
 )
-def text_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def text_bigram_nll(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataFrame:
     """Bigram-LM negative log-likelihood per document — the next rung above
     ``text_unigram_nll`` on the CCNet quality-signal ladder (CCNet proper
     uses a KenLM 5-gram; the bigram MLE is the largest order whose counts
@@ -751,7 +752,7 @@ def text_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the transition stream feeds the LM build AND the join-back;
     # without it the tokenize+explode (the CPU-dominant stage) replays per
     # consumer
-    bg = (
+    bg = scope.persist(
         toks.select(
             "doc_id",
             F.expr(
@@ -763,7 +764,6 @@ def text_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", F.explode("bgs").alias("p"))
         .select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .persist()
     )
     c2 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     # context counts = sum of bigram counts sharing w1 — exact, and an agg
@@ -777,15 +777,14 @@ def text_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(ROUND((ba_ln - bb_ln) * 1000000) AS BIGINT)").alias("nll_e6"),
     )
     tok = bg.join(lm, ["w1", "w2"]).select("doc_id", "nll_e6")
-    return scoped_persist(
+    return (
         tok.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.sum("nll_e6").alias("sum_nll_e6"),
         )
         .withColumn("avg_nll_e6", F.expr("sum_nll_e6 div n_bigrams"))
-        .orderBy("doc_id"),
-        bg,
+        .orderBy("doc_id")
     )
 
 
@@ -834,7 +833,7 @@ def _tri_toks_duckdb() -> str:
 #
 # Lifetime contract: these are deliberately SESSION-scoped (a curation
 # pipeline scores many signals over one corpus against one LM), unlike
-# scoped_persist's result-scoped caches.  Bounded: token arrays + two
+# the result-scoped caches of a QueryScope.  Bounded: token arrays + two
 # count tables.  release_shared_lm() drops them explicitly.
 _LM_SHARED: dict[tuple, dict] = {}
 _LM_TOKENS = __import__("itertools").count(1)
@@ -1537,18 +1536,17 @@ _KN_NLL_E6_EXPR = (
 
 
 def kn_scored_transitions(spark: SparkSession, sf_dir: str):
-    """Spark half of the shared KN-lite LM: returns (scored, caches) where
+    """Spark half of the shared KN-lite LM: returns (scored, k0row) where
     ``scored`` is every transition in the corpus as
     (doc_id, bo, nll_e6) — bo 0 = seen bigram, 1 = ctx backoff, 2 = full
-    backoff — and ``caches`` are the persisted intermediates to hand to
-    scoped_persist.  Callers filter to their doc population (held-out
-    scorer: doc_id % 10 = 0; perplexity gate: all docs).
+    backoff — and ``k0row`` the 1-row full-backoff constant.  Callers
+    filter to their doc population (held-out scorer: doc_id % 10 = 0;
+    perplexity gate: all docs).
 
     The LM always trains on doc_id % 10 != 0; see the module comment for
     the probability model and determinism contract.  The token stream and
     bigram count table come from the family-wide shared_lm_tables build
-    (round-10): callers get a caches list that is now empty — the shared
-    tables are session-scoped, not result-scoped."""
+    (round-10): they are session-scoped, not result-scoped."""
     t = shared_lm_tables(spark, sf_dir)
     bg_all = t["bg_all"]
 
@@ -1644,7 +1642,7 @@ def kn_scored_transitions(spark: SparkSession, sf_dir: str):
             F.expr(_KN_NLL_E6_EXPR).alias("nll_e6"),
         )
     )
-    return scored, k0row, []
+    return scored, k0row
 
 
 @query(
@@ -1675,8 +1673,8 @@ def text_kn_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     every det-ln op is correctly-rounded IEEE arithmetic.  The test
     stream equi-joins three LM tables on 8-byte keys; the full-backoff
     constant rides a 1-row broadcast."""
-    scored, _k0row, caches = kn_scored_transitions(spark, sf_dir)
-    return scoped_persist(
+    scored, _k0row = kn_scored_transitions(spark, sf_dir)
+    return (
         scored.filter(F.col("doc_id") % 10 == 0)
         .groupBy("doc_id")
         .agg(
@@ -1689,8 +1687,7 @@ def text_kn_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_bo_cont"),
             F.sum("nll_e6").cast("bigint").alias("sum_nll_e6"),
         )
-        .orderBy("doc_id"),
-        *caches,
+        .orderBy("doc_id")
     )
 
 
@@ -2247,7 +2244,10 @@ PMI_TOPK = 100
     LIMIT {PMI_TOPK}
     """,
 )
-def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def text_collocations_pmi(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """Pointwise-mutual-information collocation mining — the phrase-mining
     primitive (Church & Hanks 1990) corpus pipelines use to find
     multi-word expressions worth single-token treatment: PMI(w1, w2) =
@@ -2282,7 +2282,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode("bgs").alias("p"))
         .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     )
-    c2 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair")).persist()
+    c2 = scope.persist(bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair")))
     cl = c2.groupBy("w1").agg(F.sum("n_pair").alias("n_left"))
     cr = c2.groupBy("w2").agg(F.sum("n_pair").alias("n_right"))
     btot = DM.spark_with_det_ln(
@@ -2315,7 +2315,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("pmi_e6"), "w1", "w2")
         .limit(PMI_TOPK)
     )
-    return scoped_persist(out, c2)
+    return out
 
 
 # --------------------------------------------------------------------------

@@ -21,7 +21,20 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+def env_positive_int(name: str, default: int | None = None) -> int | None:
+    """The positive integer in environment variable ``name``, or
+    ``default`` when it is unset or empty; any other value raises
+    ValueError naming the variable."""
+    raw = os.environ.get(name, "")
+    if not raw:
+        return default
+    if not raw.isdecimal() or int(raw) == 0:
+        raise ValueError(f"{name}={raw!r}: expected a positive integer")
+    return int(raw)
+
+
+DEFAULT_SHUFFLE_PARTITIONS = env_positive_int("SPARK_GRAFT_SHUFFLE_PARTITIONS", 32)
 
 
 def get_spark(

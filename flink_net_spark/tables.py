@@ -6,10 +6,16 @@ documents embeddings — one parquet file each under a scale-factor dir.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import os
 import threading
+import weakref
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from flink_net_spark.session import env_positive_int
 
 TABLE_NAMES = [
     "region",
@@ -135,22 +141,16 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[st
     return dfs
 
 
-# Live refcounts for scoped persists, keyed by the SEMANTIC plan hash.
-# Spark's CacheManager is keyed by logical plan, not by Python handle: two
-# invocations of the same query builder produce distinct DataFrame objects
-# backed by ONE cache entry, so a per-handle unpersist (the r8→r9 design)
-# could evict a cache another live result still depends on the moment any
-# earlier handle was GC'd (r9 ADVICE minor).  Refcounting on the semantic
-# hash releases the cache only when the LAST scoped result is done with it.
-#
-# r17 (VERDICT r16 #5): mutations are guarded by _PLAN_REFS_LOCK — the
-# sim_ann_planted_recall legs build on a 4-thread pool, and the bare
-# read-modify-write `ent[0] += 1` can interleave at bytecode boundaries; a
-# lost increment would unpersist a cache another live result still uses
-# (silent recompute).  The lock covers bookkeeping only; py4j calls
-# (semanticHash, unpersist) stay outside it.
+# Query-scoped lifetimes.  Builders return lazy DataFrames, so what they
+# cache must back the RESULT until its caller is done: a QueryScope holds
+# it, ``scoped`` binds the scope to the result, ``release_persisted`` frees
+# it and a weakref finalizer is the GC backstop.  Persists are refcounted by
+# SEMANTIC plan hash — the CacheManager keys caches by plan, so two builds
+# of one query share one entry, unpersisted when the LAST holder releases.
+# Refcounts and persist/unpersist share one lock, so a persist racing the
+# last release re-persists; re-entrant, as a finalizer may run under it.
 _PLAN_REFS: dict[int, list] = {}  # key -> [refcount, DataFrame handle]
-_PLAN_REFS_LOCK = threading.Lock()
+_PLAN_LOCK = threading.RLock()
 
 
 def _plan_key(df: DataFrame) -> int:
@@ -160,238 +160,134 @@ def _plan_key(df: DataFrame) -> int:
         return id(df)
 
 
-def acquire_persisted(*cached: DataFrame) -> list[int]:
-    """Register a refcounted use of already-persisted DataFrames and return
-    the plan keys.  For builders whose use of a shared cache ends MID-query
-    (e.g. an eager iterative loop) rather than with the returned result:
-    pair with ``release_acquired(keys)`` instead of calling ``unpersist()``
-    directly, so a semantically-identical cache scoped to another live
-    result (same _PLAN_REFS key) is not evicted out from under it."""
-    keys = []
-    for df in cached:
-        k = _plan_key(df)  # py4j round trip — outside the lock
-        with _PLAN_REFS_LOCK:
-            ent = _PLAN_REFS.setdefault(k, [0, df])
-            ent[0] += 1
-        keys.append(k)
-    return keys
+def _unref(key: int) -> None:
+    with _PLAN_LOCK:
+        ent = _PLAN_REFS.get(key)
+        if ent is None:
+            return
+        ent[0] -= 1
+        if ent[0] <= 0:
+            del _PLAN_REFS[key]
+            ent[1].unpersist()
 
 
-def release_acquired(keys: list[int]) -> None:
-    """Drop one refcount per key; unpersist a cache only when the LAST
-    scoped user releases it (idempotent against missing keys)."""
-    for k in keys:
-        to_unpersist = None
-        with _PLAN_REFS_LOCK:
-            ent = _PLAN_REFS.get(k)
-            if ent is None:
-                continue
-            ent[0] -= 1
-            if ent[0] <= 0:
-                _PLAN_REFS.pop(k, None)
-                to_unpersist = ent[1]
-        if to_unpersist is not None:
-            try:
-                to_unpersist.unpersist()  # py4j — outside the lock
-            except Exception:
-                pass
+def _quietly(fn: Callable[[], object]) -> None:
+    try:
+        fn()
+    except Exception:  # a stopped session has nothing left to free
+        pass
 
 
-def scoped_persist(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Tie persisted intermediates' cache lifetime to the RESULT handle.
+class QueryScope:
+    """The caches, local checkpoints and cleanups one query build holds."""
 
-    Query builders persist a shared intermediate (e.g. a tokenized
-    transition stream feeding both an LM build and a join-back) and return
-    a lazy DataFrame; there is no post-action hook to unpersist, so the
-    cache used to live for the whole session (r8 ADVICE minor).  The
-    persisted inputs are refcounted by semantic plan hash (see _PLAN_REFS)
-    and released when the last result scoped to them is dropped — either
-    explicitly via ``release_persisted(result)`` (preferred: deterministic,
-    what bench.py and the driver-sim call after collect) or by the GC
-    finalizer as a backstop.  Non-blocking and exception-safe — if the
-    session is already gone there is nothing left to free."""
-    import weakref
+    def __init__(self) -> None:
+        self._held: list[tuple[DataFrame | None, Callable[[], object]]] = []
 
-    keys = acquire_persisted(*cached)
-    fin = weakref.finalize(result, release_acquired, keys)
-    # Explicit-release handle: weakref.finalize objects are idempotent
-    # callables, so release_persisted() after collect() is deterministic
-    # and the GC backstop then no-ops.  Consumers that transform `result`
-    # first simply fall back to the GC path (release_persisted degrades to
-    # a no-op on DataFrames without the handle).
-    attach_release(result, fin)
-    return result
+    def persist(self, df: DataFrame) -> DataFrame:
+        """``df.persist()``, refcounted against equal plans of other scopes."""
+        key = _plan_key(df)  # py4j round trip, outside the lock
+        with _PLAN_LOCK:
+            df.persist()  # re-registers a cache someone else evicted
+            _PLAN_REFS.setdefault(key, [0, df])[0] += 1
+        self._held.append((df, functools.partial(_unref, key)))
+        return df
+
+    def checkpoint(self, df: DataFrame, eager: bool = False) -> DataFrame:
+        """``df.localCheckpoint(eager)``.  Its block cache lives at the RDD
+        layer, invisible to DataFrame.unpersist, so the scope keeps the
+        checkpointed RDD (the leaf of the returned plan) to free it."""
+        lc = df.localCheckpoint(eager=eager)
+        rdd = lc._jdf.queryExecution().logical().rdd()
+        self._held.append((lc, functools.partial(rdd.unpersist, False)))
+        return lc
+
+    def on_release(self, fn: Callable[[], object]) -> None:
+        """Run ``fn`` when the scope is released."""
+        self._held.append((None, fn))
+
+    def drop(self, df: DataFrame) -> None:
+        """Release ``df`` (persisted or checkpointed here) before the rest
+        of the scope, once nothing the result needs still reads it."""
+        for i, (held, fn) in enumerate(self._held):
+            if held is df:
+                del self._held[i]
+                _quietly(fn)
+                return
+        raise ValueError("drop(): frame is not held by this scope")
+
+    def release(self) -> None:
+        """Free everything still held, newest first (idempotent)."""
+        held, self._held = self._held, []
+        for _df, fn in reversed(held):
+            _quietly(fn)
+
+    def bind(self, result: DataFrame) -> DataFrame:
+        """Tie the scope to ``result``: ``release_persisted(result)`` frees
+        it, and so does the collector once ``result`` is unreachable."""
+        if self._held:
+            result._fns_release = weakref.finalize(result, self.release)
+        return result
 
 
-def attach_release(result: DataFrame, fin) -> None:
-    """Attach ``fin`` to ``result._fns_release``, COMPOSING with any
-    release already attached (scoped_persist / release_rdds_with_result /
-    query-level upstream pins stack in any call order — round-14 review:
-    an unconditional overwrite silently dropped the earlier handle when
-    the helpers were nested the other way around)."""
-    prev = getattr(result, "_fns_release", None)
-    if prev is None:
-        result._fns_release = fin
-        return
+def scoped(builder: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    """Decorate a builder that holds resources: it gets a fresh QueryScope
+    as its ``scope`` argument, the scope is bound to the returned result,
+    and a builder that raises leaves nothing held."""
 
-    def _both(prev=prev, fin=fin):
-        prev()
-        fin()
+    @functools.wraps(builder)
+    def build(*args, **kwargs) -> DataFrame:
+        scope = QueryScope()
+        try:
+            return scope.bind(builder(*args, scope=scope, **kwargs))
+        except BaseException:
+            scope.release()
+            raise
 
-    result._fns_release = _both
+    return build
 
 
 def release_persisted(result: DataFrame) -> None:
-    """Deterministically release the caches scoped to ``result`` by
-    ``scoped_persist`` (idempotent; no-op for unscoped DataFrames)."""
+    """Deterministically release what the build of ``result`` holds
+    (idempotent; no-op for DataFrames that hold nothing)."""
     fin = getattr(result, "_fns_release", None)
     if fin is not None:
         fin()
 
 
-# r17 (VERDICT r16 #3, guide §2.2): iterative builders (CC/SSSP/LPA/
-# resolve-groups) scope their per-round shuffles to a partition count
-# DERIVED from the input size instead of the session default.  At bench SF
-# every round's frontier/label frame is a few thousand rows, yet each of
-# the 12-18 per-round AQE stage materializations scheduled 32+ tasks —
-# measured medians at sf0.1 (tools/exp_iter_parts.py, fingerprints
-# identical): CC 6.60→3.36 s, SSSP 5.79→3.20 s, LPA 3.77→2.70 s,
-# resolve_groups 2.80→1.99 s.  The derivation keeps the setting
-# scale-adaptive rather than local-tuned: ceil(source_bytes / 128 MB)
-# targets the guide's 100 MB-1 GB post-shuffle partition size (the
-# filtered/aggregated edge frames are strictly smaller than their source),
-# floors at 4 so tiny corpora still exercise multi-partition shuffles, and
-# is env-overridable for cluster sizing like SPARK_GRAFT_SHUFFLE_PARTITIONS.
+# r17 (guide §2.2): iterative builders (CC/SSSP/LPA/resolve-groups) run
+# their per-round shuffles at ceil(source_bytes / 128 MB) partitions,
+# floored at 4, instead of the session default — at sf0.1 each round's
+# frame is a few thousand rows (tools/exp_iter_parts.py, fingerprints
+# identical: CC 6.60→3.36 s, SSSP 5.79→3.20 s, LPA 3.77→2.70 s,
+# resolve_groups 2.80→1.99 s).  Env-overridable for cluster sizing.
 _ITER_PART_TARGET_BYTES = 128 * 1024 * 1024
 _ITER_PART_FLOOR = 4
 
 
 def derived_shuffle_partitions(sf_dir: str, tables: list[str]) -> int:
-    env = os.environ.get("SPARK_GRAFT_ITER_SHUFFLE_PARTITIONS")
-    if env:
-        return int(env)
-    total = 0
-    for t in tables:
-        p = table_path(sf_dir, t)
-        try:
-            if os.path.isdir(p):
-                # directory-backed table (real deployments): sum the files —
-                # getsize() on a directory returns the dirent size and would
-                # peg the derivation at the floor regardless of data volume
-                for root, _dirs, files in os.walk(p):
-                    for f in files:
-                        total += os.path.getsize(os.path.join(root, f))
-            else:
-                total += os.path.getsize(p)
-        except OSError:
-            pass
+    if env := env_positive_int("SPARK_GRAFT_ITER_SHUFFLE_PARTITIONS"):
+        return env
+    total = sum(table_disk_bytes(sf_dir, t) for t in tables)
     return max(_ITER_PART_FLOOR, -(-total // _ITER_PART_TARGET_BYTES))
 
 
-class scoped_shuffle_partitions:
-    """Set ``spark.sql.shuffle.partitions`` for a builder scope and restore
-    on exit (the _run_stream discipline).  Plans compiled inside the scope
-    — including every lazy localCheckpoint's eager AQE materialization —
-    use the scoped count; the result plan compiled at action time stays on
-    the session default.  Session-global, like every conf: builders run
-    sequentially on the driver."""
-
-    def __init__(self, spark: SparkSession, n: int):
-        self._spark = spark
-        self._n = n
-
-    def __enter__(self):
-        self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
-        return self
-
-    def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._prev)
-        return False
+_PARTITIONS_LOCK = threading.RLock()
 
 
-def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
-    # ONE py4j round trip (keys().mkString), not 2N+2 (iterator + per-entry
-    # next()): iterative queries snapshot this map twice per checkpoint, and
-    # in a cache-heavy bench session the per-entry hops cost ~12 ms/call at
-    # 40 live caches vs 0.8 ms for the string form (measured, r16).
-    s = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().mkString(",")
-    return {int(x) for x in s.split(",") if x}
-
-
-# r17: the before/after persistent-RDD-id diff below misattributes ids if
-# two threads checkpoint concurrently (r16 ADVICE).  Nothing does today —
-# the planted-recall thread pool builds plans only — but the lock makes the
-# tracking safe if a future builder checkpoints from a pool; held across
-# the localCheckpoint call on purpose (attribution requires it).
-_CKPT_TRACK_LOCK = threading.Lock()
-
-
-def checkpoint_tracked(df: DataFrame, ids_out: list[int]) -> DataFrame:
-    """``df.localCheckpoint()`` (eager), recording the id(s) of the cached
-    RDD(s) it creates into ``ids_out`` so they can be released later with
-    ``release_rdd_ids`` — localCheckpoint caches live at the RDD layer,
-    invisible to DataFrame.unpersist, and used to leak for the session
-    (iterative queries like connected components checkpoint per round)."""
-    spark = df.sparkSession
-    with _CKPT_TRACK_LOCK:
-        before = _persistent_rdd_ids(spark)
-        lc = df.localCheckpoint()
-        ids_out.extend(_persistent_rdd_ids(spark) - before)
-    return lc
-
-
-def checkpoint_tracked_lazy(df: DataFrame, ids_out: list[int]) -> DataFrame:
-    """``df.localCheckpoint(eager=False)`` with the same RDD-id tracking as
-    ``checkpoint_tracked`` — the lazy variant registers its RDD-layer cache
-    at CREATION time (verified: persist() runs inside localCheckpoint even
-    when materialization is deferred), so the before/after diff captures it
-    identically.  For iterative builders whose rounds materialize only at
-    collect time (no per-round count()), every round's checkpoint backs the
-    final plan: tie the ids to the result with ``release_rdds_with_result``."""
-    spark = df.sparkSession
-    with _CKPT_TRACK_LOCK:
-        before = _persistent_rdd_ids(spark)
-        lc = df.localCheckpoint(eager=False)
-        ids_out.extend(_persistent_rdd_ids(spark) - before)
-    return lc
-
-
-def release_rdd_ids(spark: SparkSession, ids: list[int]) -> None:
-    """Unpersist the RDD-layer caches with the given ids (non-blocking;
-    ids already evicted or a stopped session are fine)."""
-    try:
-        sc = spark.sparkContext._jsc.sc()
-        live = _persistent_rdd_ids(spark)
-        for i in ids:
-            if i in live:
-                # direct by-id unpersist: one py4j call per tracked id
-                # instead of a per-entry scan of the whole persistent map
-                sc.unpersistRDD(i, False)
-    except Exception:
-        # conservative fallback (unpersistRDD is private[spark] — public
-        # bytecode on every Spark 3.x/4.x, but guard against a future
-        # signature change): the original full-scan path
+@contextlib.contextmanager
+def shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
+    """Run the block with ``spark.sql.shuffle.partitions`` set to ``n`` and
+    restore the previous value after — the only code that changes this
+    conf outside ``session.get_spark``.  Plans executed inside the block
+    (a stream's first batch pins its state partitioning this way; a lazy
+    localCheckpoint materializes its AQE stages) use ``n``.  The conf is
+    session-global, so the lock holds every other thread's block until
+    this one exits: each sees its own count."""
+    with _PARTITIONS_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
         try:
-            it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-            while it.hasNext():
-                t = it.next()
-                if t._1() in ids:
-                    t._2().unpersist(False)
-        except Exception:
-            pass
-
-
-def release_rdds_with_result(result: DataFrame, spark: SparkSession, ids: list[int]) -> DataFrame:
-    """Release the tracked checkpoint caches when the RESULT handle is
-    dropped (the checkpointed RDDs back the result's plan, so they must
-    outlive it — same lifetime contract as ``scoped_persist``).
-
-    Also exposes the release through ``result._fns_release`` so
-    ``release_persisted(result)`` frees the checkpoint blocks
-    DETERMINISTICALLY, composing with any release scoped_persist already
-    attached (r13 ADVICE: GC-only release leaks until the collector runs)."""
-    import weakref
-
-    attach_release(result, weakref.finalize(result, release_rdd_ids, spark, list(ids)))
-    return result
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)

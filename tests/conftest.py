@@ -14,7 +14,7 @@ import duckdb
 import pytest
 
 from flink_net_spark.session import get_spark
-from flink_net_spark.tables import TABLE_NAMES, table_path
+from flink_net_spark.tables import TABLE_NAMES, release_persisted, table_path
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -79,11 +79,30 @@ def assert_flat_schema(df, name: str = "?"):
     )
 
 
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids of every RDD the SparkContext holds cached (persisted DataFrames
+    and local checkpoints alike)."""
+    s = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().mkString(",")
+    return {int(x) for x in s.split(",") if x}
+
+
 def assert_matches_oracle(spark, duck, spark_fn, oracle: str, name: str = "?"):
+    """Also the registry-wide lifetime check: after collect,
+    ``release_persisted`` must free everything the build cached, apart from
+    text.py's session-scoped shared LM tables (the one deliberate
+    exception, dropped here before the check)."""
+    from flink_net_spark.queries.text import release_shared_lm
+
+    before = persistent_rdd_ids(spark)
     sdf = spark_fn(spark, SF_DIR)
     assert_flat_schema(sdf, name)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
+    release_persisted(sdf)
+    if persistent_rdd_ids(spark) - before:
+        release_shared_lm(spark)
+    leaked = persistent_rdd_ids(spark) - before
+    assert not leaked, f"{name}: RDDs {sorted(leaked)} still cached after release"
 
     res = duck.execute(oracle)
     duck_cols = [d[0] for d in res.description]

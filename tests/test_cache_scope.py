@@ -1,11 +1,12 @@
-"""Cache-lifetime contract: persisted intermediates ride the result handle.
+"""Cache-lifetime contract: what a build caches rides the result handle.
 
-r8 ADVICE minor: query builders that persist() a shared intermediate (or
-localCheckpoint() inside an iterative loop) used to leak the cache for the
-whole session.  scoped_persist / checkpoint_tracked tie every such cache to
-the returned DataFrame via a weakref finalizer (superseded loop rounds are
-released inside the loop): collect + drop the handle → nothing new remains
-in the RDD cache registry.
+Query builders persist shared intermediates and local-checkpoint iterative
+rounds; a ``tables.QueryScope`` holds them and is bound to the returned
+DataFrame, so ``release_persisted(result)`` (or, as a backstop, collecting
+the dropped handle) frees them.  The registry-wide check that every query
+releases what it cached lives in ``conftest.assert_matches_oracle``; this
+module covers the exception (the session-scoped shared LM tables), the GC
+backstop, the scope's error path and its concurrency contract.
 
 Runs in its own module: a module-scoped fixture elsewhere that holds live
 handles over the same query plans would alias cache entries (Spark's
@@ -16,52 +17,55 @@ from __future__ import annotations
 
 import gc
 import os
+import threading
+import time
+
+import pytest
+
+from tests.conftest import SF_DIR, persistent_rdd_ids
 
 
-def test_scoped_persist_releases_cache_on_handle_drop(spark):
-    """Result-scoped caches vanish with the handle; the session-scoped
-    shared LM tables (round-10: text.shared_lm_tables) are the ONE
-    deliberate exception — they may appear once, must never GROW across
-    queries, and must vanish on release_shared_lm()."""
+def test_shared_lm_tables_do_not_grow(spark):
+    """The session-scoped shared LM tables (round-10: text.shared_lm_tables)
+    are the ONE deliberate survivor of release_persisted: they appear once,
+    never GROW across LM queries, and vanish on release_shared_lm()."""
     from flink_net_spark.queries import QUERIES
     from flink_net_spark.queries.text import release_shared_lm
-    from flink_net_spark.tables import _persistent_rdd_ids
+    from flink_net_spark.tables import release_persisted
 
-    sf = "/root/testdata/sf0.001"
     release_shared_lm(spark)
     gc.collect()  # flush finalizers pending from earlier modules
-    baseline = _persistent_rdd_ids(spark)
-    shared: set[int] = set()
-    for name in ("text_backoff_nll", "text_bigram_nll", "dedup_minhash_lsh",
-                 "dedup_simhash_pairs", "dedup_substring_pairs",
-                 "dedup_substring_stats", "dedup_resolve_groups", "sim_semdedup",
-                 # r10 ADVICE: sim_rrf_hybrid persisted its (doc_id, term)
-                 # inverted index scoped to ITSELF (finalizer could never
-                 # fire); pinned here now that it scopes to the result —
-                 # and its r11 ANN-leg variant + the phash index too
-                 "sim_rrf_hybrid", "sim_rrf_hybrid_ann", "mm_phash_dedup",
-                 "dedup_incremental_minhash", "dedup_span_novelty",
-                 # r13 ADVICE: connected components' per-round LAZY
-                 # localCheckpoints (7 label frames) were untracked — now
-                 # checkpoint_tracked_lazy + release_rdds_with_result
-                 "graph_connected_components",
-                 # r14: the pruned MaxSim leg persists its (doc, qtok)
-                 # max-dot frame, scoped to the result
-                 "sim_maxsim_pruned"):
-        df = QUERIES[name](spark, sf)
+    baseline = persistent_rdd_ids(spark)
+    shared = None
+    for name in ("text_backoff_nll", "text_bigram_nll", "text_backoff_nll"):
+        df = QUERIES[name](spark, SF_DIR)
         df.collect()
-        del df
-        gc.collect()
-        leaked = _persistent_rdd_ids(spark) - baseline - shared
-        if name == "text_backoff_nll":
+        release_persisted(df)
+        live = persistent_rdd_ids(spark) - baseline
+        if shared is None:
             # first LM-family query materializes the shared build (bounded:
             # toks + count tables + score tables); remember, don't flag
-            shared = leaked
-            continue
-        assert not leaked, (name, leaked)
-    # the shared set is released explicitly, not by handle lifetime
+            assert live, "expected the shared LM build to stay cached"
+            shared = live
+        assert live <= shared, (name, live - shared)
     release_shared_lm(spark)
-    assert _persistent_rdd_ids(spark) - baseline == set()
+    assert persistent_rdd_ids(spark) - baseline == set()
+
+
+def test_gc_backstop_releases_dropped_result(spark):
+    """A caller that drops the result without release_persisted still frees
+    its persists and local checkpoints once the handle is collected."""
+    from flink_net_spark.queries import QUERIES
+
+    gc.collect()
+    baseline = persistent_rdd_ids(spark)
+    for name in ("graph_connected_components", "dedup_resolve_groups"):
+        df = QUERIES[name](spark, SF_DIR)
+        df.collect()
+        assert persistent_rdd_ids(spark) - baseline, f"{name}: nothing held"
+        del df
+        gc.collect()
+        assert persistent_rdd_ids(spark) - baseline == set(), name
 
 
 def test_purge_dead_lm_entries_unpersists_through_handles(spark):
@@ -91,88 +95,28 @@ def test_purge_dead_lm_entries_unpersists_through_handles(spark):
 
 
 def test_keep_best_forwards_deterministic_release(spark):
-    """r13 ADVICE: dedup_keep_best pinned its upstream resolve-groups
-    result only via _fns_upstream (GC-only — release_persisted(out) was a
-    no-op).  It must now forward a deterministic handle: after collect +
-    release_persisted(out), the upstream's checkpointed label RDDs are
-    gone WITHOUT waiting for the collector."""
+    """r13 ADVICE: dedup_keep_best's plan reads its upstream resolve-groups
+    result's checkpointed label RDDs.  release_persisted(out) must free
+    them too, WITHOUT waiting for the collector."""
     from flink_net_spark.queries import QUERIES
-    from flink_net_spark.tables import _persistent_rdd_ids, release_persisted
+    from flink_net_spark.tables import release_persisted
 
-    sf = "/root/testdata/sf0.001"
     gc.collect()
-    baseline = _persistent_rdd_ids(spark)
-    out = QUERIES["dedup_keep_best"](spark, sf)
+    baseline = persistent_rdd_ids(spark)
+    out = QUERIES["dedup_keep_best"](spark, SF_DIR)
     out.collect()
-    assert _persistent_rdd_ids(spark) - baseline, "expected live upstream caches"
+    assert persistent_rdd_ids(spark) - baseline, "expected live upstream caches"
     release_persisted(out)  # deterministic: NO gc.collect() here
-    assert _persistent_rdd_ids(spark) - baseline == set()
+    assert persistent_rdd_ids(spark) - baseline == set()
     del out
     gc.collect()  # the GC backstop must stay idempotent after the fact
-
-
-def test_release_rdds_with_result_composes_with_scoped_persist(spark):
-    """release_rdds_with_result must chain onto an existing _fns_release
-    (graph_connected_components stacks it on scoped_persist): one
-    release_persisted() call frees BOTH the persisted frames and the
-    tracked checkpoint RDDs."""
-    from flink_net_spark.tables import (
-        _persistent_rdd_ids,
-        checkpoint_tracked_lazy,
-        release_persisted,
-        release_rdds_with_result,
-        scoped_persist,
-    )
-
-    gc.collect()
-    baseline = _persistent_rdd_ids(spark)
-    cached = spark.range(100).persist()
-    ids: list[int] = []
-    lc = checkpoint_tracked_lazy(spark.range(50), ids)
-    out = release_rdds_with_result(
-        scoped_persist(lc.crossJoin(cached.limit(1)), cached), spark, ids
-    )
-    out.collect()
-    assert ids and _persistent_rdd_ids(spark) - baseline
-    release_persisted(out)
-    assert _persistent_rdd_ids(spark) - baseline == set()
-
-
-def test_release_attach_composes_in_either_nesting_order(spark):
-    """Round-14 review: scoped_persist used to OVERWRITE _fns_release, so
-    scoped_persist(release_rdds_with_result(...)) — the reverse of the
-    graph.py order — silently dropped the checkpoint release.  attach_release
-    must compose regardless of nesting order."""
-    from flink_net_spark.tables import (
-        _persistent_rdd_ids,
-        checkpoint_tracked_lazy,
-        release_persisted,
-        release_rdds_with_result,
-        scoped_persist,
-    )
-
-    gc.collect()
-    baseline = _persistent_rdd_ids(spark)
-    cached = spark.range(64).persist()
-    ids: list[int] = []
-    lc = checkpoint_tracked_lazy(spark.range(32), ids)
-    # REVERSE order: rdds first, then scoped_persist on top
-    out = scoped_persist(
-        release_rdds_with_result(lc.crossJoin(cached.limit(1)), spark, ids),
-        cached,
-    )
-    out.collect()
-    assert ids and _persistent_rdd_ids(spark) - baseline
-    release_persisted(out)
-    assert _persistent_rdd_ids(spark) - baseline == set()
 
 
 def test_msf_ckpt_dir_cleaned_on_handle_drop(spark):
     """r15 VERDICT #1a: graph_msf_boruvka's parquet-checkpoint temp dir
     must not strand /tmp when the caller DROPS the handle without calling
-    release_persisted — the rmtree is now a weakref.finalize on the
-    result, so GC is a sufficient backstop (and the explicit path stays
-    idempotent)."""
+    release_persisted — the rmtree is a scope cleanup, so GC is a
+    sufficient backstop (and the explicit path stays idempotent)."""
     import glob
     import tempfile
 
@@ -180,7 +124,7 @@ def test_msf_ckpt_dir_cleaned_on_handle_drop(spark):
 
     patt = os.path.join(tempfile.gettempdir(), "fns_msf_*")
     before = set(glob.glob(patt))
-    df = QUERIES["graph_msf_boruvka"](spark, "/root/testdata/sf0.001")
+    df = QUERIES["graph_msf_boruvka"](spark, SF_DIR)
     df.collect()
     created = set(glob.glob(patt)) - before
     assert created, "expected a fresh fns_msf_ checkpoint dir"
@@ -188,3 +132,109 @@ def test_msf_ckpt_dir_cleaned_on_handle_drop(spark):
     gc.collect()
     after = set(glob.glob(patt)) - before
     assert not after, f"ckpt dir(s) leaked after handle drop: {after}"
+
+
+def test_builder_that_raises_leaves_nothing_held(spark):
+    """A scoped builder that fails after persisting and checkpointing
+    releases both before the error propagates — no hand-written cleanup."""
+    from flink_net_spark.tables import _PLAN_REFS, scoped
+
+    cleaned = []
+
+    @scoped
+    def failing(spark, sf_dir, scope):
+        scope.persist(spark.range(40).selectExpr("id * 3 AS v")).count()
+        scope.checkpoint(spark.range(20), eager=True)
+        scope.on_release(lambda: cleaned.append(sf_dir))
+        raise RuntimeError("build failed")
+
+    gc.collect()
+    baseline = persistent_rdd_ids(spark)
+    refs = set(_PLAN_REFS)
+    with pytest.raises(RuntimeError, match="build failed"):
+        failing(spark, "dir")
+    assert persistent_rdd_ids(spark) - baseline == set()
+    assert set(_PLAN_REFS) == refs
+    assert cleaned == ["dir"]
+
+
+def test_drop_releases_one_frame_early(spark):
+    """scope.drop frees one superseded frame and leaves the rest held."""
+    from flink_net_spark.tables import QueryScope
+
+    scope = QueryScope()
+    a = scope.persist(spark.range(30).selectExpr("id + 1 AS a"))
+    b = scope.checkpoint(spark.range(30).selectExpr("id + 2 AS b"), eager=True)
+    a.count()
+    scope.drop(a)
+    assert not a.storageLevel.useMemory
+    assert b.count() == 30  # checkpoint blocks still there
+    with pytest.raises(ValueError):
+        scope.drop(a)
+    scope.release()
+    scope.release()  # idempotent
+
+
+def test_fresh_persist_survives_concurrent_last_release(spark, monkeypatch):
+    """Thread 1 drops the LAST ref to a plan while its unpersist is slow;
+    thread 2 meanwhile persists a semantically equal plan.  The decrement
+    and the unpersist happen under the same lock as the persist, so thread
+    2's persist waits and re-registers the cache: it must still be cached
+    afterwards (a pop-then-unpersist-outside-the-lock release evicts it)."""
+    from flink_net_spark.tables import QueryScope
+
+    def plan():
+        return spark.range(300).selectExpr("id", "id % 7 AS k")
+
+    s1 = QueryScope()
+    s1.persist(plan()).count()
+    cls = type(plan())
+    real = cls.unpersist
+    entered = threading.Event()
+
+    def slow_unpersist(self, *args, **kwargs):
+        entered.set()
+        time.sleep(1.0)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "unpersist", slow_unpersist)
+    t1 = threading.Thread(target=s1.release)
+    t1.start()
+    assert entered.wait(30)
+    s2 = QueryScope()
+    df2 = s2.persist(plan())
+    t1.join(timeout=60)
+    assert not t1.is_alive()
+    assert df2.storageLevel.useMemory, "a fresh persist lost its cache"
+    s2.release()
+    assert not df2.storageLevel.useMemory
+
+
+def test_shuffle_partitions_scopes_do_not_interleave(spark):
+    """Two threads run shuffle_partitions scopes with different counts at
+    once: each sees only its own value inside its scope, and the session
+    value is restored after both."""
+    from flink_net_spark.tables import shuffle_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    base = spark.conf.get(key)
+    seen: dict[int, set[str]] = {}
+    start = threading.Barrier(2)
+
+    def run(n: int) -> None:
+        start.wait()
+        with shuffle_partitions(spark, n):
+            vals = set()
+            for _ in range(20):
+                vals.add(spark.conf.get(key))
+                time.sleep(0.005)
+            seen[n] = vals
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in (3, 5)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == {3: {"3"}, 5: {"5"}}
+    assert spark.conf.get(key) == base

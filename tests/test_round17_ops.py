@@ -2,7 +2,7 @@
 
 1. ``_PLAN_REFS`` refcounting is thread-safe (VERDICT r16 #5): the
    sim_ann_planted_recall legs build on a 4-thread pool, so concurrent
-   scoped-persist acquire/release of the SAME semantic plan must never
+   QueryScope persist/release of the SAME semantic plan must never
    lose an increment (a lost increment unpersists a cache another live
    result still uses — silent recompute).
 2. ``_stage_dir`` stale-sibling pruning respects an mtime grace window
@@ -19,75 +19,79 @@
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import threading
 import time
 
+import pytest
+
 
 def test_plan_refs_concurrent_acquire_release(spark):
-    """Balanced acquire/release from 8 threads on one shared plan key must
+    """Balanced persist/release from 8 threads on one shared plan key must
     end with the refcount table empty for that key (no stale entry from a
     lost decrement, no premature eviction from a lost increment)."""
-    from flink_net_spark.tables import (
-        _PLAN_REFS,
-        _plan_key,
-        acquire_persisted,
-        release_acquired,
-    )
+    from flink_net_spark.tables import _PLAN_REFS, QueryScope, _plan_key
 
-    df = spark.range(1000).selectExpr("id", "id * 2 AS v").persist()
-    df.count()
+    df = spark.range(1000).selectExpr("id", "id * 2 AS v")
     key = _plan_key(df)
     errs: list[Exception] = []
 
     def worker():
         try:
             for _ in range(300):
-                keys = acquire_persisted(df)
-                release_acquired(keys)
+                scope = QueryScope()
+                scope.persist(df)
+                scope.release()
         except Exception as ex:  # pragma: no cover - failure path
             errs.append(ex)
 
     threads = [threading.Thread(target=worker) for _ in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # force interleaving at bytecode boundaries
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
     assert not errs, f"worker raised: {errs[:1]}"
     # balanced acquire/release: the entry must be gone (a lost decrement
     # leaves a stale positive refcount; a lost increment pops it early and
     # a later release would KeyError or double-unpersist)
     assert key not in _PLAN_REFS
-    # the test's own persist was released by the final release_acquired;
-    # re-persist state is irrelevant — just drop the handle
-    df.unpersist()
+    assert not df.storageLevel.useMemory
 
 
 def test_plan_refs_concurrent_holders_keep_cache(spark):
     """While any thread still holds an acquire, a concurrent release from
     another thread must NOT evict the entry."""
-    from flink_net_spark.tables import (
-        _PLAN_REFS,
-        acquire_persisted,
-        release_acquired,
-    )
+    from flink_net_spark.tables import _PLAN_REFS, QueryScope, _plan_key
 
-    df = spark.range(500).selectExpr("id").persist()
-    df.count()
-    hold = acquire_persisted(df)  # long-lived user
+    df = spark.range(500).selectExpr("id")
+    key = _plan_key(df)
+    hold = QueryScope()  # long-lived user
+    hold.persist(df).count()
 
     def churn():
         for _ in range(200):
-            release_acquired(acquire_persisted(df))
+            scope = QueryScope()
+            scope.persist(df)
+            scope.release()
 
     threads = [threading.Thread(target=churn) for _ in range(4)]
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
-    assert hold[0] in _PLAN_REFS, "churning pairs evicted a held cache"
-    assert _PLAN_REFS[hold[0]][0] == 1
-    release_acquired(hold)
-    assert hold[0] not in _PLAN_REFS
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert key in _PLAN_REFS, "churning pairs evicted a held cache"
+    assert _PLAN_REFS[key][0] == 1
+    assert df.storageLevel.useMemory
+    hold.release()
+    assert key not in _PLAN_REFS
 
 
 def test_stage_dir_prune_respects_mtime_grace(tmp_path):
@@ -182,3 +186,35 @@ def test_inc_state_shards_derivation_and_override(monkeypatch):
     assert hi > lo, "shard count must grow with the corpus"
     monkeypatch.setenv("SPARK_GRAFT_INC_STATE_SHARDS", "7")
     assert _inc_state_shards(40_000) == 7
+
+
+_ENV_KNOBS = [
+    "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+    "SPARK_GRAFT_ITER_SHUFFLE_PARTITIONS",
+    "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS",
+    "SPARK_GRAFT_INC_STATE_SHARDS",
+]
+
+
+@pytest.mark.parametrize("raw", ["0", "-3", "abc"])
+@pytest.mark.parametrize("var", _ENV_KNOBS)
+def test_env_knobs_reject_non_positive_ints(var, raw):
+    """Every positive-int env knob is read through one validated parser: a
+    bad value fails with a ValueError naming the variable, at import for
+    the import-time knobs and at first use for the derived ones.  Each
+    case runs in a fresh interpreter so import-time reads are exercised."""
+    code = (
+        "from flink_net_spark.queries import streaming_queries as S\n"
+        "from flink_net_spark import tables as T\n"
+        "T.derived_shuffle_partitions('.', [])\n"
+        "S._inc_state_shards(1)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k not in _ENV_KNOBS}
+    env[var] = raw
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode != 0
+    assert f"ValueError: {var}={raw!r}" in proc.stderr, proc.stderr[-2000:]

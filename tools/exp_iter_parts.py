@@ -47,14 +47,13 @@ def main() -> int:
             args.remove(argv[i + 1])
 
     from flink_net_spark.session import get_spark
-    from flink_net_spark.tables import release_persisted
+    from flink_net_spark.tables import release_persisted, shuffle_partitions
 
     import __spark_entry__ as entry_mod
 
     spark = get_spark("fns-exp-iter-parts")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
-    base = spark.conf.get("spark.sql.shuffle.partitions")
 
     out: dict[str, dict] = {}
     for name in args:
@@ -64,21 +63,20 @@ def main() -> int:
         # interleave: full sweep twice so session drift hits every arm
         for p in parts * reps:
             spark.catalog.clearCache()
-            spark.conf.set("spark.sql.shuffle.partitions", str(p))
             spark.sparkContext.setJobDescription(f"exp-parts:{name}:{p}")
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            b = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            rows = df.collect()
-            c = time.perf_counter() - t0
+            with shuffle_partitions(spark, p):
+                t0 = time.perf_counter()
+                df = fn(spark, SF_DIR)
+                b = time.perf_counter() - t0
+                t0 = time.perf_counter()
+                rows = df.collect()
+                c = time.perf_counter() - t0
             fps.add(fingerprint(rows))
             release_persisted(df)
             del df
             rec[p].append(round(b + c, 3))
             print(f"[exp] {name} parts={p}: build {b:.3f} collect {c:.3f}",
                   file=sys.stderr)
-        spark.conf.set("spark.sql.shuffle.partitions", base)
         med = {p: sorted(v)[len(v) // 2] for p, v in rec.items()}
         out[name] = {"medians": med, "runs": rec,
                      "fingerprints_agree": len(fps) == 1}

@@ -32,10 +32,10 @@ sys.path.insert(0, "/root/repo")
 
 import pyspark.sql.functions as F
 
+from flink_net_spark.tables import shuffle_partitions
+
 
 def probe_once(spark, stage, schema, n_keys, parts, provider=None):
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
     if provider:
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider["cls"])
         for k, v in provider.get("conf", {}).items():
@@ -63,16 +63,16 @@ def probe_once(spark, stage, schema, n_keys, parts, provider=None):
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
     )
     ckpt = tempfile.mkdtemp(prefix="fns_adj_ckpt_")
-    q = (
-        stream.writeStream.format("noop")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    progresses = [json.loads(p.json) for p in q.recentProgress]
-    q.stop()
-    spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with shuffle_partitions(spark, parts):
+        q = (
+            stream.writeStream.format("noop")
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        q.processAllAvailable()
+        progresses = [json.loads(p.json) for p in q.recentProgress]
+        q.stop()
     shutil.rmtree(ckpt, ignore_errors=True)
     batches = []
     for p in progresses:

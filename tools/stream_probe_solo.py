@@ -95,8 +95,8 @@ def stream_probe_once(
     Returns (rps, drain_sec, state, commit_ms, trigger_ms)."""
     import pyspark.sql.functions as F
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", shuffle_parts)
+    from flink_net_spark.tables import shuffle_partitions
+
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "4")
@@ -106,19 +106,19 @@ def stream_probe_once(
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
     )
     ckpt = tempfile.mkdtemp(prefix="fns_bench_ckpt_")
-    q = (
-        stream.writeStream.format("noop" if n_keys > 10_000 else "memory")
-        .queryName(f"fns_bench_stream_{n_keys}")
-        .outputMode("complete" if n_keys <= 10_000 else "update")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    t0 = time.perf_counter()
-    q.processAllAvailable()
-    dt = time.perf_counter() - t0
-    progresses = [json.loads(pr.json) for pr in q.recentProgress]
-    q.stop()
-    spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with shuffle_partitions(spark, shuffle_parts):
+        q = (
+            stream.writeStream.format("noop" if n_keys > 10_000 else "memory")
+            .queryName(f"fns_bench_stream_{n_keys}")
+            .outputMode("complete" if n_keys <= 10_000 else "update")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        t0 = time.perf_counter()
+        q.processAllAvailable()
+        dt = time.perf_counter() - t0
+        progresses = [json.loads(pr.json) for pr in q.recentProgress]
+        q.stop()
     batches = []
     for p in progresses:
         if p["numInputRows"] <= 0:
