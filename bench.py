@@ -1472,6 +1472,8 @@ def xsession_stream_probe(cur_1k: int | None, cur_1m: int | None) -> dict:
 # stdout tail (BENCH_r04.json parsed=null when round 4's 5.6 kB line fell
 # off it); 1950 leaves margin for the trailing newline.
 _COMPACT_LINE_BUDGET = 1950
+# the compare keys the line keeps when it must shed
+_COMPARE_KEPT = ("vs", "reg", "imp", "adj_persist_names")
 
 
 def _compact_pin_names() -> list[str]:
@@ -1487,11 +1489,49 @@ def _compact_pin_names() -> list[str]:
         return []
 
 
+def _fit_line(compact: dict, n_queries: int, budget: int = _COMPACT_LINE_BUDGET) -> str:
+    """Serialize the compact line, shedding until it fits ``budget`` (only
+    a ~2000-char stdout tail is kept).  Order: unpinned ``queries``
+    entries (cheapest first); ``compare`` trimmed to its verdict keys;
+    ``families``; pinned names last, cheapest first, logged as a WARN
+    because they are the cross-round per-query contract.  ``qx`` counts
+    the elided entries."""
+    queries = compact["queries"]
+
+    def dump() -> str:
+        compact["qx"] = n_queries - len(queries)
+        return json.dumps(compact, separators=(",", ":"))
+
+    line = dump()
+    pinned = set(_compact_pin_names())
+    for name in sorted(queries, key=queries.get):
+        if len(line) <= budget:
+            break
+        if name not in pinned:
+            del queries[name]
+            line = dump()
+    if len(line) > budget and isinstance(compact.get("compare"), dict):
+        compact["compare"] = {k: v for k, v in compact["compare"].items() if k in _COMPARE_KEPT}
+        line = dump()
+    if len(line) > budget:
+        compact.pop("families", None)
+        line = dump()
+    shed = []
+    while len(line) > budget and queries:
+        name = min(queries, key=queries.get)
+        del queries[name]
+        shed.append(name)
+        line = dump()
+    if shed:
+        log(f"[bench] WARN shed pinned query names: {', '.join(shed)}")
+    return line
+
+
 def _compact_query_map(timings: dict[str, float]) -> tuple[dict[str, float], int]:
     """Per-query medians for the printed line: every pinned name that was
-    measured, plus the most expensive unpinned entries as seed for the
-    budget-shedding pass in main() (which trims from the cheapest unpinned
-    end until the whole line fits _COMPACT_LINE_BUDGET).  Values rounded to
+    measured, plus the most expensive unpinned entries as seed for
+    _fit_line (which trims from the cheapest unpinned end until the whole
+    line fits _COMPACT_LINE_BUDGET).  Values rounded to
     centiseconds — the full 4-decimal map stays in the detail sidecar."""
     pins = _compact_pin_names()
     missing = [n for n in pins if n not in timings]
@@ -1777,31 +1817,7 @@ def main() -> int:
         compact["sf1x100"] = _smoke_summary(sf1x100)
     if compare_verdict is not None:
         compact["compare"] = compare_verdict
-    line = json.dumps(compact, separators=(",", ":"))
-    # Byte budget: the driver's stdout tail is ~2000 chars; shed from the
-    # line until it fits with margin.  Order: unpinned per-query entries
-    # (cheapest first), then families, then the compare block — the pinned
-    # "queries" names and the headline totals go last because they are the
-    # driver's PERF contract.
-    if len(line) > _COMPACT_LINE_BUDGET:
-        pinned = set(_compact_pin_names())
-        for name in sorted(compact_queries, key=compact_queries.get):
-            if len(line) <= _COMPACT_LINE_BUDGET:
-                break
-            if name in pinned:
-                continue
-            compact_queries.pop(name, None)
-            compact["qx"] = len(timings) - len(compact_queries)
-            line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > _COMPACT_LINE_BUDGET:
-        compact.pop("families", None)
-        compact["compare"] = {k: compare_verdict[k] for k in ("vs", "reg", "imp")
-                              if compare_verdict and k in compare_verdict}
-        line = json.dumps(compact, separators=(",", ":"))
-    while len(line) > _COMPACT_LINE_BUDGET and compact_queries:
-        compact_queries.pop(min(compact_queries, key=compact_queries.get), None)
-        compact["qx"] = len(timings) - len(compact_queries)
-        line = json.dumps(compact, separators=(",", ":"))
+    line = _fit_line(compact, len(timings))
     log(f"[bench] compact line: {len(line)} chars")
     print(line)
     return 0

@@ -22,12 +22,20 @@ DataFrame; one iteration = one equi-join of edges(src) with the rank frame
 contributions combine map-side, so the reduce volume is one row per node.
 Nothing is ever collected; iteration count is a fixed constant, so the
 lineage stays bounded without checkpointing.
+
+The graph every builder here except the triangle and common-neighbor
+ones runs on is the bipartite part<->supplier graph of lineitem, defined
+once per engine: ``_edges`` (Spark) and ``_duck_edges`` (the DuckDB
+oracles' CTE).  Node ids are 2*partkey / 2*suppkey+1, disjoint id spaces
+in one BIGINT column; ``_kind`` / ``_key`` decode them.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from flink_net_spark.queries import query
 from flink_net_spark.tables import (
@@ -37,6 +45,82 @@ from flink_net_spark.tables import (
     scoped,
     shuffle_partitions,
 )
+
+
+def _edges(
+    spark: SparkSession, sf_dir: str, where: str | None = None, weighted: bool = False
+) -> DataFrame:
+    """The part<->supplier edge list ``(src, dst)`` of the lineitem rows
+    matching ``where``: distinct pairs — grouped pairs carrying
+    ``w = MIN(l_quantity)`` when ``weighted`` — in both directions,
+    hash-partitioned on ``src``.  Every per-round join here is src-keyed,
+    so it reuses that layout and only the one-row-per-node frames move
+    (GraphX's edge-cut: edges static, traffic ∝ nodes)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    if where is not None:
+        li = li.filter(where)
+    ends = (
+        (F.col("l_partkey") * 2).cast("long").alias("src"),
+        (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
+    )
+    if weighted:
+        pairs = li.groupBy(*ends).agg(F.min(F.col("l_quantity").cast("long")).alias("w"))
+    else:
+        pairs = li.select(*ends).distinct()
+    back = pairs.select(
+        F.col("dst").alias("src"), F.col("src").alias("dst"), *(["w"] if weighted else [])
+    )
+    return pairs.union(back).repartition(F.col("src"))
+
+
+def _duck_edges(where: str = "TRUE", weighted: bool = False) -> str:
+    """``_edges`` as the DuckDB CTE ``e`` (same columns and rows).
+    MATERIALIZED: the oracles reference it from every unrolled round, and
+    DuckDB inlines a CTE per reference otherwise."""
+    w = ", w" if weighted else ""
+    agg = ", MIN(CAST(l_quantity AS BIGINT)) AS w" if weighted else ""
+    return f"""e AS MATERIALIZED (
+        WITH p AS MATERIALIZED (
+            SELECT CAST(l_partkey * 2 AS BIGINT)     AS src,
+                   CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst{agg}
+            FROM lineitem WHERE {where} GROUP BY 1, 2)
+        SELECT src, dst{w} FROM p UNION ALL SELECT dst, src{w} FROM p
+    )"""
+
+
+def _kind(col: str) -> Column:
+    """The kind of node ``col``: 'part' or 'supplier'."""
+    return F.when(F.col(col) % 2 == 0, F.lit("part")).otherwise(F.lit("supplier"))
+
+
+def _key(col: str) -> Column:
+    """The part or supplier key of node ``col``."""
+    return F.expr(f"{col} div 2")
+
+
+def _supersteps(
+    scope: QueryScope,
+    init: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Run ``rounds`` supersteps ``frame = step(frame)`` from ``init`` and
+    return ``(last, prev)``: the final frame and the one before it, which
+    the convergence-audit columns compare.
+
+    ``init`` and every round are LOCAL-CHECKPOINTED, not just persisted.
+    The frame is referenced twice per round (CC's label self-join, SSSP's
+    carry + relax, k-core's two endpoints, LPA's vote + carry), so the
+    un-truncated logical plan doubles per round — 2^rounds leaf copies
+    that stall Catalyst ANALYSIS long before any task runs (persist
+    dedups execution, never analysis).  Checkpoint-per-superstep is
+    GraphX/Pregel's own lineage discipline.  The checkpoints are lazy: no
+    per-round action forces them, so every round's cache backs the final
+    plan and stays in ``scope`` until the result is released."""
+    last = prev = scope.checkpoint(init)
+    for _ in range(rounds):
+        prev, last = last, scope.checkpoint(step(last))
+    return last, prev
 
 # Fixed-point PageRank parameters.  Damping 0.85 as the exact integer pair
 # (85, 100); rank unit 1e-6.  With N nodes total rank mass stays <= N * 1e6,
@@ -51,21 +135,7 @@ def _duck_pagerank_oracle() -> str:
     """Unrolled chained-CTE oracle: r0..r{ITERS} computed with the exact
     integer recurrence the Spark loop runs."""
     ctes = [
-        # bipartite part<->supplier edges from lineitem, both directions;
-        # node encoding 2*partkey / 2*suppkey+1 keeps the id spaces disjoint
-        # e and deg are referenced by every unrolled iteration step; DuckDB
-        # inlines CTEs per reference, so force one execution each
-        """e AS MATERIALIZED (
-            SELECT src, dst FROM (
-                SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT) AS src,
-                                CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem)
-            UNION ALL
-            SELECT dst, src FROM (
-                SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT) AS src,
-                                CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem)
-        )""",
+        _duck_edges(),
         "deg AS MATERIALIZED (SELECT src AS node, COUNT(*) AS deg FROM e GROUP BY src)",
         "r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM deg)",
     ]
@@ -107,11 +177,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataF
     integer units (Page et al. 1999; the GraphX/Pregel message-passing
     shape re-expressed as DataFrame join + groupBy).
 
-    Graph: distinct (l_partkey, l_suppkey) pairs, both directions, node ids
-    2*partkey / 2*suppkey+1 (disjoint spaces, no collision).  Bidirectional
-    edges mean every node in the degree frame both sends and receives, so
-    there are no dangling-mass corrections to disagree on; the LEFT
-    JOIN + COALESCE guards the recurrence anyway.
+    Graph: ``_edges`` over all of lineitem.  Bidirectional edges mean
+    every node in the degree frame both sends and receives, so there are
+    no dangling-mass corrections to disagree on; the LEFT JOIN + COALESCE
+    guards the recurrence anyway.
 
     Determinism: each step is `teleport + (85 * sum(r div deg)) div 100` —
     integer division truncates identically in Spark (`div`) and DuckDB
@@ -131,22 +200,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataF
     division.  The old shape paid a third join (rank⋈deg) per iteration
     plus a tail rank⋈deg; both are gone, and the rank frame still enters
     each new iteration exactly once, so lineage stays LINEAR in the
-    iteration count.  The edge frame is persisted PRE-PARTITIONED on src:
-    every per-iteration join reuses that partitioning (no edge re-shuffle;
-    only the one-row-per-node share frame moves), which at 1000 executors
-    is GraphX's edge-cut layout — edges static, rank traffic ∝ nodes.
-    Rank state is one BIGINT per node.  AQE skew-split covers hot nodes."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select(
-        (F.col("l_partkey") * 2).cast("long").alias("src"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
-    ).distinct()
-    edges = scope.persist(
-        pairs.union(
-            pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(F.col("src"))
-    )
+    iteration count.  The edge frame is persisted pre-partitioned on src,
+    so no iteration re-shuffles edges.  Rank state is one BIGINT per
+    node.  AQE skew-split covers hot nodes."""
+    edges = scope.persist(_edges(spark, sf_dir))
     # deg doubles as the node universe (every node has outgoing edges on
     # this bidirectional graph); persisted because each iteration's left
     # join re-reads it and exchange reuse does not survive AQE replans
@@ -177,16 +234,12 @@ def graph_pagerank(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataF
             .alias("r"),
         )
     out = (
-        r.select(
-            F.when(F.col("node") % 2 == 0, F.lit("part"))
-            .otherwise(F.lit("supplier"))
-            .alias("kind"),
-            F.expr("node div 2").alias("key"),
+        r.orderBy(F.desc("r"), "node")
+        .select(
+            _kind("node").alias("kind"),
+            _key("node").alias("key"),
             F.col("deg").cast("long").alias("deg"),
             F.col("r").alias("rank_e6"),
-        )
-        .orderBy(
-            F.desc("rank_e6"), F.expr("key * 2 + if(kind = 'supplier', 1, 0)")
         )
         .limit(PAGERANK_TOPK)
     )
@@ -384,17 +437,7 @@ def _duck_bfs_oracle() -> str:
     the exact set recurrence the Spark loop runs (anti-join spelled as
     EXCEPT — both are set difference on the node id)."""
     ctes = [
-        """e AS MATERIALIZED (
-            SELECT src, dst FROM (
-                SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT) AS src,
-                                CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem)
-            UNION ALL
-            SELECT dst, src FROM (
-                SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT) AS src,
-                                CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem)
-        )""",
+        _duck_edges(),
         f"""l0 AS MATERIALIZED (
             SELECT DISTINCT src AS node FROM e
             WHERE src % 2 = 0 AND (src // 2) % {BFS_SEED_MOD} = 1
@@ -452,27 +495,18 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str, scope: QueryScope) -> Dat
     oracle's EXCEPT are the same set difference.
 
     Scale (the design question for BFS at 100 TB): each hop is one
-    equi-join of the persisted edge frame against the CURRENT frontier
-    (node-keyed shuffle, frontier is usually a broadcast-sized fraction
-    of the graph) plus one anti-join against the visited set — also
-    node-keyed, so AQE plans both as broadcast while the frontier is
-    small and falls back to shuffle-hash when it saturates.  Hop count is
-    a bounded constant, so lineage stays flat without checkpointing; the
-    visited set is re-persisted per hop and every per-hop frontier is a
-    distinct-deduped node list, never the edge multiset."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select(
-        (F.col("l_partkey") * 2).cast("long").alias("src"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
-    ).distinct()
-    edges = scope.persist(
-        pairs.union(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    )
+    src-keyed equi-join of the persisted, src-partitioned edge frame
+    against the CURRENT frontier (the frontier is usually a
+    broadcast-sized fraction of the graph) plus one anti-join against the
+    visited set — node-keyed, so AQE plans both as broadcast while the
+    frontier is small and falls back to shuffle-hash when it saturates.
+    Hop count is a bounded constant, so lineage stays flat without
+    checkpointing; the visited set is re-persisted per hop and every
+    per-hop frontier is a distinct-deduped node list, never the edge
+    multiset."""
+    edges = scope.persist(_edges(spark, sf_dir))
     frontier = scope.persist(
-        edges.filter(
-            (F.col("src") % 2 == 0)
-            & (F.expr("src div 2") % BFS_SEED_MOD == 1)
-        )
+        edges.filter((_kind("src") == "part") & (_key("src") % BFS_SEED_MOD == 1))
         .select(F.col("src").alias("node"))
         .distinct()
     )
@@ -489,17 +523,12 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str, scope: QueryScope) -> Dat
         )
         frontier = nxt
     out = (
-        visited.groupBy(
-            "lvl",
-            F.when(F.col("node") % 2 == 0, F.lit("part"))
-            .otherwise(F.lit("supplier"))
-            .alias("kind"),
-        )
+        visited.groupBy("lvl", _kind("node").alias("kind"))
         .agg(
             F.count(F.lit(1)).alias("n_nodes"),
-            F.sum(F.expr("node div 2")).alias("sum_key"),
-            F.min(F.expr("node div 2")).alias("min_key"),
-            F.max(F.expr("node div 2")).alias("max_key"),
+            F.sum(_key("node")).alias("sum_key"),
+            F.min(_key("node")).alias("min_key"),
+            F.max(_key("node")).alias("max_key"),
         )
         .orderBy("lvl", "kind")
     )
@@ -519,17 +548,7 @@ def _duck_cc_oracle() -> str:
     recurrence the Spark loop runs (every step a MIN over BIGINT node ids,
     order-independent at any parallelism)."""
     ctes = [
-        f"""e AS MATERIALIZED (
-            SELECT src, dst FROM (
-                SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT) AS src,
-                                CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem WHERE {CC_EDGE_FILTER})
-            UNION ALL
-            SELECT dst, src FROM (
-                SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT) AS src,
-                                CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem WHERE {CC_EDGE_FILTER})
-        )""",
+        _duck_edges(CC_EDGE_FILTER),
         "l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl FROM e)",
     ]
     for i in range(CC_ROUNDS):
@@ -608,20 +627,11 @@ def graph_connected_components(
 
     Scale: per round, one edge⋈labels equi-join + groupBy(dst) partial MIN
     (the Pregel shape, linear in edges) plus one label self-join (linear
-    in nodes); the label frames are one row per node.  Each round's label
-    frame is LOCAL-CHECKPOINTED, not just persisted: both l and m are
-    referenced twice per round, so the un-truncated logical plan grows 4×
-    per round — 4^{CC_ROUNDS} leaf copies that stall Catalyst ANALYSIS
-    long before any task runs (persist dedups execution, never analysis).
-    Checkpoint-per-superstep is exactly GraphX/Pregel's own lineage
-    discipline for iterative algorithms.  Pointer jumping is what bounds
-    the round count at web scale — plain hop propagation needs diameter
-    rounds, doubling needs log(diameter)."""
-    li = load_table(spark, sf_dir, "lineitem").filter(CC_EDGE_FILTER)
-    pairs = li.select(
-        (F.col("l_partkey") * 2).cast("long").alias("src"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
-    ).distinct()
+    in nodes); the label frames are one row per node and each round's is
+    checkpointed (``_supersteps``; m, referenced twice per round, is
+    persisted too).  Pointer jumping is what bounds the round count at
+    web scale — plain hop propagation needs diameter rounds, doubling
+    needs log(diameter)."""
     # r17 (guide §2.2): the whole build loop runs under an input-derived
     # shuffle-partition count — every round's frontier frame is tiny
     # relative to the source, and the per-round AQE stage materializations
@@ -630,23 +640,9 @@ def graph_connected_components(
     # 6.60 → 3.36 s warm median.  MIN-over-BIGINT label algebra is
     # partition-count-independent by construction.
     with shuffle_partitions(spark, derived_shuffle_partitions(sf_dir, ["lineitem"])):
-        edges = scope.persist(
-            pairs.union(
-                pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .repartition(F.col("src"))
-        )
-        # Lazy checkpoints: no per-round count() forces materialization, so
-        # EVERY round's label cache backs the final plan and stays in the
-        # scope until the result is released.
-        l = scope.checkpoint(
-            edges.select(F.col("src").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("lbl"))
-        )
-        prev = l
-        for _ in range(CC_ROUNDS):
-            prev = l
+        edges = scope.persist(_edges(spark, sf_dir, CC_EDGE_FILTER))
+
+        def hop_and_jump(l: DataFrame) -> DataFrame:
             nb = (
                 edges.join(
                     l.select(F.col("node").alias("src"), F.col("lbl").alias("slbl")),
@@ -664,12 +660,15 @@ def graph_connected_components(
                 )
             )
             j = m.select(F.col("node").alias("jn"), F.col("ml").alias("jl"))
-            l = scope.checkpoint(
-                m.join(j, m.ml == j.jn, "left").select(
-                    "node",
-                    F.least(F.col("ml"), F.coalesce("jl", "ml")).alias("lbl"),
-                )
+            return m.join(j, m.ml == j.jn, "left").select(
+                "node",
+                F.least(F.col("ml"), F.coalesce("jl", "ml")).alias("lbl"),
             )
+
+        nodes = edges.select(F.col("src").alias("node")).distinct()
+        l, prev = _supersteps(
+            scope, nodes.select("node", F.col("node").alias("lbl")), hop_and_jump, CC_ROUNDS
+        )
     chg = (
         l.select("node", "lbl")
         .join(prev.select("node", F.col("lbl").alias("plbl")), "node")
@@ -678,8 +677,8 @@ def graph_connected_components(
     )
     comp = l.groupBy(F.col("lbl").alias("component")).agg(
         F.count(F.lit(1)).alias("n_nodes"),
-        F.sum(F.when(F.col("node") % 2 == 0, 1).otherwise(0)).alias("n_part"),
-        F.sum(F.when(F.col("node") % 2 == 1, 1).otherwise(0)).alias("n_supplier"),
+        F.sum((_kind("node") == "part").cast("long")).alias("n_part"),
+        F.sum((_kind("node") == "supplier").cast("long")).alias("n_supplier"),
     )
     out = (
         comp.crossJoin(F.broadcast(chg))
@@ -716,17 +715,7 @@ def _duck_ppr_oracle() -> str:
     integer arithmetic to graph_pagerank with the teleport mass
     restricted to the seed set (Page 1999 §6 personalized vector)."""
     ctes = [
-        """e AS MATERIALIZED (
-            SELECT src, dst FROM (
-                SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT) AS src,
-                                CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem)
-            UNION ALL
-            SELECT dst, src FROM (
-                SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT) AS src,
-                                CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem)
-        )""",
+        _duck_edges(),
         "deg AS MATERIALIZED (SELECT src AS node, COUNT(*) AS deg FROM e GROUP BY src)",
         f"""sd AS MATERIALIZED (
             SELECT node,
@@ -794,27 +783,14 @@ def graph_personalized_pagerank(
 
     Output: top-{PPR_TOPK} by rank with total (rank DESC, node) order —
     TakeOrderedAndProject, never a global sort."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select(
-        (F.col("l_partkey") * 2).cast("long").alias("src"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
-    ).distinct()
-    edges = scope.persist(
-        pairs.union(
-            pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(F.col("src"))
-    )
+    edges = scope.persist(_edges(spark, sf_dir))
     deg = scope.persist(
         edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("deg"))
         .withColumnRenamed("src", "node")
         .withColumn(
             "is_seed",
-            (
-                (F.col("node") % 2 == 0)
-                & (F.expr("node div 2") % PPR_SEED_MOD == 1)
-            ).cast("long"),
+            ((_kind("node") == "part") & (_key("node") % PPR_SEED_MOD == 1)).cast("long"),
         )
     )
     r = deg.select(
@@ -844,16 +820,12 @@ def graph_personalized_pagerank(
         )
     out = (
         r.filter(F.col("r") > 0)
+        .orderBy(F.desc("r"), "node")
         .select(
-            F.when(F.col("node") % 2 == 0, F.lit("part"))
-            .otherwise(F.lit("supplier"))
-            .alias("kind"),
-            F.expr("node div 2").alias("key"),
+            _kind("node").alias("kind"),
+            _key("node").alias("key"),
             (F.col("is_seed") == 1).alias("is_seed"),
             F.col("r").alias("rank_e6"),
-        )
-        .orderBy(
-            F.desc("rank_e6"), F.expr("key * 2 + if(kind = 'supplier', 1, 0)")
         )
         .limit(PPR_TOPK)
     )
@@ -878,17 +850,7 @@ def _duck_sssp_oracle() -> str:
     frame is referenced twice (carry + relax), so every CTE is
     MATERIALIZED (DuckDB inlines per reference otherwise)."""
     ctes = [
-        """pw AS MATERIALIZED (
-            SELECT CAST(l_partkey * 2 AS BIGINT)     AS a,
-                   CAST(l_suppkey * 2 + 1 AS BIGINT) AS b,
-                   MIN(CAST(l_quantity AS BIGINT))   AS w
-            FROM lineitem GROUP BY 1, 2
-        )""",
-        """e AS MATERIALIZED (
-            SELECT a AS src, b AS dst, w FROM pw
-            UNION ALL
-            SELECT b AS src, a AS dst, w FROM pw
-        )""",
+        _duck_edges(weighted=True),
         f"""d0 AS MATERIALIZED (
             SELECT DISTINCT src AS node, CAST(0 AS BIGINT) AS dist FROM e
             WHERE src % 2 = 0 AND (src // 2) % {SSSP_SEED_MOD} = 1
@@ -952,46 +914,30 @@ def graph_sssp_weighted(
     pre-partitioned and persisted) + one groupBy(node) partial MIN whose
     map side collapses to one row per node per task — the Pregel message
     volume, linear in edges.  Each round's dist frame is referenced twice
-    (carry + relax), so rounds are LOCAL-CHECKPOINTED with tracked ids
-    (2^{SSSP_HOPS} leaf copies otherwise — the connected-components
-    lineage discipline) and released with the result handle.  Output is
-    the bounded per-(kind, dist-decile) histogram: dist <= {SSSP_HOPS}*50,
-    so dist div 10 spans buckets 0..{SSSP_HOPS}*5 — <= 2*({SSSP_HOPS}*5+1)
+    (carry + relax) and checkpointed (``_supersteps``).  Output is the
+    bounded per-(kind, dist-decile) histogram: dist <= {SSSP_HOPS}*50, so
+    dist div 10 spans buckets 0..{SSSP_HOPS}*5 — <= 2*({SSSP_HOPS}*5+1)
     rows at any corpus size."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pw = li.groupBy(
-        (F.col("l_partkey") * 2).cast("long").alias("a"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("b"),
-    ).agg(F.min(F.col("l_quantity").cast("long")).alias("w"))
     # r17 (guide §2.2): input-derived shuffle partitions for the relax loop
     # — measured at sf0.1 (tools/exp_iter_parts.py, fingerprints identical):
     # 5.79 → 3.20 s warm median.  MIN-over-BIGINT relaxation is
     # partition-count-independent by construction.
     with shuffle_partitions(spark, derived_shuffle_partitions(sf_dir, ["lineitem"])):
-        edges = scope.persist(
-            pw.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
-            .union(pw.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w"))
-            .repartition(F.col("src"))
-        )
-        dist = scope.checkpoint(
-            edges.filter(
-                (F.col("src") % 2 == 0)
-                & (F.expr("src div 2") % SSSP_SEED_MOD == 1)
+        edges = scope.persist(_edges(spark, sf_dir, weighted=True))
+
+        def relax(dist: DataFrame) -> DataFrame:
+            hop = edges.join(dist.withColumnRenamed("node", "src"), "src").select(
+                F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
             )
+            return dist.unionByName(hop).groupBy("node").agg(F.min("dist").alias("dist"))
+
+        seeds = (
+            edges.filter((_kind("src") == "part") & (_key("src") % SSSP_SEED_MOD == 1))
             .select(F.col("src").alias("node"))
             .distinct()
             .withColumn("dist", F.lit(0).cast("long"))
         )
-        prev = dist
-        for _ in range(SSSP_HOPS):
-            prev = dist
-            relax = (
-                edges.join(dist.withColumnRenamed("node", "src"), "src")
-                .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
-            )
-            dist = scope.checkpoint(
-                dist.unionByName(relax).groupBy("node").agg(F.min("dist").alias("dist"))
-            )
+        dist, prev = _supersteps(scope, seeds, relax, SSSP_HOPS)
     chg = (
         dist.join(
             prev.select("node", F.col("dist").alias("pdist")), "node", "left"
@@ -1000,16 +946,11 @@ def graph_sssp_weighted(
         .agg(F.count(F.lit(1)).cast("long").alias("n_improved_last"))
     )
     out = (
-        dist.groupBy(
-            F.when(F.col("node") % 2 == 0, F.lit("part"))
-            .otherwise(F.lit("supplier"))
-            .alias("kind"),
-            F.expr("dist div 10").alias("dist_bucket"),
-        )
+        dist.groupBy(_kind("node").alias("kind"), F.expr("dist div 10").alias("dist_bucket"))
         .agg(
             F.count(F.lit(1)).alias("n_nodes"),
             F.sum("dist").cast("long").alias("sum_dist"),
-            F.sum(F.expr("node div 2")).cast("long").alias("sum_key"),
+            F.sum(_key("node")).cast("long").alias("sum_key"),
         )
         .crossJoin(F.broadcast(chg))
         .select(
@@ -1035,25 +976,16 @@ def _duck_kcore_oracle() -> str:
     formulation).  Each alive frame is referenced twice per round (both
     endpoints), so every CTE is MATERIALIZED."""
     ctes = [
-        f"""pw AS MATERIALIZED (
-            SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT)     AS a,
-                            CAST(l_suppkey * 2 + 1 AS BIGINT) AS b
-            FROM lineitem WHERE {KCORE_EDGE_FILTER}
-        )""",
-        """e AS MATERIALIZED (
-            SELECT a AS s, b AS d FROM pw
-            UNION ALL
-            SELECT b AS s, a AS d FROM pw
-        )""",
-        "a0 AS MATERIALIZED (SELECT DISTINCT s AS node FROM e)",
+        _duck_edges(KCORE_EDGE_FILTER),
+        "a0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM e)",
     ]
     for i in range(KCORE_ROUNDS):
         ctes.append(
             f"""a{i + 1} AS MATERIALIZED (
-            SELECT e.s AS node FROM e
-            JOIN a{i} x ON x.node = e.s
-            JOIN a{i} y ON y.node = e.d
-            GROUP BY e.s HAVING COUNT(*) >= {KCORE_K}
+            SELECT e.src AS node FROM e
+            JOIN a{i} x ON x.node = e.src
+            JOIN a{i} y ON y.node = e.dst
+            GROUP BY e.src HAVING COUNT(*) >= {KCORE_K}
         )"""
         )
     h, p = KCORE_ROUNDS, KCORE_ROUNDS - 1
@@ -1064,10 +996,10 @@ def _duck_kcore_oracle() -> str:
                     AS BIGINT) AS n_removed_last
     ),
     cd AS (
-        SELECT e.s AS node, CAST(COUNT(*) AS BIGINT) AS core_deg FROM e
-        JOIN a{h} x ON x.node = e.s
-        JOIN a{h} y ON y.node = e.d
-        GROUP BY e.s
+        SELECT e.src AS node, CAST(COUNT(*) AS BIGINT) AS core_deg FROM e
+        JOIN a{h} x ON x.node = e.src
+        JOIN a{h} y ON y.node = e.dst
+        GROUP BY e.src
     )
     SELECT CASE WHEN node % 2 = 0 THEN 'part' ELSE 'supplier' END AS kind,
            CAST(COUNT(*) AS BIGINT)       AS n_nodes,
@@ -1104,51 +1036,41 @@ def graph_kcore(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataFram
     Scale: per round, the survivor set meets the edge frame through TWO
     hash equi-joins (src- and dst-membership) and one groupBy(src) count
     — linear in surviving edges, and the frame only shrinks.  The alive
-    frame is referenced twice per round, so rounds are LOCAL-CHECKPOINTED
-    with tracked ids released on the result handle (the CC/SSSP lineage
-    discipline).  Peeling needs O(peel-depth) rounds, not O(diameter);
-    the audit column makes an under-iterated run visible."""
-    li = load_table(spark, sf_dir, "lineitem").filter(KCORE_EDGE_FILTER)
-    pairs = li.select(
-        (F.col("l_partkey") * 2).cast("long").alias("s"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("d"),
-    ).distinct()
-    edges = scope.persist(
-        pairs.union(pairs.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .repartition(F.col("s"))
-    )
-    alive = scope.checkpoint(edges.select(F.col("s").alias("node")).distinct())
-    prev = alive
-    for _ in range(KCORE_ROUNDS):
-        prev = alive
-        alive = scope.checkpoint(
-            edges.join(alive.withColumnRenamed("node", "s"), "s")
-            .join(alive.withColumnRenamed("node", "d"), "d")
-            .groupBy("s")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= KCORE_K)
-            .select(F.col("s").alias("node"))
+    frame is referenced twice per round and checkpointed
+    (``_supersteps``).  Peeling needs O(peel-depth) rounds, not
+    O(diameter); the audit column makes an under-iterated run visible."""
+    edges = scope.persist(_edges(spark, sf_dir, KCORE_EDGE_FILTER))
+
+    def core_degree(alive: DataFrame) -> DataFrame:
+        """``core_deg`` of every alive src: its edges to alive nodes."""
+        return (
+            edges.join(alive.withColumnRenamed("node", "src"), "src")
+            .join(alive.withColumnRenamed("node", "dst"), "dst")
+            .groupBy("src")
+            .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
         )
+
+    def peel(alive: DataFrame) -> DataFrame:
+        return (
+            core_degree(alive)
+            .filter(F.col("core_deg") >= KCORE_K)
+            .select(F.col("src").alias("node"))
+        )
+
+    alive, prev = _supersteps(
+        scope, edges.select(F.col("src").alias("node")).distinct(), peel, KCORE_ROUNDS
+    )
     chg = (
         prev.agg(F.count(F.lit(1)).alias("np"))
         .crossJoin(F.broadcast(alive.agg(F.count(F.lit(1)).alias("nh"))))
         .select((F.col("np") - F.col("nh")).cast("long").alias("n_removed_last"))
     )
-    core_deg = (
-        edges.join(alive.withColumnRenamed("node", "s"), "s")
-        .join(alive.withColumnRenamed("node", "d"), "d")
-        .groupBy("s")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
-    )
     out = (
-        core_deg.groupBy(
-            F.when(F.col("s") % 2 == 0, F.lit("part"))
-            .otherwise(F.lit("supplier"))
-            .alias("kind")
-        )
+        core_degree(alive)
+        .groupBy(_kind("src").alias("kind"))
         .agg(
             F.count(F.lit(1)).alias("n_nodes"),
-            F.sum(F.expr("s div 2")).cast("long").alias("sum_key"),
+            F.sum(_key("src")).cast("long").alias("sum_key"),
             F.sum("core_deg").cast("long").alias("sum_core_deg"),
             F.max("core_deg").cast("long").alias("max_core_deg"),
         )
@@ -1177,17 +1099,8 @@ def _duck_lpa_oracle() -> str:
     agg_mode_exact tie-break).  Every label frame is referenced by the
     vote join AND the carry union, so all CTEs are MATERIALIZED."""
     ctes = [
-        f"""pw AS MATERIALIZED (
-            SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT)     AS a,
-                            CAST(l_suppkey * 2 + 1 AS BIGINT) AS b
-            FROM lineitem WHERE {LPA_EDGE_FILTER}
-        )""",
-        """e AS MATERIALIZED (
-            SELECT a AS s, b AS d FROM pw
-            UNION ALL
-            SELECT b AS s, a AS d FROM pw
-        )""",
-        "l0 AS MATERIALIZED (SELECT DISTINCT s AS node, s AS lbl FROM e)",
+        _duck_edges(LPA_EDGE_FILTER),
+        "l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl FROM e)",
     ]
     cur = "l0"
     for i in range(LPA_ROUNDS):
@@ -1196,13 +1109,13 @@ def _duck_lpa_oracle() -> str:
             ctes.append(
                 f"""u{i}{phase} AS MATERIALIZED (
                 SELECT node, nl AS lbl FROM (
-                    SELECT e.d AS node, l.lbl AS nl,
+                    SELECT e.dst AS node, l.lbl AS nl,
                            ROW_NUMBER() OVER (
-                               PARTITION BY e.d
+                               PARTITION BY e.dst
                                ORDER BY COUNT(*) DESC, l.lbl) AS rn
-                    FROM e JOIN {cur} l ON l.node = e.s
-                    WHERE e.d % 2 = {color}
-                    GROUP BY e.d, l.lbl)
+                    FROM e JOIN {cur} l ON l.node = e.src
+                    WHERE e.dst % 2 = {color}
+                    GROUP BY e.dst, l.lbl)
                 WHERE rn = 1
             )"""
             )
@@ -1269,52 +1182,41 @@ def graph_lpa_communities(
     per-node DISTINCT-label frame — partitioned by node (high
     cardinality), bounded by the node's distinct neighbor labels, never
     raw rows.  Label frames are referenced twice per half-step (vote +
-    carry), so rounds are LOCAL-CHECKPOINTED with tracked ids released on
-    the result handle.  Output is the bounded 2-row per-kind summary whose
-    sum_label_key checksums the full label assignment."""
+    carry), so each half-step is checkpointed (``_supersteps`` checkpoints
+    the round, the round checkpoints its first half).  Output is the
+    bounded 2-row per-kind summary whose sum_label_key checksums the full
+    label assignment."""
     from pyspark.sql.window import Window
 
-    li = load_table(spark, sf_dir, "lineitem").filter(LPA_EDGE_FILTER)
-    pairs = li.select(
-        (F.col("l_partkey") * 2).cast("long").alias("s"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("d"),
-    ).distinct()
+    rank = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("nl"))
     # r17 (guide §2.2): input-derived shuffle partitions for the half-step
     # loop — measured at sf0.1 (tools/exp_iter_parts.py, fingerprints
     # identical): 3.77 → 2.70 s warm median.  The mode vote is a COUNT
     # plus a total-order tie-break — partition-count-independent.
     with shuffle_partitions(spark, derived_shuffle_partitions(sf_dir, ["lineitem"])):
-        edges = scope.persist(
-            pairs.union(pairs.select(F.col("d").alias("s"), F.col("s").alias("d")))
-            .repartition(F.col("s"))
+        edges = scope.persist(_edges(spark, sf_dir, LPA_EDGE_FILTER))
+
+        def vote(labels: DataFrame, kind: str) -> DataFrame:
+            """Half-step: every ``kind`` node takes its neighbors' mode label."""
+            votes = (
+                edges.filter(_kind("dst") == kind)
+                .join(labels.select(F.col("node").alias("src"), F.col("lbl").alias("nl")), "src")
+                .groupBy(F.col("dst").alias("node"), "nl")
+                .agg(F.count(F.lit(1)).alias("c"))
+            )
+            upd = (
+                votes.withColumn("rn", F.row_number().over(rank))
+                .filter(F.col("rn") == 1)
+                .select("node", F.col("nl").alias("lbl"))
+            )
+            return upd.union(labels.filter(_kind("node") != kind))
+
+        labels, prev = _supersteps(
+            scope,
+            edges.select(F.col("src").alias("node"), F.col("src").alias("lbl")).distinct(),
+            lambda labels: vote(scope.checkpoint(vote(labels, "part")), "supplier"),
+            LPA_ROUNDS,
         )
-        labels = scope.checkpoint(
-            edges.select(F.col("s").alias("node"), F.col("s").alias("lbl")).distinct()
-        )
-        prev = labels
-        rank = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("nl"))
-        for i in range(LPA_ROUNDS):
-            prev = labels
-            for color in (0, 1):
-                votes = (
-                    edges.filter(F.col("d") % 2 == color)
-                    .join(
-                        labels.select(
-                            F.col("node").alias("s"), F.col("lbl").alias("nl")
-                        ),
-                        "s",
-                    )
-                    .groupBy(F.col("d").alias("node"), "nl")
-                    .agg(F.count(F.lit(1)).alias("c"))
-                )
-                upd = (
-                    votes.withColumn("rn", F.row_number().over(rank))
-                    .filter(F.col("rn") == 1)
-                    .select("node", F.col("nl").alias("lbl"))
-                )
-                labels = scope.checkpoint(
-                    upd.union(labels.filter(F.col("node") % 2 == 1 - color))
-                )
     chg = (
         labels.select("node", "lbl")
         .join(prev.select("node", F.col("lbl").alias("pl")), "node")
@@ -1324,15 +1226,11 @@ def graph_lpa_communities(
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).cast("long").alias("sz"))
     out = (
         labels.join(sizes, "lbl")
-        .groupBy(
-            F.when(F.col("node") % 2 == 0, F.lit("part"))
-            .otherwise(F.lit("supplier"))
-            .alias("kind")
-        )
+        .groupBy(_kind("node").alias("kind"))
         .agg(
             F.count(F.lit(1)).alias("n_nodes"),
             F.countDistinct("lbl").cast("long").alias("n_communities"),
-            F.sum(F.expr("lbl div 2")).cast("long").alias("sum_label_key"),
+            F.sum(_key("lbl")).cast("long").alias("sum_label_key"),
             F.max("sz").cast("long").alias("max_comm_size"),
         )
         .crossJoin(F.broadcast(chg))
@@ -1477,26 +1375,18 @@ def _duck_msf_oracle() -> str:
     unique, so Boruvka's edge set equals Kruskal's (the cross-check
     test's reference)."""
     ctes = [
-        f"""ew AS MATERIALIZED (
-            SELECT LEAST(a, b) AS mu, GREATEST(a, b) AS mx, w FROM (
-                SELECT CAST(l_partkey * 2 AS BIGINT)     AS a,
-                       CAST(l_suppkey * 2 + 1 AS BIGINT) AS b,
-                       MIN(CAST(l_quantity AS BIGINT))   AS w
-                FROM lineitem WHERE {MSF_EDGE_FILTER}
-                GROUP BY 1, 2)
-        )""",
+        _duck_edges(MSF_EDGE_FILTER, weighted=True),
         """ed AS MATERIALIZED (
-            SELECT mu AS u, mx AS v, w, mu, mx FROM ew
-            UNION ALL
-            SELECT mx AS u, mu AS v, w, mu, mx FROM ew
+            SELECT src, dst, w, LEAST(src, dst) AS mu, GREATEST(src, dst) AS mx
+            FROM e
         )""",
-        "l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS lbl FROM ed)",
+        "l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl FROM ed)",
     ]
     for r in range(MSF_ROUNDS):
         ctes.append(
             f"""cand{r} AS MATERIALIZED (
             SELECT a.lbl AS c, b.lbl AS oc, ed.w, ed.mu, ed.mx
-            FROM ed JOIN l{r} a ON a.node = ed.u JOIN l{r} b ON b.node = ed.v
+            FROM ed JOIN l{r} a ON a.node = ed.src JOIN l{r} b ON b.node = ed.dst
             WHERE a.lbl <> b.lbl
         )"""
         )
@@ -1541,8 +1431,8 @@ def _duck_msf_oracle() -> str:
     mst AS MATERIALIZED (SELECT DISTINCT mu, mx, w FROM ({picks})),
     aud AS (
         SELECT CAST((SELECT COUNT(*) FROM ed
-                     JOIN {h} a ON a.node = ed.u
-                     JOIN {h} b ON b.node = ed.v
+                     JOIN {h} a ON a.node = ed.src
+                     JOIN {h} b ON b.node = ed.dst
                      WHERE a.lbl <> b.lbl) / 2 AS BIGINT) AS n_cross_last,
                CAST((SELECT COUNT(DISTINCT lbl) FROM {h}) AS BIGINT)
                    AS n_components,
@@ -1621,28 +1511,23 @@ def graph_msf_boruvka(spark: SparkSession, sf_dir: str, scope: QueryScope) -> Da
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 
-    li = load_table(spark, sf_dir, "lineitem").filter(MSF_EDGE_FILTER)
-    ew = (
-        li.groupBy(
-            (F.col("l_partkey") * 2).cast("long").alias("a"),
-            (F.col("l_suppkey") * 2 + 1).cast("long").alias("b"),
-        )
-        .agg(F.min(F.col("l_quantity").cast("long")).alias("w"))
-        .select(
-            F.least("a", "b").alias("mu"), F.greatest("a", "b").alias("mx"), "w"
-        )
-    )
     ed = scope.persist(
-        ew.select(F.col("mu").alias("u"), F.col("mx").alias("v"), "w", "mu", "mx")
-        .union(
-            ew.select(
-                F.col("mx").alias("u"), F.col("mu").alias("v"), "w", "mu", "mx"
-            )
+        _edges(spark, sf_dir, MSF_EDGE_FILTER, weighted=True).select(
+            "src", "dst", "w",
+            F.least("src", "dst").alias("mu"), F.greatest("src", "dst").alias("mx"),
         )
-        .repartition(F.col("u"))
     )
+
+    def cross(l: DataFrame) -> DataFrame:
+        """Edges whose endpoints carry different labels ``c`` != ``oc``."""
+        return (
+            ed.join(l.select(F.col("node").alias("src"), F.col("lbl").alias("c")), "src")
+            .join(l.select(F.col("node").alias("dst"), F.col("lbl").alias("oc")), "dst")
+            .filter(F.col("c") != F.col("oc"))
+        )
+
     l = ckpt(
-        ed.select(F.col("u").alias("node")).distinct().select(
+        ed.select(F.col("src").alias("node")).distinct().select(
             "node", F.col("node").alias("lbl")
         ),
         "l0",
@@ -1650,14 +1535,7 @@ def graph_msf_boruvka(spark: SparkSession, sf_dir: str, scope: QueryScope) -> Da
     rank = Window.partitionBy("c").orderBy("w", "mu", "mx")
     msts = []
     for r in range(MSF_ROUNDS):
-        cand = (
-            ed.join(l.select(F.col("node").alias("u"), F.col("lbl").alias("c")), "u")
-            .join(
-                l.select(F.col("node").alias("v"), F.col("lbl").alias("oc")), "v"
-            )
-            .filter(F.col("c") != F.col("oc"))
-            .select("c", "oc", "w", "mu", "mx")
-        )
+        cand = cross(l).select("c", "oc", "w", "mu", "mx")
         pick = ckpt(
             cand.withColumn("rn", F.row_number().over(rank))
             .filter(F.col("rn") == 1)
@@ -1719,12 +1597,7 @@ def graph_msf_boruvka(spark: SparkSession, sf_dir: str, scope: QueryScope) -> Da
             f"!= n_nodes={n_nodes_v} - n_components={n_comp_v} — merge-path "
             f"depth exceeded the 2^{MSF_JUMPS} pointer-jump budget"
         )
-    aud = (
-        ed.join(l.select(F.col("node").alias("u"), F.col("lbl").alias("c")), "u")
-        .join(l.select(F.col("node").alias("v"), F.col("lbl").alias("oc")), "v")
-        .filter(F.col("c") != F.col("oc"))
-        .agg((F.count(F.lit(1)) / 2).cast("long").alias("n_cross_last"))
-    )
+    aud = cross(l).agg((F.count(F.lit(1)) / 2).cast("long").alias("n_cross_last"))
     nstats = l.agg(
         F.countDistinct("lbl").cast("long").alias("n_components"),
         F.count(F.lit(1)).cast("long").alias("n_nodes"),
@@ -1735,8 +1608,8 @@ def graph_msf_boruvka(spark: SparkSession, sf_dir: str, scope: QueryScope) -> Da
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_edges"),
             F.sum("w").cast("long").alias("sum_w"),
-            F.sum(F.expr("mu div 2")).cast("long").alias("sum_lo_key"),
-            F.sum(F.expr("mx div 2")).cast("long").alias("sum_hi_key"),
+            F.sum(_key("mu")).cast("long").alias("sum_lo_key"),
+            F.sum(_key("mx")).cast("long").alias("sum_hi_key"),
         )
         .crossJoin(F.broadcast(aud))
         .select(

@@ -22,8 +22,10 @@ Complete mode here is the bounded-replay test harness shape, not the
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
+import shutil
 import sys
 import tempfile
 import uuid
@@ -33,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_net_spark.queries import query
 from flink_net_spark.session import env_positive_int
+from flink_net_spark.sinks import UpsertSink, run_to_completion
 from flink_net_spark.sources import replay_table_as_stream
 from flink_net_spark.streaming import session, tumbling, with_bounded_out_of_orderness
 from flink_net_spark.tables import QueryScope, scoped, shuffle_partitions
@@ -123,7 +126,6 @@ def _stage_dir(sf_dir: str, name: str, src: str | list[str] = "events") -> str:
     # match the sibling glob and used to strand /tmp.
     import glob as _glob
     import re as _re
-    import shutil as _shutil
     import time as _time
 
     cutoff = _time.time() - _STAGE_PRUNE_GRACE_SEC
@@ -138,10 +140,10 @@ def _stage_dir(sf_dir: str, name: str, src: str | list[str] = "events") -> str:
         os.path.join(tempfile.gettempdir(), f"fns_stage_{base}_*")
     ):
         if old != path and _aged(old):
-            _shutil.rmtree(old, ignore_errors=True)
+            shutil.rmtree(old, ignore_errors=True)
     for old in _glob.glob(os.path.join(tempfile.gettempdir(), "fns_stage_*")):
         if _re.fullmatch(r"fns_stage_[0-9a-f]{12}", os.path.basename(old)) and _aged(old):
-            _shutil.rmtree(old, ignore_errors=True)
+            shutil.rmtree(old, ignore_errors=True)
     return path
 
 
@@ -161,22 +163,27 @@ def _run_stream(df: DataFrame, mode: str = "complete") -> DataFrame:
     first batch) and the session conf is restored after the drain — batch
     post-processing is unaffected.  At real scale this knob is sized to
     state volume, not left at the session default.
+
+    The drain's checkpoint dir and the sink's temp view are removed before
+    returning: the bounded replay never resumes, and the returned frame
+    keeps the drained rows alive by itself.
     """
     spark = df.sparkSession
     table = f"fns_mem_{uuid.uuid4().hex[:10]}"
     ckpt = tempfile.mkdtemp(prefix="fns_ckpt_")
-    with shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(table)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(30)
-    return spark.table(table)
+    try:
+        with shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
+            run_to_completion(
+                df.writeStream.format("memory")
+                .queryName(table)
+                .outputMode(mode)
+                .option("checkpointLocation", ckpt)
+            )
+        # the frame's plan holds the sink's rows, not the view or the dir
+        return spark.table(table)
+    finally:
+        spark.catalog.dropTempView(table)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -762,8 +769,6 @@ def _stage_punctuated_stream(
     file-stream delivery order aligned with event time, the arrival shape a
     punctuated source produces (markers interleaved with in-order data,
     WatermarkManager.cs:108-141)."""
-    import shutil
-
     from pyspark.sql.window import Window
 
     from flink_net_spark.tables import ensure_read_confs, load_table
@@ -867,7 +872,10 @@ def stream_punctuated_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id
     """,
 )
-def stream_cdc_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scoped
+def stream_cdc_upsert_snapshot(
+    spark: SparkSession, sf_dir: str, scope: QueryScope
+) -> DataFrame:
     """CDC materialization end-to-end: the event stream is treated as a
     keyed changelog (event_id = the LSN), drained through
     ``sinks.UpsertSink`` — per-batch argmax compaction, snapshot merge that
@@ -882,16 +890,19 @@ def stream_cdc_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge is one keyed shuffle against the snapshot (≙ MERGE INTO on a
     Delta/Iceberg table, where only touched files rewrite).
     """
-    from flink_net_spark.sinks import UpsertSink, run_to_completion
-
     ev = _events_stream(spark, sf_dir).select(
         "user_id", "event_id", "event_type", F.col("value")
     )
+    # the published snapshot backs the result: removed on release
     out_dir = tempfile.mkdtemp(prefix="fns_cdc_snap_")
+    scope.on_release(functools.partial(shutil.rmtree, out_dir, True))
     ckpt = tempfile.mkdtemp(prefix="fns_cdc_ckpt_")
     sink = UpsertSink(out_dir, ("user_id",), "event_id")
-    with shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
-        run_to_completion(sink.writer(ev, ckpt))
+    try:
+        with shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
+            run_to_completion(sink.writer(ev, ckpt))
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return (
         sink.snapshot(spark)
         .select(
@@ -1043,9 +1054,7 @@ def _stage_late_stream(spark: SparkSession, sf_dir: str, stage_dir: str) -> None
         ).parquet(tmp)
         part = next(f for f in sorted(os.listdir(tmp)) if f.startswith("part-"))
         os.replace(os.path.join(tmp, part), os.path.join(stage_dir, f"chunk_{i:02d}.parquet"))
-        import shutil as _sh
-
-        _sh.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
     with open(marker, "w") as f:
         f.write("ok")
 
@@ -1136,9 +1145,7 @@ def _stage_ordered_stream(spark: SparkSession, sf_dir: str, stage_dir: str) -> N
         ).parquet(tmp)
         part = next(f for f in sorted(os.listdir(tmp)) if f.startswith("part-"))
         os.replace(os.path.join(tmp, part), os.path.join(stage_dir, f"chunk_{i:02d}.parquet"))
-        import shutil as _sh
-
-        _sh.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
     with open(marker, "w") as f:
         f.write("ok")
 

@@ -248,8 +248,8 @@ def q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     first so AQE sizes it for a runtime broadcast if small enough.
 
     Plan stability (round-4 verdict #2 — 2.3× wall-time spread): diagnosed
-    via 6 back-to-back executions capturing the AQE *final* plan each time
-    (tools/diag_q9.py): the physical strategy never flips — every run's
+    via 6 back-to-back executions capturing the AQE *final* plan each
+    time: the physical strategy never flips — every run's
     final plan is 4× BroadcastHashJoin (part/supplier/orders/nation all
     under the 10 MB threshold at bench SF) — while wall time decays
     monotonically 5.9→1.5→1.2→1.1→0.9→0.7 s.  The spread is JVM JIT/codegen

@@ -134,6 +134,34 @@ def test_msf_ckpt_dir_cleaned_on_handle_drop(spark):
     assert not after, f"ckpt dir(s) leaked after handle drop: {after}"
 
 
+def test_drains_leave_no_temp_dirs_or_sink_views(spark, tmp_path, monkeypatch):
+    """A bounded stream drain removes its checkpoint dir and memory-sink
+    view, the CDC drain its checkpoint and (on release) its snapshot dir,
+    and MSF its parquet rounds: after collect + release only the reusable
+    fns_stage_* replay staging is left in the temp dir."""
+    import tempfile
+
+    from flink_net_spark.queries import QUERIES
+    from flink_net_spark.tables import release_persisted
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in (
+        "stream_window_tumbling_hourly",
+        "stream_cdc_upsert_snapshot",
+        "graph_msf_boruvka",
+    ):
+        df = QUERIES[name](spark, SF_DIR)
+        assert df.collect(), name
+        release_persisted(df)
+    left = sorted(
+        p.name for p in tmp_path.iterdir()
+        if p.name.startswith("fns_") and not p.name.startswith("fns_stage_")
+    )
+    assert left == [], f"temp entries leaked: {left}"
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("fns_mem_")]
+    assert views == [], f"memory-sink views leaked: {views}"
+
+
 def test_builder_that_raises_leaves_nothing_held(spark):
     """A scoped builder that fails after persisting and checkpointing
     releases both before the error propagates — no hand-written cleanup."""

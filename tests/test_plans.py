@@ -402,7 +402,7 @@ def test_q9_final_plan_all_broadcast_and_stable(spark):
     """q9's five-table join must resolve to broadcast hash joins at test SF
     and the AQE FINAL plan (isFinalPlan=true after execution) must pick the
     same strategy on consecutive runs — the round-4 verdict flagged a 2.3×
-    wall spread on q9; diagnosis (tools/diag_q9.py, q9 docstring) showed the
+    wall spread on q9; the diagnosis recorded in the q9 docstring showed the
     plan is stable and the spread was codegen warm-up, so this pins the
     plan half of that conclusion against future regressions."""
     import re
