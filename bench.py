@@ -1,15 +1,17 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints EXACTLY ONE compact JSON line (< ~1.4 kB) to stdout as the FINAL
-line — the driver records a bounded tail of stdout, and round 4's ~5.6 kB
-line fell off that window (BENCH_r04.json ``parsed: null``).  The compact
-line carries the headline total, both streaming probe rates, per-FAMILY
-wall-time rollups, the scale-smoke + shuffle-audit violation counts, and a
-one-line noise-aware comparison verdict vs the previous round.
+Prints EXACTLY ONE compact JSON line (at most 1950 chars) to stdout as the
+FINAL line — the driver records a bounded tail of stdout, and round 4's
+~5.6 kB line fell off that window (BENCH_r04.json ``parsed: null``).  The
+line has a fixed schema (``compact_line``): the headline total, the pinned
+per-query medians, per-FAMILY wall-time rollups, both streaming probe
+rates, the scale-smoke + shuffle-audit violation counts, and the
+noise-aware comparison verdict vs the previous round.
 
-Everything per-query — medians, min/max spreads, row counts, scale-smoke
-ratios, measured shuffle/spill bytes — goes to the sidecar
+Everything per-query — medians, min/max spreads, build-vs-collect split,
+row counts, scale-smoke ratios, measured shuffle/spill bytes — goes to the
+sidecar
 ``bench_out/BENCH_DETAIL.json`` (committed per round as bench_out/r{N}.json)
 and is mirrored to stderr.  ``tools/bench_compare.py`` diffs two sidecars
 and flags only moves outside the recorded noise envelope.
@@ -745,23 +747,6 @@ def stage_multifile(spark, sf_dir: str) -> str:
     return out
 
 
-def _disk_bytes(sf_dir: str, tables: list[str]) -> int:
-    from flink_net_spark.tables import table_path
-
-    total = 0
-    for t in tables:
-        p = table_path(sf_dir, t)
-        if os.path.isdir(p):
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _d, files in os.walk(p)
-                for f in files
-            )
-        elif os.path.exists(p):
-            total += os.path.getsize(p)
-    return total
-
-
 def _sf_from_dir(d: str) -> float:
     base = os.path.basename(d.rstrip("/"))
     try:
@@ -805,8 +790,12 @@ def calibration_probe(spark, reps: int = 5) -> dict:
 def time_queries(spark, queries, names, sf_dir, reps=REPS, tag=""):
     """Warm once (same collect plan as the timed reps — a count() warm-up
     compiles different codegen and the first rep then pays JIT, q9 lesson),
-    then time fn()+collect ``reps`` times; return (medians, spread, rows)."""
-    timings, spread, rowcounts = {}, {}, {}
+    then time fn()+collect ``reps`` times; return (medians, spread, rows,
+    build_collect).  ``build_collect`` is each query's [median fn() build
+    seconds, median collect seconds] over the same reps — the split of
+    the timed unit between the builder body (planning, eager checkpoints,
+    stream drains) and execution of the returned plan."""
+    timings, spread, rowcounts, build_collect = {}, {}, {}, {}
     for name in names:
         fn = queries.get(name)
         if fn is None:
@@ -823,17 +812,22 @@ def time_queries(spark, queries, names, sf_dir, reps=REPS, tag=""):
         # bytes were byte-identical).
         handles = [fn(spark, sf_dir)]
         handles[0].collect()  # warm: codegen of the exact plan, scans
-        runs = []
+        runs, builds, collects = [], [], []
         for _ in range(reps):
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
+            t1 = time.perf_counter()
             n = len(df.collect())
-            runs.append(time.perf_counter() - t0)
+            t2 = time.perf_counter()
+            runs.append(t2 - t0)
+            builds.append(t1 - t0)
+            collects.append(t2 - t1)
             handles.append(df)
         del handles
         timings[name] = round(_median(runs), 4)
         spread[name] = [round(min(runs), 4), round(max(runs), 4)]
         rowcounts[name] = n
+        build_collect[name] = [round(_median(builds), 4), round(_median(collects), 4)]
         log(
             f"[bench]{tag} {name}: median {timings[name]:.3f}s "
             f"(spread {spread[name][0]:.3f}-{spread[name][1]:.3f}, {n} rows)"
@@ -845,7 +839,7 @@ def time_queries(spark, queries, names, sf_dir, reps=REPS, tag=""):
         # a later query's persist thrashes on eviction (observed: the
         # text_bigram_nll 1.1s→8.2s bimodality in the null A/B's session B).
         spark.catalog.clearCache()
-    return timings, spread, rowcounts
+    return timings, spread, rowcounts, build_collect
 
 
 def _affine_perm(r: int) -> str:
@@ -1033,70 +1027,53 @@ def _smoke_summary(section: dict) -> dict:
     return {
         "n": len(section),
         "violations": len(violations),
-        "bad": violations[:6],
+        "bad": violations[:_LINE_NAME_CAP],
         "worst_ratio": max(ratios) if ratios else None,
     }
 
 
 def shuffle_audit(spark, queries, sf_dir: str) -> dict:
-    """Measure shuffle/spill bytes per audited query (one extra execution
-    each, already warm from the timing pass) and check the per-query
-    shuffle_write/input bound.  See SHUFFLE_AUDIT."""
+    """Measure shuffle/spill bytes per audited query and check the
+    per-query shuffle_write/input bound.  Two passes, one accounting: the
+    single-file SHUFFLE_AUDIT rows run cold (one extra execution each),
+    the MULTIFILE_AUDIT rows (``<name>@mf``) run warm against the 32-file
+    staged copy.  See SHUFFLE_AUDIT."""
     from flink_net_spark.metrics import measure_job_metrics
+    from flink_net_spark.tables import table_disk_bytes
 
     section: dict[str, dict] = {}
-    for name, (tables, bound) in SHUFFLE_AUDIT.items():
-        fn = queries.get(name)
-        if fn is None:
-            continue
-        try:
-            m, _ = measure_job_metrics(
-                spark, lambda: fn(spark, sf_dir).collect(), group=f"fns_shuf_{name}"
-            )
-            rec = m.as_dict()
-            disk = _disk_bytes(sf_dir, tables)
-            ratio = m.shuffle_write_bytes / disk if disk else None
-            rec["disk_input"] = disk
-            rec["disk_ratio"] = round(ratio, 4) if ratio is not None else None
-            rec["bound"] = bound
-            rec["ok"] = (
-                m.disk_spill_bytes == 0
-                and (bound is None or (ratio is not None and ratio <= bound))
-            )
-        except Exception as ex:  # pragma: no cover
-            rec = {"err": f"{type(ex).__name__}: {str(ex)[:200]}", "ok": False}
-        section[name] = rec
-        log(f"[bench][shuffle] {name}: {rec}")
-        spark.catalog.clearCache()  # same pool hygiene as time_queries
-
-    # real-layout pass: same accounting against the 32-file staged copy
-    mf_dir = stage_multifile(spark, sf_dir)
-    for name, (tables, bound) in MULTIFILE_AUDIT.items():
-        fn = queries.get(name)
-        if fn is None:
-            continue
-        try:
-            warm = fn(spark, mf_dir)  # hold the handle: scoped caches stay
-            warm.collect()           # warm through the measured run below
-            m, _ = measure_job_metrics(
-                spark, lambda: fn(spark, mf_dir).collect(), group=f"fns_shufmf_{name}"
-            )
-            del warm
-            rec = m.as_dict()
-            disk = _disk_bytes(mf_dir, tables)
-            ratio = m.shuffle_write_bytes / disk if disk else None
-            rec["disk_input"] = disk
-            rec["disk_ratio"] = round(ratio, 4) if ratio is not None else None
-            rec["bound"] = bound
-            rec["ok"] = (
-                m.disk_spill_bytes == 0
-                and (bound is None or (ratio is not None and ratio <= bound))
-            )
-        except Exception as ex:  # pragma: no cover
-            rec = {"err": f"{type(ex).__name__}: {str(ex)[:200]}", "ok": False}
-        section[name + "@mf"] = rec
-        log(f"[bench][shuffle] {name}@mf: {rec}")
-        spark.catalog.clearCache()  # same pool hygiene as time_queries
+    for audit, suffix in ((SHUFFLE_AUDIT, ""), (MULTIFILE_AUDIT, "@mf")):
+        d = stage_multifile(spark, sf_dir) if suffix else sf_dir
+        for name, (tables, bound) in audit.items():
+            fn = queries.get(name)
+            if fn is None:
+                continue
+            try:
+                # real layout: hold a warm handle so scoped caches stay warm
+                # through the measured run
+                warm = fn(spark, d) if suffix else None
+                if warm is not None:
+                    warm.collect()
+                m, _ = measure_job_metrics(
+                    spark, lambda: fn(spark, d).collect(),
+                    group=f"fns_shuf{'mf' if suffix else ''}_{name}",
+                )
+                del warm
+                rec = m.as_dict()
+                disk = sum(table_disk_bytes(d, t) for t in tables)
+                ratio = m.shuffle_write_bytes / disk if disk else None
+                rec["disk_input"] = disk
+                rec["disk_ratio"] = round(ratio, 4) if ratio is not None else None
+                rec["bound"] = bound
+                rec["ok"] = (
+                    m.disk_spill_bytes == 0
+                    and (bound is None or (ratio is not None and ratio <= bound))
+                )
+            except Exception as ex:  # pragma: no cover
+                rec = {"err": f"{type(ex).__name__}: {str(ex)[:200]}", "ok": False}
+            section[name + suffix] = rec
+            log(f"[bench][shuffle] {name}{suffix}: {rec}")
+            spark.catalog.clearCache()  # same pool hygiene as time_queries
     return section
 
 
@@ -1154,135 +1131,18 @@ def adjudication_verdict(
     return "persists"
 
 
-def _solo_measure(spark, fn) -> tuple[list[float], float]:
-    """The solo re-measure unit shared by suspect adjudication and anchor
-    classification: clearCache, one discarded warm, median of 3 timed reps
-    of the same fn()+collect unit time_queries runs."""
-    spark.catalog.clearCache()
-    handles = [fn(spark, SF_DIR)]
-    handles[0].collect()  # discarded warm (codegen + scans)
-    runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        df = fn(spark, SF_DIR)
-        df.collect()
-        runs.append(round(time.perf_counter() - t0, 4))
-        handles.append(df)
-    del handles
-    spark.catalog.clearCache()
-    return runs, _median(runs)
-
-
-def pick_anchors(
-    suspect: str, compare_rows: list[dict], prev_hashes: dict,
-    src_hashes: dict, n: int = 2,
-) -> list[dict]:
-    """Same-code anchor rows for classifying a `persists` verdict: compare
-    rows that sit WITHIN the noise envelope (not themselves flagged), whose
-    source fingerprint is unchanged, closest to the suspect's old median in
-    runtime class (|log old/old_suspect| — JIT/page-cache drift scales with
-    absolute time, so a 3 s suspect needs second-scale anchors, not 0.2 s
-    micro-queries)."""
-    import math
-
-    srow = next((r for r in compare_rows if r["query"] == suspect), None)
-    if srow is None or not srow.get("old"):
-        return []
-    cands = [
-        r
-        for r in compare_rows
-        if r["query"] != suspect
-        and r.get("status") == "within-noise"
-        and r.get("old")
-        and prev_hashes.get(r["query"])
-        and prev_hashes.get(r["query"]) == src_hashes.get(r["query"])
-    ]
-    cands.sort(key=lambda r: abs(math.log(r["old"] / srow["old"])))
-    return cands[:n]
-
-
-def classify_persist(
-    spark, queries, rec: dict, anchors: list[dict], session_factor: float
-) -> None:
-    """Third adjudication stage (VERDICT r12 #3 — the Addendum-2 calibrated
-    anchor-drift check, run automatically): solo re-measure the same-code
-    anchors exactly like the suspect and compare drifts.  If the suspect's
-    solo-normalized ratio is within SUSPECT_THRESHOLD of the anchors'
-    median (bit-identical source drifting the same way), the move is the
-    box/session, not this query → ``persists-box``; otherwise the residual
-    drift is query-specific → ``persists-query``.  No anchors available →
-    ``persists-unclassified`` (still terminal, but named)."""
-    from tools.bench_compare import null_thresholds
-
-    suspect_thr = null_thresholds()[0]
-    arecs = []
-    for a in anchors:
-        fn = queries.get(a["query"])
-        if fn is None:
-            continue
-        runs, solo = _solo_measure(spark, fn)
-        arecs.append(
-            {
-                "query": a["query"],
-                "old": a["old"],
-                "solo_runs": runs,
-                "solo_median": solo,
-                "solo_norm": round((solo / a["old"]) / session_factor, 3),
-            }
-        )
-    rec["anchors"] = arecs
-    if not arecs or not rec.get("solo_norm"):
-        rec["verdict"] = "persists-unclassified"
-        return
-    anchor_norm = _median([a["solo_norm"] for a in arecs])
-    rec["anchor_norm"] = anchor_norm
-    residual = rec["solo_norm"] / anchor_norm if anchor_norm else None
-    rec["residual_vs_anchors"] = round(residual, 3) if residual else None
-    rec["verdict"] = (
-        "persists-box"
-        if residual is not None and residual <= suspect_thr
-        else "persists-query"
-    )
-
-
-def _plan_cost_decomposition(spark, fn, rec: dict) -> None:
-    """For a persists-query verdict, record how much of the solo median is
-    EXECUTION vs per-plan fixed cost (Catalyst analysis/codegen that the
-    fn()+collect unit re-pays every rep): re-collect on the SAME handle
-    runs the already-planned query, so recollect/solo is the execution
-    fraction.  Round-13 calibration: HOF/expression-heavy queries measured
-    93-97% plan cost (text_word_entropy 0.98 s fresh vs 0.08 s re-collect;
-    dedup_embedding_ann 1.80 vs 0.06; sim_ann_ivfpq pre-fix 1.3 vs 0.04),
-    which is why they drift away from join-shaped anchors when driver JIT
-    state moves — a low exec_frac says the drift lives in the driver, not
-    the data path."""
-    try:
-        df = fn(spark, SF_DIR)
-        df.collect()
-        t0 = time.perf_counter()
-        df.collect()
-        rec["recollect_sec"] = round(time.perf_counter() - t0, 4)
-        rec["exec_frac"] = (
-            round(rec["recollect_sec"] / rec["solo_median"], 3)
-            if rec.get("solo_median")
-            else None
-        )
-        del df
-        spark.catalog.clearCache()
-    except Exception:  # pragma: no cover - decomposition is best-effort
-        rec["exec_frac"] = None
-
-
 def adjudicate_suspects(
     spark, queries, compare_rows: list[dict], prev_detail: dict,
     session_factor: float, src_hashes: dict[str, str], limit: int = 16,
 ) -> list[dict]:
     """Auto-adjudicate every suspect/REGRESSION compare row whose query
     source is unchanged vs the previous sidecar (VERDICT r10 #3): solo
-    re-measure (clearCache, 1 discarded warm, median of 3 timed reps of
-    the same fn()+collect unit as time_queries) and emit a machine verdict
-    row.  Queries whose source DID change are left to the human diff —
-    the gate only replaces the noise-vs-real argument, not code review."""
+    re-measure through time_queries (one discarded warm, median of 3 timed
+    reps of the same fn()+collect unit; every earlier bench stage leaves the
+    cache cleared) and emit a machine verdict row.  ``persists`` is terminal: the drift survived
+    the solo re-measure on unchanged source and needs a named cause.
+    Queries whose source DID change are left to the human diff — the gate
+    only replaces the noise-vs-real argument, not code review."""
     prev_hashes = prev_detail.get("query_src_hash", {})
     flagged = [
         r for r in compare_rows if r.get("status") in ("suspect", "REGRESSION")
@@ -1317,8 +1177,12 @@ def adjudicate_suspects(
             rec["verdict"] = "source-changed"
             out.append(rec)
             continue
-        runs, solo = _solo_measure(spark, fn)
-        rec["solo_runs"] = runs
+        timing, spread, _rows, _split = time_queries(
+            spark, {name: fn}, [name], SF_DIR, reps=3, tag="[adjudicate]"
+        )
+        solo = timing[name]
+        # with 3 reps, (min, median, max) are the timed runs, sorted
+        rec["solo_runs"] = [spread[name][0], solo, spread[name][1]]
         rec["solo_median"] = solo
         rec["solo_norm"] = (
             round((solo / r["old"]) / session_factor, 3) if r["old"] else None
@@ -1326,154 +1190,20 @@ def adjudicate_suspects(
         rec["verdict"] = adjudication_verdict(
             r["old"], r["old_spread"][1], solo, session_factor
         )
-        if rec["verdict"] == "persists":
-            # VERDICT r12 #3: `persists` is no longer terminal — classify
-            # it against same-code anchors so the compare never ships an
-            # unclassified persisting drift.
-            anchors = pick_anchors(name, compare_rows, prev_hashes, src_hashes)
-            classify_persist(spark, queries, rec, anchors, session_factor)
-            if rec["verdict"] == "persists-query":
-                _plan_cost_decomposition(spark, fn, rec)
         out.append(rec)
         log(f"[bench][adjudicate] {name}: {rec}")
     return out
-
-
-def exec_frac_panel(spark, queries, timings: dict, top_n: int = 10) -> dict:
-    """Proactive analysis-vs-execution decomposition for the TOP-N most
-    expensive headline queries (VERDICT r13 #4).  The ivfpq lesson: per-plan
-    Catalyst fixed cost tracks driver JIT state and masquerades as
-    regression — a fresh fn()+collect pays analysis+codegen+execution,
-    while a re-collect on the SAME handle pays execution only, so
-    recollect/fresh is the execution fraction.  Emitting it every round
-    for the panel's heavy hitters catches the next driver-side drift
-    before a gate has to flag it.
-
-    Caveat recorded per row (round-14 review): for queries whose result
-    handle pins persisted/checkpointed intermediates (``scoped`` true),
-    the re-collect replays those caches, so exec_frac there reads the
-    CACHE-REPLAY fraction — still a stable per-query baseline to diff
-    round-over-round, but not a pure analysis/execution split."""
-    from flink_net_spark.tables import release_persisted
-
-    out: dict[str, dict] = {}
-    for name in sorted(timings, key=timings.get, reverse=True)[:top_n]:
-        fn = queries.get(name)
-        if fn is None:
-            continue
-        try:
-            # r15: BUILD (query-fn body — eager analysis + any checkpoint
-            # planning) timed apart from the first collect.  The r14
-            # verdict read low exec_frac as "analysis-dominated", but for
-            # scoped queries the re-collect replays caches, so fresh-heavy
-            # rows can be EXECUTION-dominated (measured: triangle_count
-            # build 0.7s / first-collect 5.3s, CC build 3.9s / 0.4s) —
-            # build_sec makes the split explicit instead of inferred.
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            build = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            df.collect()
-            fresh = build + (time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            df.collect()
-            recollect = time.perf_counter() - t0
-            scoped = getattr(df, "_fns_release", None) is not None
-            # release ONLY this query's own handles (r14 ADVICE): a global
-            # clearCache() here evicted SHARED caches still registered in
-            # tables._PLAN_REFS, leaving their refcounts pointing at gone
-            # blocks and forcing recomputation later in the session.
-            release_persisted(df)
-            del df
-            out[name] = {
-                "build_sec": round(build, 4),
-                "fresh_sec": round(fresh, 4),
-                "recollect_sec": round(recollect, 4),
-                "exec_frac": round(recollect / fresh, 3) if fresh else None,
-                "build_frac": round(build / fresh, 3) if fresh else None,
-                "scoped": scoped,
-            }
-        except Exception as ex:  # pragma: no cover - panel is best-effort
-            out[name] = {"err": str(ex)[:80]}
-    return out
-
-
-def _building_round() -> int | None:
-    """The round this bench run records: one past the newest driver-written
-    BENCH_r{N}.json at the repo root (the driver writes it at round END, so
-    while round N+1 is being built the max is N).  None when no driver
-    artifact exists (fresh checkout / unit tests with a synthetic OUT_DIR)."""
-    root = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(root, "BENCH_r*.json"))
-        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(p)))
-    ]
-    return max(rounds) + 1 if rounds else None
-
-
-def xsession_stream_probe(cur_1k: int | None, cur_1m: int | None) -> dict:
-    """Cross-session settled stream rate (VERDICT r12 #7): the per-session
-    settled medians still drifted 3.96–4.77M rec/s across round 12's four
-    recordings (box state), so the number quoted against BASELINE.md is
-    the MEDIAN OF THE LAST 3 SESSIONS' settled medians — this session plus
-    the newest committed same-version sidecars (version-gated exactly like
-    tools/bench_compare.compare_stream: a staging or protocol change makes
-    rates incomparable, so those sidecars are skipped, never mixed in).
-
-    r13 ADVICE fixes: a sidecar counts as a session ONLY if it contributes
-    at least one rate (an empty same-version sidecar used to eat one of
-    the 3 slots), and a sidecar from the round currently being recorded
-    (N >= the building round, i.e. a re-run after this round's own
-    BENCH_DETAIL was committed as r{{N}}.json) is skipped — mixing it in
-    would double-weight the current box state."""
-    from tools.bench_compare import _stream_version
-
-    vals_1k = [cur_1k] if cur_1k else []
-    vals_1m = [cur_1m] if cur_1m else []
-    building = _building_round()
-    # the current session only occupies a slot when it contributed a rate
-    # (round-14 review: same contributes-at-least-one rule as the sidecars)
-    sessions = 1 if (cur_1k or cur_1m) else 0
-    for path in sorted(glob.glob(os.path.join(OUT_DIR, "r*.json")), reverse=True):
-        if sessions >= 3:
-            break
-        m = re.fullmatch(r"r(\d+)\.json", os.path.basename(path))
-        if m and building is not None and int(m.group(1)) >= building:
-            continue
-        try:
-            with open(path) as f:
-                d = json.load(f)
-        except Exception:
-            continue
-        v = _stream_version(d)
-        if (
-            v.get("staging") != STREAM_PROBE_VERSION["staging"]
-            or v.get("protocol") != STREAM_PROBE_VERSION["protocol"]
-        ):
-            continue
-        k1, m1 = d.get("stream_rows_per_sec"), d.get("stream_rows_per_sec_1m_keys")
-        if k1:
-            vals_1k.append(k1)
-        if m1:
-            vals_1m.append(m1)
-        if k1 or m1:
-            sessions += 1
-    return {
-        "stream_1k": _median(vals_1k) if vals_1k else None,
-        "stream_1m": _median(vals_1m) if vals_1m else None,
-        "n_sessions": sessions,
-        "sessions_1k": vals_1k,
-        "sessions_1m": vals_1m,
-    }
 
 
 # Byte budget for the one printed line: the driver records a ~2000-char
 # stdout tail (BENCH_r04.json parsed=null when round 4's 5.6 kB line fell
 # off it); 1950 leaves margin for the trailing newline.
 _COMPACT_LINE_BUDGET = 1950
-# the compare keys the line keeps when it must shed
-_COMPARE_KEPT = ("vs", "reg", "imp", "adj_persist_names")
+# the compare keys the line carries (the full verdict stays in the sidecar);
+# "err" replaces the rest when the compare itself failed
+_LINE_COMPARE_KEYS = ("vs", "reg", "imp", "adj_persist_names", "err")
+# at most this many query names per name list on the line
+_LINE_NAME_CAP = 3
 
 
 def _compact_pin_names() -> list[str]:
@@ -1489,63 +1219,59 @@ def _compact_pin_names() -> list[str]:
         return []
 
 
-def _fit_line(compact: dict, n_queries: int, budget: int = _COMPACT_LINE_BUDGET) -> str:
-    """Serialize the compact line, shedding until it fits ``budget`` (only
-    a ~2000-char stdout tail is kept).  Order: unpinned ``queries``
-    entries (cheapest first); ``compare`` trimmed to its verdict keys;
-    ``families``; pinned names last, cheapest first, logged as a WARN
-    because they are the cross-round per-query contract.  ``qx`` counts
-    the elided entries."""
-    queries = compact["queries"]
-
-    def dump() -> str:
-        compact["qx"] = n_queries - len(queries)
-        return json.dumps(compact, separators=(",", ":"))
-
-    line = dump()
-    pinned = set(_compact_pin_names())
-    for name in sorted(queries, key=queries.get):
-        if len(line) <= budget:
-            break
-        if name not in pinned:
-            del queries[name]
-            line = dump()
-    if len(line) > budget and isinstance(compact.get("compare"), dict):
-        compact["compare"] = {k: v for k, v in compact["compare"].items() if k in _COMPARE_KEPT}
-        line = dump()
-    if len(line) > budget:
-        compact.pop("families", None)
-        line = dump()
-    shed = []
-    while len(line) > budget and queries:
-        name = min(queries, key=queries.get)
-        del queries[name]
-        shed.append(name)
-        line = dump()
-    if shed:
-        log(f"[bench] WARN shed pinned query names: {', '.join(shed)}")
-    return line
-
-
 def _compact_query_map(timings: dict[str, float]) -> tuple[dict[str, float], int]:
     """Per-query medians for the printed line: every pinned name that was
-    measured, plus the most expensive unpinned entries as seed for
-    _fit_line (which trims from the cheapest unpinned end until the whole
-    line fits _COMPACT_LINE_BUDGET).  Values rounded to
-    centiseconds — the full 4-decimal map stays in the detail sidecar."""
+    measured, nothing else, rounded to centiseconds — the full 4-decimal
+    map stays in the detail sidecar.  Returns (map, number elided)."""
     pins = _compact_pin_names()
     missing = [n for n in pins if n not in timings]
     if missing:
         # the panel contract forbids removals/renames — make a violation
         # visible in the driver's stdout tail instead of silently shrinking
         log(f"[bench] WARN pinned queries missing from panel: {missing[:4]}")
-    pinned = [n for n in pins if n in timings]
-    extra = sorted(
-        (n for n in timings if n not in set(pinned)),
-        key=timings.get, reverse=True,
-    )[:16]
-    out = {n: round(timings[n], 2) for n in pinned + extra}
+    out = {n: round(timings[n], 2) for n in pins if n in timings}
     return out, len(timings) - len(out)
+
+
+def compact_line(detail: dict, compare_verdict: dict | None) -> str:
+    """THE one printed line, a fixed-schema projection of the sidecar that
+    fits _COMPACT_LINE_BUDGET by construction: the pinned per-query
+    medians and no other query names, ``families`` always, ``compare``
+    cut to _LINE_COMPARE_KEYS, every name list capped at _LINE_NAME_CAP,
+    and the opt-in ×100 smoke as counts only.  tests/test_bench_compact_line
+    builds the worst case (registry-longest names, 99.99 s medians, 999.99 s
+    family totals) and holds it under the budget.  ``qx`` counts the
+    panel queries whose medians are only in the sidecar."""
+    queries, qx = _compact_query_map(detail["queries"])
+    line = {
+        "metric": detail["metric"],
+        "value": detail["value"],
+        "unit": detail["unit"],
+        "queries": queries,
+        "qx": qx,
+        "sf": detail["sf"],
+        "n_queries": len(detail["queries"]),
+        "reps": detail["reps_per_query"],
+        "families": detail["families"],
+        "rows_per_sec": detail["rows_per_sec"],
+        "stream_rows_per_sec": detail["stream_rows_per_sec"],
+        "stream_rows_per_sec_1m_keys": detail["stream_rows_per_sec_1m_keys"],
+        "stream_spread_pct": [
+            detail["stream_probe_1k"]["spread_pct"],
+            detail["stream_probe_1m"]["spread_pct"],
+        ],
+        "shuffle_audit": _shuffle_summary(detail["shuffle_audit"]),
+        "sf1x10": _smoke_summary(detail["sf1x10"]),
+    }
+    if "sf1x100" in detail:
+        line["sf1x100"] = _smoke_summary(detail["sf1x100"])
+        del line["sf1x100"]["bad"]  # names in the sidecar
+    if compare_verdict is not None:
+        cmp = {k: compare_verdict[k] for k in _LINE_COMPARE_KEYS if k in compare_verdict}
+        if "adj_persist_names" in cmp:
+            cmp["adj_persist_names"] = cmp["adj_persist_names"][:_LINE_NAME_CAP]
+        line["compare"] = cmp
+    return json.dumps(line, separators=(",", ":"))
 
 
 def _load_prev_detail() -> tuple[dict, str] | None:
@@ -1676,7 +1402,9 @@ def main() -> int:
     log(f"[bench] calibration probe: median {calib['median']}s raw {calib['runs']}")
 
     headline = [n for n in HEADLINE if META.get(n, {}).get("scale_safe", True)]
-    timings, spread, rowcounts = time_queries(spark, queries, headline, SF_DIR)
+    timings, spread, rowcounts, build_collect = time_queries(
+        spark, queries, headline, SF_DIR
+    )
 
     shuf = shuffle_audit(spark, queries, SF_DIR)
     sf1x10 = scale_smoke(spark, queries, timings, SF_DIR, 10, SCALE_SMOKE)
@@ -1696,6 +1424,7 @@ def main() -> int:
         "unit": "sec",
         "queries": timings,
         "queries_spread": spread,
+        "queries_build_collect": build_collect,
         "query_rows": rowcounts,
         "calibration_probe": calib,
         "reps_per_query": REPS,
@@ -1710,13 +1439,9 @@ def main() -> int:
         "stream_probe_1m": probe_1m,
         "stream_probe_version": STREAM_PROBE_VERSION,
         "stream_probe_mode": probe_bundle.get("probe_mode"),
-        "stream_probe_xsession": xsession_stream_probe(stream_rps, stream_rps_1m),
         "families": families,
         "shuffle_audit": shuf,
         "sf1x10": sf1x10,
-        # VERDICT r13 #4: per-round analysis-vs-execution split for the
-        # panel's 10 most expensive queries
-        "exec_frac_top10": exec_frac_panel(spark, queries, timings),
     }
     if sf1x100 is not None:
         detail["sf1x100"] = sf1x100
@@ -1750,21 +1475,13 @@ def main() -> int:
                 compare_verdict["adj_noise"] = sum(
                     1 for a in adjs if a["verdict"] == "session-noise"
                 )
-                compare_verdict["adj_persists"] = sum(
-                    1 for a in adjs if a["verdict"].startswith("persists")
-                )
-                compare_verdict["adj_persists_query"] = sum(
-                    1 for a in adjs if a["verdict"] == "persists-query"
-                )
                 # r17 (VERDICT r16 #2): NAME the persisting rows on the
                 # line — the r16 driver run adjudicated adj_persists=1 but
                 # the truncated tail never said WHICH query persisted.
-                persist_names = [
-                    a["query"] for a in adjs
-                    if a["verdict"].startswith("persists")
-                ]
+                persist_names = [a["query"] for a in adjs if a["verdict"] == "persists"]
+                compare_verdict["adj_persists"] = len(persist_names)
                 if persist_names:
-                    compare_verdict["adj_persist_names"] = persist_names[:4]
+                    compare_verdict["adj_persist_names"] = persist_names
         except Exception as ex:  # pragma: no cover
             compare_verdict = {"err": str(ex)[:120]}
 
@@ -1774,50 +1491,13 @@ def main() -> int:
         json.dump(detail, f, indent=1)
     log("[bench] full detail: " + json.dumps(detail))
 
-    # THE one compact stdout line (the driver keeps a bounded stdout tail —
-    # this must stay well under it, per-query detail lives in the sidecar)
-    #
-    # r17 (VERDICT r16 #1): per-query medians now ride the line as a
-    # "queries" map so the driver's PERF builder can populate per_query —
-    # it reads ONLY the printed line, and every previous round's per_query
-    # was {} because this map lived solely in the sidecar.  The full
-    # 112-entry map is ~3 kB and the driver keeps a ~2000-char tail
-    # (round 4's 5.6 kB line fell off: BENCH_r04.json parsed=null), so the
-    # line carries the committed pin list bench_out/COMPACT_QUERIES.txt —
-    # the panel's most expensive entries by the r16 closing medians, FIXED
-    # so cross-round and cross-core-count joins see the same names — plus
-    # whatever further entries fit the byte budget, most expensive first.
-    # Additions-only: no previous round's line had any "queries" entries,
-    # and future rounds must keep emitting at least the pinned names.
-    # "qx" counts elided entries; the sidecar still has all of them.
-    compact_queries, n_elided = _compact_query_map(timings)
-    compact = {
-        "metric": "headline_queries_total_wall_time",
-        "value": total,
-        "unit": "sec",
-        "queries": compact_queries,
-        "qx": n_elided,
-        "sf": _sf_from_dir(SF_DIR),
-        "n_queries": len(timings),
-        "reps": REPS,
-        "families": families,
-        "rows_per_sec": rows_per_sec,
-        "stream_rows_per_sec": stream_rps,
-        "stream_rows_per_sec_1m_keys": stream_rps_1m,
-        "stream_spread_pct": [probe_1k["spread_pct"], probe_1m["spread_pct"]],
-        "stream_xsession": [
-            detail["stream_probe_xsession"]["stream_1k"],
-            detail["stream_probe_xsession"]["stream_1m"],
-        ],
-        "shuffle_audit": _shuffle_summary(shuf),
-        "sf1x10": _smoke_summary(sf1x10),
-        "detail": "bench_out/BENCH_DETAIL.json",
-    }
-    if sf1x100 is not None:
-        compact["sf1x100"] = _smoke_summary(sf1x100)
-    if compare_verdict is not None:
-        compact["compare"] = compare_verdict
-    line = _fit_line(compact, len(timings))
+    # THE one compact stdout line (the driver keeps a bounded stdout tail;
+    # per-query detail lives in the sidecar).  r17 (VERDICT r16 #1): the
+    # driver's PERF builder reads per-query medians from the printed line
+    # only, so the line carries the committed pin list
+    # bench_out/COMPACT_QUERIES.txt — FIXED so cross-round and
+    # cross-core-count joins see the same names, additions-only.
+    line = compact_line(detail, compare_verdict)
     log(f"[bench] compact line: {len(line)} chars")
     print(line)
     return 0

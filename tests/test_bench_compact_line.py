@@ -1,11 +1,11 @@
 """Compact-line per-query map contract (r17, VERDICT r16 #1).
 
 The driver's PERF builder reads per-query medians from the PRINTED line
-only, and records a ~2000-char stdout tail — so the emitted map must (a)
-always contain every pinned name that was measured, (b) fit the byte
-budget after bench._fit_line's shedding pass, and (c) shed unpinned entries first
-(cheapest first) so the pinned set is stable across rounds and across the
-driver's 32-core/8-core runs.
+only, and records a ~2000-char stdout tail — so the line (bench.compact_line)
+must (a) always contain every pinned name that was measured and no other
+query name, so the set is stable across rounds and across the driver's
+32-core/8-core runs, and (b) fit the byte budget by construction: its
+schema is fixed, and the worst case below is held under the budget.
 """
 
 from __future__ import annotations
@@ -38,63 +38,79 @@ def test_compact_map_contains_all_measured_pins():
     assert elided == len(timings) - len(qmap)
 
 
-def test_shed_keeps_pins_and_fits_budget():
-    """With an oversized map, _fit_line sheds unpinned entries first
-    (cheapest first) and the line lands under budget with every pinned
-    name intact."""
+def _detail(timings: dict, smoke_names: list[str], **over) -> dict:
+    d = {
+        "metric": "headline_queries_total_wall_time",
+        "value": round(sum(timings.values()), 4), "unit": "sec",
+        "queries": timings, "sf": 0.1, "reps_per_query": 3,
+        "families": {fam: 999.99 for fam, _ in bench.FAMILY_PATTERNS},
+        "rows_per_sec": 99_999_999, "stream_rows_per_sec": 99_999_999,
+        "stream_rows_per_sec_1m_keys": 99_999_999,
+        "stream_probe_1k": {"spread_pct": 999.9},
+        "stream_probe_1m": {"spread_pct": 999.9},
+        "shuffle_audit": {f"audit_{i}": {"ok": False, "spill": 0} for i in range(116)},
+        "sf1x10": {n: {"err": "boom"} for n in smoke_names},
+    }
+    d["shuffle_audit"]["audit_0"]["spill"] = 9_999_999_999
+    d.update(over)
+    return d
+
+
+def test_compact_line_worst_case_fits_budget():
+    """The line fits by construction: every pin at a 99.99 s median, a
+    full 116-query panel, every family at 999.99 s, every name list filled
+    with the registry's longest names, the opt-in x100 smoke present and
+    every count at its widest — still under the budget, with every pin."""
+    import __spark_entry__ as entry_mod
+
+    longest = sorted(entry_mod.queries(), key=len, reverse=True)
     pins = bench._compact_pin_names()
-    timings = {n: 1.0 + i * 0.01 for i, n in enumerate(pins)}
-    timings.update({f"unpinned_query_with_a_long_name_{i:03d}": 0.2 + i * 0.001
-                    for i in range(60)})
-    compact_queries, n_elided = bench._compact_query_map(timings)
-    compact = {"metric": "headline_queries_total_wall_time", "value": 1.0,
-               "unit": "sec", "queries": compact_queries, "qx": n_elided,
-               "filler": "x" * 700}
-    line = bench._fit_line(compact, len(timings))
-    assert len(line) <= bench._COMPACT_LINE_BUDGET
-    for n in pins:
-        assert n in compact_queries, "shedding removed a pinned name"
+    others = [n for n in longest if n not in pins][: 116 - len(pins)]
+    timings = {n: 99.99 for n in pins + others}
+    smoke = {n: {"err": "boom"} for n in longest[:60]}
+    smoke[longest[70]] = {"ratio_vs_linear": 999.999}
+    detail = _detail(timings, [], sf1x10=smoke, sf1x100=dict(smoke))
+    verdict = {"vs": "r100_baseline_c32.json", "reg": 116, "imp": 116,
+               "adj_persist_names": longest[:16], "n": 116,
+               "session_factor": 1.234, "regressions": longest[:8]}
+    line = bench.compact_line(detail, verdict)
+    assert len(line) <= bench._COMPACT_LINE_BUDGET, len(line)
     parsed = json.loads(line)
-    assert parsed["queries"] == compact_queries
-    assert parsed["qx"] == len(timings) - len(compact_queries)
-
-
-def _pins_only_line(filler: int, compare: dict) -> dict:
-    pins = bench._compact_pin_names()
-    return {"metric": "headline_queries_total_wall_time", "value": 1.0,
-            "queries": {n: 1.0 + i * 0.01 for i, n in enumerate(pins)}, "qx": 0,
-            "families": {"graph": 12.5, "stream": 30.1, "dedup": 20.2},
-            "compare": compare, "filler": "x" * filler}
-
-
-def test_fit_line_trims_compare_before_families_and_warns_on_pins(capsys):
-    """Shed order past the unpinned entries: compare is trimmed to its
-    verdict keys while families survive; only when pins alone overflow are
-    families dropped and pinned names shed, each run logged as a WARN."""
-    verbose = {"vs": "r17", "reg": 2, "imp": 1, "adj_persist_names": ["q9"],
-               "session_factor": 1.1, "notes": "n" * 600}
-    base = len(json.dumps(_pins_only_line(0, {}), separators=(",", ":")))
-    budget = bench._COMPACT_LINE_BUDGET
-
-    # verbose compare overflows; trimming it is enough
-    compact = _pins_only_line(budget - base - 120, dict(verbose))
-    parsed = json.loads(bench._fit_line(compact, len(compact["queries"])))
-    assert parsed["compare"] == {"vs": "r17", "reg": 2, "imp": 1,
-                                 "adj_persist_names": ["q9"]}
+    assert set(parsed["queries"]) == set(pins)
+    assert parsed["qx"] == 116 - len(pins)
     assert "families" in parsed
-    assert set(parsed["queries"]) == set(bench._compact_pin_names())
+
+    # a failed compare carries its (120-char) error instead, still in budget
+    line = bench.compact_line(detail, {"err": "e" * 120})
+    assert len(line) <= bench._COMPACT_LINE_BUDGET, len(line)
+
+
+def test_compact_line_fixed_schema(capsys):
+    """Fixed schema: pins only (no unpinned extras), families always,
+    compare cut to its verdict keys, name lists capped at 3, the x100
+    smoke as counts only; no shed pass, so no shed WARN."""
+    pins = bench._compact_pin_names()
+    timings = {n: 1.0 for n in pins}
+    timings.update({f"zz_extra_{i}": 5.0 for i in range(10)})
+    detail = _detail(timings, [f"bad_{i}" for i in range(6)],
+                     sf1x100={"x": {"err": "boom"}})
+    verdict = {"vs": "r17.json", "n": 112, "session_factor": 0.95,
+               "thr": [1.262, 1.5], "reg": 1, "imp": 2, "suspect": 3,
+               "adj_noise": 1, "adj_persists": 5,
+               "adj_persist_names": ["a", "b", "c", "d", "e"]}
+    parsed = json.loads(bench.compact_line(detail, verdict))
+    assert list(parsed["queries"]) == pins
+    assert parsed["qx"] == 10 and parsed["n_queries"] == len(timings)
+    assert parsed["families"] == detail["families"]
+    assert parsed["compare"] == {"vs": "r17.json", "reg": 1, "imp": 2,
+                                 "adj_persist_names": ["a", "b", "c"]}
+    assert parsed["sf1x10"]["bad"] == ["bad_0", "bad_1", "bad_2"]
+    assert parsed["sf1x10"]["violations"] == 6
+    assert parsed["sf1x100"] == {"n": 1, "violations": 1, "worst_ratio": None}
     assert "WARN" not in capsys.readouterr().err
 
-    # the pins alone overflow: families go, then the cheapest pins, with a WARN
-    compact = _pins_only_line(budget - base + 100, dict(verbose))
-    n_pins = len(compact["queries"])
-    line = bench._fit_line(compact, n_pins)
-    parsed = json.loads(line)
-    assert len(line) <= budget
-    assert "families" not in parsed
-    assert set(parsed["compare"]) == {"vs", "reg", "imp", "adj_persist_names"}
-    shed = sorted(set(bench._compact_pin_names()) - set(parsed["queries"]))
-    assert shed and parsed["qx"] == len(shed)
-    err = capsys.readouterr().err
-    assert "[bench] WARN shed pinned query names:" in err
-    assert all(n in err for n in shed)
+    # a missing pin is still named on stderr
+    del timings[pins[0]]
+    parsed = json.loads(bench.compact_line(detail, None))
+    assert pins[0] not in parsed["queries"] and "compare" not in parsed
+    assert "WARN pinned queries missing from panel" in capsys.readouterr().err

@@ -272,142 +272,40 @@ def _mkrow(name, status="within-noise", old=1.0, new=1.0):
             "old_spread": [old * 0.95, old * 1.05], "norm_ratio": new / old}
 
 
-def test_pick_anchors_nearest_runtime_class_same_code():
-    """Anchor selection (VERDICT r12 #3): only within-noise rows with an
-    unchanged source fingerprint qualify, ranked by runtime-class
-    proximity to the suspect (|log old-ratio|)."""
+def test_adjudicate_persists_is_terminal(monkeypatch):
+    """A suspect whose solo re-measure (time_queries, 3 reps) stays
+    outside the noise envelope on unchanged source ends as a terminal
+    `persists` verdict carrying its solo evidence; a solo that falls back
+    inside is `session-noise`.  Nothing else is re-measured."""
     import bench
 
-    rows = [
-        _mkrow("sus", status="suspect", old=3.0, new=5.4),
-        _mkrow("far_micro", old=0.2),
-        _mkrow("near_a", old=2.8),
-        _mkrow("near_b", old=3.3),
-        _mkrow("changed", old=3.0),          # source changed -> excluded
-        _mkrow("flagged", status="REGRESSION", old=3.1),  # flagged -> excluded
-    ]
-    prev = {n: "h_" + n for n in ("sus", "far_micro", "near_a", "near_b", "flagged")}
-    src = dict(prev)
-    src["changed"] = "different"
-    prev["changed"] = "h_changed"
-    got = [a["query"] for a in bench.pick_anchors("sus", rows, prev, src)]
-    assert got == ["near_a", "near_b"] or got == ["near_b", "near_a"]
-    assert "far_micro" not in got and "changed" not in got and "flagged" not in got
+    solos = {"sus": 3.0, "noisy": 1.02}
+    measured = []
 
+    def fake_time_queries(spark, queries, names, sf_dir, reps, tag):
+        (name,) = names
+        measured.append(name)
+        s = solos[name]
+        return {name: s}, {name: [s - 0.1, s + 0.1]}, {name: 1}, {name: [0.0, s]}
 
-def test_classify_persist_box_vs_query(monkeypatch):
-    """The third adjudication stage: anchors drifting WITH the suspect ->
-    persists-box; anchors steady -> persists-query; no anchors ->
-    persists-unclassified.  Measurement is stubbed so the rule itself is
-    what's under test."""
-    import bench
-
-    solos = {"a1": 1.7, "a2": 1.9, "steady1": 1.0, "steady2": 1.05}
-    monkeypatch.setattr(
-        bench, "_solo_measure",
-        lambda spark, fn: ([solos[fn]] * 3, solos[fn]),
-    )
-    queries = {n: n for n in solos}  # fn IS the name for the stub
-
-    # suspect solo_norm 1.8; anchors at ~1.8 too -> box drift
-    rec = {"query": "sus", "solo_norm": 1.8}
-    anchors = [{"query": "a1", "old": 1.0}, {"query": "a2", "old": 1.0}]
-    bench.classify_persist(None, queries, rec, anchors, 1.0)
-    assert rec["verdict"] == "persists-box"
-    assert rec["anchor_norm"] >= 1.7 and rec["residual_vs_anchors"] <= 1.06
-
-    # same suspect, anchors steady at ~1.0 -> query-specific drift
-    rec = {"query": "sus", "solo_norm": 1.8}
-    anchors = [{"query": "steady1", "old": 1.0}, {"query": "steady2", "old": 1.0}]
-    bench.classify_persist(None, queries, rec, anchors, 1.0)
-    assert rec["verdict"] == "persists-query"
-    assert rec["residual_vs_anchors"] > 1.25
-
-    # no anchors available -> named unclassified, never bare `persists`
-    rec = {"query": "sus", "solo_norm": 1.8}
-    bench.classify_persist(None, queries, rec, [], 1.0)
-    assert rec["verdict"] == "persists-unclassified"
-
-
-def test_adjudicate_runs_anchor_stage_on_persists(monkeypatch):
-    """End-to-end: a suspect whose solo re-measure persists must leave
-    adjudicate_suspects carrying a CLASSIFIED verdict and its anchor
-    evidence rows — BENCH_r13+ compares ship zero bare `persists`."""
-    import bench
-
-    solos = {"sus": 3.0, "anchor1": 1.0, "anchor2": 1.0}
-    monkeypatch.setattr(
-        bench, "_solo_measure",
-        lambda spark, fn: ([solos[fn]] * 3, solos[fn]),
-    )
+    monkeypatch.setattr(bench, "time_queries", fake_time_queries)
     rows = [
         _mkrow("sus", status="suspect", old=1.0, new=3.0),
-        _mkrow("anchor1", old=1.0),
-        _mkrow("anchor2", old=1.0),
+        _mkrow("noisy", status="suspect", old=1.0, new=1.6),
+        _mkrow("steady", old=1.0),
     ]
-    prev = {"query_src_hash": {"sus": "x", "anchor1": "y", "anchor2": "z"}}
-    src = {"sus": "x", "anchor1": "y", "anchor2": "z"}
+    hashes = {"sus": "x", "noisy": "y", "steady": "z"}
     out = bench.adjudicate_suspects(
-        None, {n: n for n in solos}, rows, prev, 1.0, src
+        None, {n: n for n in hashes}, rows, {"query_src_hash": hashes},
+        1.0, dict(hashes),
     )
-    rec = next(r for r in out if r["query"] == "sus")
-    assert rec["verdict"] == "persists-query"
-    assert len(rec["anchors"]) == 2
-    assert all(a["solo_norm"] == 1.0 for a in rec["anchors"])
-
-
-def test_anchor_rows_render_in_markdown():
-    """The compare markdown must carry the anchor evidence under the
-    classified persists row."""
-    from tools.bench_compare import attach_adjudications
-
-    old = detail({"q": 1.0}, {"q": [0.95, 1.05]})
-    new = detail({"q": 1.01}, {"q": [0.99, 1.05]})
-    new["compare"] = {
-        "adjudications": [
-            {
-                "query": "q", "status": "suspect", "old": 1.0,
-                "bench_median": 3.0, "solo_runs": [3.0, 3.0, 3.0],
-                "solo_median": 3.0, "solo_norm": 3.0, "src_unchanged": True,
-                "verdict": "persists-query", "anchor_norm": 1.0,
-                "residual_vs_anchors": 3.0,
-                "anchors": [
-                    {"query": "a1", "old": 1.0, "solo_median": 1.0,
-                     "solo_norm": 1.0, "solo_runs": [1.0] * 3},
-                ],
-            }
-        ]
-    }
-    result = attach_adjudications(compare(old, new), new)
-    md = to_markdown(result)
-    assert "persists-query" in md
-    assert "anchors (norm med" in md and "a1 old 1.00" in md
-
-
-def test_xsession_stream_probe_version_gated(monkeypatch, tmp_path):
-    """VERDICT r12 #7: the cross-session stream rate is the median of the
-    last 3 same-version sessions' settled medians; sidecars from another
-    probe version are skipped (a staging change is a harness change)."""
-    import json
-
-    import bench
-
-    def write(name, rps_1k, rps_1m, version):
-        d = {"stream_rows_per_sec": rps_1k, "stream_rows_per_sec_1m_keys": rps_1m,
-             "stream_probe_version": version}
-        (tmp_path / name).write_text(json.dumps(d))
-
-    cur = bench.STREAM_PROBE_VERSION
-    write("r10.json", 9_999_999, 9_999_999, {"staging": "v1", "protocol": "old"})
-    write("r11.json", 4_000_000, 2_000_000, cur)
-    write("r12.json", 5_000_000, 3_000_000, cur)
-    monkeypatch.setattr(bench, "OUT_DIR", str(tmp_path))
-
-    x = bench.xsession_stream_probe(4_500_000, 2_500_000)
-    assert x["n_sessions"] == 3
-    assert x["stream_1k"] == 4_500_000  # median of (4.5M, 5M, 4M)
-    assert x["stream_1m"] == 2_500_000
-    assert 9_999_999 not in x["sessions_1k"]  # version-break sidecar skipped
+    by = {r["query"]: r for r in out}
+    assert measured == ["sus", "noisy"]
+    assert by["sus"]["verdict"] == "persists"
+    assert by["sus"]["solo_runs"] == [2.9, 3.0, 3.1]
+    assert by["sus"]["solo_norm"] == 3.0
+    assert not any(k.startswith("anchor") for k in by["sus"])
+    assert by["noisy"]["verdict"] == "session-noise"
 
 
 def test_headline_panel_frozen_and_shared_with_previous_round():
@@ -448,7 +346,8 @@ def test_null_thresholds_normalized_with_floors(monkeypatch, tmp_path):
     null = {
         "session_factor_AB": 2.0,
         # normalized ratios: 40 at 1.0 plus a tail (1.45, 1.5, 1.6, 2.0);
-        # with n=44, p90 lands in the 1.0 mass and p98 on the 1.6
+        # with n=44, nearest-rank p90 (rank 40) lands in the 1.0 mass and
+        # p98 (rank ceil(43.12) = 44) on the 2.0
         "ratios": {f"q{i}": 2.0 for i in range(40)}
         | {"t1": 2.9, "t2": 3.0, "t3": 3.2, "t4": 4.0},
     }
@@ -465,66 +364,52 @@ def test_null_thresholds_normalized_with_floors(monkeypatch, tmp_path):
     s, r = bc.null_thresholds()
     # normalized: 100×1.0 + (1.45, 1.5, 1.6, 2.0); p90 of that = 1.0 → floor
     assert s == 1.25
-    # p98 index lands in the tail (1.6) → above the 1.5 floor
-    assert r == 1.6
+    # p98 rank lands in the tail (2.0) → above the 1.5 floor
+    assert r == 2.0
 
     # unreadable artifact → floors
     (tmp_path / "NULL_SPREAD.json").write_text("{broken")
     assert bc.null_thresholds() == (1.25, 1.5)
 
 
-def test_xsession_stream_probe_counts_and_round_guard(monkeypatch, tmp_path):
-    """r13 ADVICE: (a) a same-version sidecar with NO rates must not eat
-    one of the 3 session slots; (b) a sidecar from the round currently
-    being recorded (a mid-round re-run after r{N}.json was committed) is
-    skipped, not double-weighted."""
+def test_null_thresholds_match_committed_artifact():
+    """One percentile definition: the suspect threshold the gate applies
+    is the p90 the committed null artifact states (and the compare
+    markdown cites), floored at SUSPECT_THRESHOLD."""
     import json
+    import os
+
+    import tools.bench_compare as bc
+
+    path = os.path.join(os.path.dirname(__file__), "..", "bench_out", "NULL_SPREAD.json")
+    with open(path) as f:
+        null = json.load(f)
+    assert bc.null_thresholds()[0] == max(bc.SUSPECT_THRESHOLD, null["norm_ratio_p90"])
+
+
+def test_time_queries_records_build_split(spark):
+    """time_queries records, per query, the median fn() build seconds and
+    the median collect seconds of the reps it times: a builder that does
+    its work eagerly reads build-heavy, a lazy plan reads collect-heavy."""
+    import time
 
     import bench
 
-    def write(name, rps_1k, rps_1m, version):
-        d = {"stream_probe_version": version}
-        if rps_1k is not None:
-            d["stream_rows_per_sec"] = rps_1k
-        if rps_1m is not None:
-            d["stream_rows_per_sec_1m_keys"] = rps_1m
-        (tmp_path / name).write_text(json.dumps(d))
+    def q_eager(s, sf_dir):
+        time.sleep(0.2)  # stands in for a stream drain inside the builder
+        return s.range(10).selectExpr("sum(id) AS s")
 
-    cur = bench.STREAM_PROBE_VERSION
-    write("r14.json", 9_000_000, 9_000_000, cur)  # this round's own re-run
-    write("r13.json", None, None, cur)            # contributes nothing
-    write("r12.json", 5_000_000, 3_000_000, cur)
-    write("r11.json", 4_000_000, 2_000_000, cur)
-    monkeypatch.setattr(bench, "OUT_DIR", str(tmp_path))
-    monkeypatch.setattr(bench, "_building_round", lambda: 14)
+    def q_lazy(s, sf_dir):
+        return s.range(10).selectExpr("sum(id) AS s")
 
-    x = bench.xsession_stream_probe(4_500_000, 2_500_000)
-    # r14 skipped (round guard), r13 skipped (no contribution): the
-    # medians come from the current session + r12 + r11
-    assert x["n_sessions"] == 3
-    assert 9_000_000 not in x["sessions_1k"]
-    assert x["stream_1k"] == 4_500_000
-    assert x["stream_1m"] == 2_500_000
-
-
-def test_exec_frac_panel_emits_decomposition_fields(spark):
-    """VERDICT r13 #4: the sidecar's exec_frac_top10 panel must carry the
-    fresh/recollect/exec_frac triple for the most expensive queries, with
-    0 < exec_frac <= ~1 (a re-collect never pays MORE than the fresh
-    fn()+collect on a warm plan, modulo timer noise)."""
-    import bench
-
-    def q_fast(s, sf_dir):
-        return s.range(1000).selectExpr("sum(id) AS s")
-
-    def q_slow(s, sf_dir):
-        return s.range(200_000).selectExpr("sum(id * id) AS s")
-
-    panel = bench.exec_frac_panel(
-        spark, {"fast": q_fast, "slow": q_slow}, {"fast": 0.1, "slow": 0.9},
-        top_n=1,
+    timings, spread, rows, split = bench.time_queries(
+        spark, {"eager": q_eager, "lazy": q_lazy}, ["eager", "lazy"], "unused", reps=3
     )
-    assert list(panel) == ["slow"]  # most-expensive-first, capped at top_n
-    rec = panel["slow"]
-    assert rec["fresh_sec"] > 0 and rec["recollect_sec"] > 0
-    assert 0 < rec["exec_frac"] <= 1.5, rec
+    assert set(split) == {"eager", "lazy"} and rows == {"eager": 1, "lazy": 1}
+    build, collect = split["eager"]
+    assert build >= 0.2 and build > collect
+    assert split["lazy"][0] < 0.2
+    for name, (b, c) in split.items():
+        lo, hi = spread[name]
+        assert lo <= timings[name] <= hi
+        assert b + c <= hi + 0.01  # medians of the two parts of each timed rep

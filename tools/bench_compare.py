@@ -40,6 +40,8 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
+import os
 import statistics
 import sys
 
@@ -48,19 +50,10 @@ NORM_THRESHOLD = 1.50  # normalized ratio beyond which a move is a real change
 SUSPECT_THRESHOLD = 1.25  # normalized ratio worth human eyes, not a verdict
 
 
-def null_thresholds() -> tuple[float, float]:
-    """Gate thresholds CALIBRATED from the committed same-code null
-    distribution (tools/bench_null.py → bench_out/NULL_SPREAD.json) when
-    present: a move is reportable only beyond what two clean same-code
-    sessions on THIS box produce — suspect at the null p90, REGRESSION at
-    the null p98.  The static constants stay as FLOORS (a suspiciously
-    tight null artifact can never make the gate oversensitive); absent or
-    unreadable artifact → floors alone.  Round-13 calibration made this
-    necessary: the r13 box's clean null reads p90 1.262 / p98 ~1.66 / max
-    1.774 (the r5-era box: 1.147 / — / 1.294), so the static 1.25/1.5 pair
-    flags same-code noise as suspect/REGRESSION on it."""
-    import os
-
+def load_null_spread() -> dict | None:
+    """The committed same-code two-session null distribution
+    (tools/bench_null.py → bench_out/NULL_SPREAD.json), or None when it is
+    absent or unreadable."""
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "bench_out",
@@ -68,21 +61,48 @@ def null_thresholds() -> tuple[float, float]:
     )
     try:
         with open(path) as f:
-            ns = json.load(f)
-        # the gate judges SESSION-NORMALIZED ratios, so the null percentiles
-        # must be normalized by the null run's own A/B session factor too
-        factor = ns.get("session_factor_AB") or 1.0
-        ratios = sorted(r / factor for r in ns["ratios"].values())
-        if len(ratios) < 20:
-            return SUSPECT_THRESHOLD, NORM_THRESHOLD
-        p90 = ratios[int(0.90 * (len(ratios) - 1))]
-        p98 = ratios[int(0.98 * (len(ratios) - 1))]
-        return (
-            max(SUSPECT_THRESHOLD, round(p90, 3)),
-            max(NORM_THRESHOLD, round(p98, 3)),
-        )
-    except Exception:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+def nearest_rank(xs_sorted: list[float], p: float) -> float:
+    """Nearest-rank percentile of an ascending list: the ceil(p·n)-th
+    smallest value.  The one percentile definition of the null artifact
+    and of the gate thresholds read from it."""
+    idx = max(0, math.ceil(p * len(xs_sorted)) - 1)
+    return xs_sorted[min(len(xs_sorted) - 1, idx)]
+
+
+def normalized_null(ratios) -> list[float]:
+    """Per-query A→B ratios divided by their own median (the null run's
+    session factor), ascending — the gate judges SESSION-NORMALIZED ratios,
+    so the null percentiles must be normalized the same way."""
+    factor = statistics.median(ratios)
+    return sorted(r / factor for r in ratios)
+
+
+def null_thresholds() -> tuple[float, float]:
+    """Gate thresholds CALIBRATED from the committed null distribution
+    when present: a move is reportable only beyond what two clean
+    same-code sessions on THIS box produce — suspect at the null p90,
+    REGRESSION at the null p98.  The static constants stay as FLOORS (a
+    suspiciously tight null artifact can never make the gate
+    oversensitive); absent or unreadable artifact → floors alone.
+    Round-13 calibration made this necessary: the r13 box's clean null
+    reads p90 1.262 / p98 ~1.66 / max 1.774 (the r5-era box: 1.147 / — /
+    1.294), so the static 1.25/1.5 pair flags same-code noise as
+    suspect/REGRESSION on it."""
+    ratios = list(((load_null_spread() or {}).get("ratios") or {}).values())
+    if len(ratios) < 20:
         return SUSPECT_THRESHOLD, NORM_THRESHOLD
+    norm = normalized_null(ratios)
+    return (
+        max(SUSPECT_THRESHOLD, round(nearest_rank(norm, 0.90), 3)),
+        max(NORM_THRESHOLD, round(nearest_rank(norm, 0.98), 3)),
+    )
+
+
 ABS_FLOOR_SEC = 0.15  # ignore moves smaller than this in absolute seconds
 MIN_SHARED_FOR_NORM = 8  # need this many shared queries to trust the factor
 
@@ -272,19 +292,10 @@ def compare(old: dict, new: dict, old_label: str = "old", new_label: str = "new"
 
 
 def _null_spread_note() -> str:
-    """Cite the committed same-code two-session null distribution
-    (tools/bench_null.py → bench_out/NULL_SPREAD.json) when present — the
-    measured envelope any cross-round drift must exceed to mean anything."""
-    import os
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "bench_out",
-        "NULL_SPREAD.json",
-    )
+    """Cite the committed null distribution when present — the measured
+    envelope any cross-round drift must exceed to mean anything."""
+    ns = load_null_spread()
     try:
-        with open(path) as f:
-            ns = json.load(f)
         return (
             f" Null distribution (same-code two-session A/B, n={ns['n']}): "
             f"session factor {ns['session_factor_AB']}× (probe "
@@ -293,7 +304,7 @@ def _null_spread_note() -> str:
             f"{ns['norm_ratio_max']}, one-direction fraction "
             f"{ns['one_direction_frac']} — bench_out/NULL_SPREAD.json."
         )
-    except Exception:
+    except (TypeError, KeyError):
         return (
             " Calibration: same-code between-session normalized ratios on "
             "this box reach 1.32×."
@@ -350,13 +361,9 @@ def to_markdown(result: dict) -> str:
             "re-measured SOLO in the same session — fresh caches, one "
             "discarded warm, median of 3.  `session-noise` = the solo "
             "median re-entered the old spread envelope or its normalized "
-            "ratio fell back under the suspect threshold.  A persisting "
-            "drift is then CLASSIFIED against 2 same-code anchor queries "
-            "(nearest runtime class, within-noise, source unchanged), solo "
-            "re-measured the same way: `persists-box` = the anchors drifted "
-            "with it (residual ≤ suspect threshold — the box/session moved "
-            "on bit-identical source); `persists-query` = drift beyond the "
-            "anchors, needs a named cause or a fix.",
+            "ratio fell back under the suspect threshold.  `persists` = "
+            "the drift survived the solo re-measure on unchanged source: it "
+            "needs a named cause or a fix.",
             "",
             "| query | status | old med | bench med | solo runs | solo med | solo norm | src | verdict |",
             "|---|---|---|---|---|---|---|---|---|",
@@ -373,17 +380,6 @@ def to_markdown(result: dict) -> str:
                 f"| {f'{sn:.2f}' if sn is not None else '—'} "
                 f"| {src} | {a['verdict']} |"
             )
-            if a.get("anchors"):
-                det = "; ".join(
-                    f"{x['query']} old {x['old']:.2f} → solo "
-                    f"{x['solo_median']:.2f} (norm {x['solo_norm']:.2f})"
-                    for x in a["anchors"]
-                )
-                lines.append(
-                    f"|  ⤷ anchors (norm med {a.get('anchor_norm', '—')}, "
-                    f"residual {a.get('residual_vs_anchors', '—')}) "
-                    f"| {det} | | | | | | | |"
-                )
     stream = result.get("stream")
     if stream and stream.get("rows"):
         ov, nv = stream["old_version"], stream["new_version"]

@@ -19,7 +19,6 @@ Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_NULL_QUERIES
 from __future__ import annotations
 
 import json
-import math
 import os
 import statistics
 import subprocess
@@ -53,7 +52,7 @@ def run_once(out_path: str) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
     calib = bench.calibration_probe(spark)
-    timings, spread, _rows = bench.time_queries(
+    timings, spread, _rows, _split = bench.time_queries(
         spark, queries, _names(), bench.SF_DIR, tag="[null]"
     )
     with open(out_path, "w") as f:
@@ -66,6 +65,8 @@ def run_once(out_path: str) -> None:
 
 def main() -> int:
     import tempfile
+
+    from tools.bench_compare import nearest_rank, normalized_null
 
     runs = []
     for tag in ("A", "B"):
@@ -81,13 +82,12 @@ def main() -> int:
     shared = [n for n in a["queries"] if n in b["queries"] and a["queries"][n]]
     ratios = {n: b["queries"][n] / a["queries"][n] for n in shared}
     factor = statistics.median(ratios.values())
-    norm = sorted((r / factor) for r in ratios.values())
+    # the same normalization and percentile definition the gate applies
+    # to this artifact (tools/bench_compare.null_thresholds)
+    norm = normalized_null(list(ratios.values()))
 
     def pct(p: float) -> float:
-        # nearest-rank percentile: ceil(p·n)-th smallest (0-indexed ⇒ −1);
-        # the old int(p·n) index sat one rank high (r8 ADVICE minor)
-        idx = max(0, math.ceil(p * len(norm)) - 1)
-        return round(norm[min(len(norm) - 1, idx)], 3)
+        return round(nearest_rank(norm, p), 3)
 
     result = {
         "n": len(shared),
