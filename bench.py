@@ -1142,13 +1142,15 @@ def adjudicate_suspects(
     cache cleared) and emit a machine verdict row.  ``persists`` is terminal: the drift survived
     the solo re-measure on unchanged source and needs a named cause.
     Queries whose source DID change are left to the human diff — the gate
-    only replaces the noise-vs-real argument, not code review."""
+    only replaces the noise-vs-real argument, not code review.  Returns the
+    verdict rows and how many flagged rows past ``limit`` got none."""
     prev_hashes = prev_detail.get("query_src_hash", {})
     flagged = [
         r for r in compare_rows if r.get("status") in ("suspect", "REGRESSION")
-    ][:limit]
+    ]
+    skipped = max(0, len(flagged) - limit)
     out = []
-    for r in flagged:
+    for r in flagged[:limit]:
         name = r["query"]
         fn = queries.get(name)
         rec = {
@@ -1192,7 +1194,7 @@ def adjudicate_suspects(
         )
         out.append(rec)
         log(f"[bench][adjudicate] {name}: {rec}")
-    return out
+    return out, skipped
 
 
 # Byte budget for the one printed line: the driver records a ~2000-char
@@ -1276,11 +1278,17 @@ def compact_line(detail: dict, compare_verdict: dict | None) -> str:
 
 def _load_prev_detail() -> tuple[dict, str] | None:
     """Previous round's sidecar for the round-over-round verdict: env
-    override, else the newest committed bench_out/r*.json."""
+    override, else the highest-numbered committed bench_out/r<N>.json
+    (by number, so r100 follows r17; r<N>_baseline.json is the round's
+    own pre-change run, not a round)."""
     prev = os.environ.get("SPARK_GRAFT_BENCH_PREV")
     if not prev:
-        snaps = sorted(glob.glob(os.path.join(OUT_DIR, "r*.json")))
-        prev = snaps[-1] if snaps else None
+        rounds = {}
+        for path in glob.glob(os.path.join(OUT_DIR, "r*.json")):
+            m = re.fullmatch(r"r(\d+)\.json", os.path.basename(path))
+            if m:
+                rounds[int(m.group(1))] = path
+        prev = rounds[max(rounds)] if rounds else None
     if not prev or not os.path.exists(prev):
         return None
     try:
@@ -1328,7 +1336,7 @@ def solo_stream_probes(sf_dir: str) -> dict | None:
 
 
 def main() -> int:
-    from flink_net_spark.session import get_spark
+    from flink_net_spark.session import get_spark, local_fs_mode
     from flink_net_spark.tables import load_table
     import __spark_entry__ as entry_mod
     from flink_net_spark.queries import META
@@ -1429,6 +1437,8 @@ def main() -> int:
         "calibration_probe": calib,
         "reps_per_query": REPS,
         "sf": _sf_from_dir(SF_DIR),
+        "cpus": spark.sparkContext.defaultParallelism,
+        "local_fs_mode": local_fs_mode(spark),
         "rows_per_sec": rows_per_sec,
         "throughput_pipeline_sec": round(pipeline_dt, 4),
         "throughput_events": n_events,
@@ -1466,10 +1476,12 @@ def main() -> int:
             result = compare(prev[0], detail, old_label=prev[1])
             compare_verdict = result["verdict"]
             detail["compare"] = {"verdict": compare_verdict, "rows": result["rows"]}
-            adjs = adjudicate_suspects(
+            adjs, skipped = adjudicate_suspects(
                 spark, queries, result["rows"], prev[0],
                 compare_verdict.get("session_factor", 1.0), src_hashes,
             )
+            # sidecar only: the line has 8 chars to spare (ROADMAP item 5)
+            compare_verdict["adj_skipped"] = skipped
             if adjs:
                 detail["compare"]["adjudications"] = adjs
                 compare_verdict["adj_noise"] = sum(

@@ -13,11 +13,29 @@ Design notes (100 TB target, tested on local[N]):
     guaranteed small.
   - RocksDB state store for streaming state (reference keeps keyed state in
     RocksDB too: FlinkDotNet/FlinkDotNet.Storage.RocksDB/RocksDBStateBackend.cs:71).
+  - ``file:`` goes through ``jvm/NoForkLocalFs.java`` on local masters.
+    Without libhadoop (pip-installed PySpark never ships it) Hadoop's local
+    file system starts a ``chmod`` process for every file and directory it
+    creates and a ``readlink`` process for each end of every rename: several
+    ms each, on every checkpoint, state-store and sink file.  The shim does
+    those two calls through ``java.nio``; ``.crc`` checksums, rename
+    semantics and permission bits are unchanged.  ``get_spark`` compiles it
+    once per source hash; a non-local master, a JVM already running without
+    it, or no ``javac`` keeps Hadoop's default with one warning, and
+    ``local_fs_mode`` reports which is active.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import uuid
+import warnings
+import zipfile
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -52,6 +70,8 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    extra_conf = dict(extra_conf or {})
+    extra_conf.update(_local_fs_conf(master, extra_conf))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -88,7 +108,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
@@ -104,38 +124,134 @@ def ship_package_to_executors(spark: SparkSession) -> None:
     """
     if getattr(spark, "_fns_pkg_shipped", False):
         return
-    import hashlib
-    import tempfile
-    import uuid
-    import zipfile
-
     import flink_net_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(flink_net_spark.__file__))
+
+    def pkg_files():
+        for root, _dirs, files in os.walk(pkg_dir):
+            if "__pycache__" in root:
+                continue
+            for f in sorted(files):
+                if not f.endswith(".pyc"):
+                    yield os.path.join(root, f)
+
     # content-keyed zip name: a stale cache would ship yesterday's code
     h = hashlib.md5()
-    for root, _dirs, files in os.walk(pkg_dir):
-        if "__pycache__" in root:
-            continue
-        for f in sorted(files):
-            if f.endswith(".pyc"):
-                continue
-            full = os.path.join(root, f)
-            st = os.stat(full)
-            h.update(f"{os.path.relpath(full, pkg_dir)}:{st.st_mtime_ns}:{st.st_size}".encode())
-    zpath = os.path.join(tempfile.gettempdir(), f"flink_net_spark_pkg_{h.hexdigest()[:12]}.zip")
-    if not os.path.exists(zpath):
-        tmp = f"{zpath}.{uuid.uuid4().hex}.tmp"
+    for full in pkg_files():
+        st = os.stat(full)
+        h.update(f"{os.path.relpath(full, pkg_dir)}:{st.st_mtime_ns}:{st.st_size}".encode())
+
+    def build(tmp: str) -> None:
         with zipfile.ZipFile(tmp, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for f in files:
-                    if f.endswith(".pyc"):
-                        continue
-                    full = os.path.join(root, f)
-                    rel = os.path.join("flink_net_spark", os.path.relpath(full, pkg_dir))
-                    z.write(full, rel)
-        os.replace(tmp, zpath)
-    spark.sparkContext.addPyFile(zpath)
+            for full in pkg_files():
+                z.write(full, os.path.join("flink_net_spark", os.path.relpath(full, pkg_dir)))
+
+    spark.sparkContext.addPyFile(_temp_artifact("flink_net_spark_pkg", h.hexdigest(), ".zip", build))
     spark._fns_pkg_shipped = True
+
+
+def _temp_artifact(stem: str, digest: str, suffix: str, build: Callable[[str], None]) -> str:
+    """``<tempdir>/<stem>_<digest[:12]><suffix>``, made by ``build(tmp_path)``
+    the first time and published with ``os.replace``: a concurrent process
+    sees no file or a complete one, never a partial one."""
+    path = os.path.join(tempfile.gettempdir(), f"{stem}_{digest[:12]}{suffix}")
+    if not os.path.exists(path):
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        try:
+            build(tmp)
+            os.replace(tmp, path)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+    return path
+
+
+NOFORK_FS = "flink_net_spark.jvm.NoForkLocalFs"
+_NOFORK_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "NoForkLocalFs.java")
+# why the last get_spark kept Hadoop's default local file system (None: it did
+# not); per process, like the py4j gateway and its JVM
+_local_fs_fallback: str | None = None
+
+
+def _nofork_jar() -> str:
+    """NoForkLocalFs compiled against this Spark's jars, cached under the
+    temp dir by a hash of its source."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    javac = shutil.which("javac")
+    if javac is None:
+        raise FileNotFoundError("no javac on PATH")
+    with open(_NOFORK_SRC, "rb") as f:
+        digest = hashlib.md5(f.read()).hexdigest()
+
+    def build(tmp: str) -> None:
+        with tempfile.TemporaryDirectory() as classes:
+            # --release 17: loadable by every JVM Spark 4 runs on, whichever
+            # JDK's javac is first on PATH
+            cmd = [javac, "-J-Xmx256m", "--release", "17", "-nowarn",
+                   "-cp", os.path.join(_find_spark_home(), "jars", "*"),
+                   "-d", classes, _NOFORK_SRC]
+            subprocess.run(cmd, check=True, capture_output=True, text=True)
+            with zipfile.ZipFile(tmp, "w") as z:
+                for root, _dirs, files in os.walk(classes):
+                    for f in files:
+                        full = os.path.join(root, f)
+                        z.write(full, os.path.relpath(full, classes))
+
+    return _temp_artifact("flink_net_spark_nofork", digest, ".jar", build)
+
+
+def _local_fs_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
+    """The confs that mount NoForkLocalFs on ``file:``, with the jar added in
+    front of the caller's ``spark.driver.extraClassPath``.  Empty when the
+    driver JVM could not load it; the reason is then kept for
+    ``local_fs_mode`` and warned once."""
+    global _local_fs_fallback
+    from pyspark import SparkContext
+
+    conf = {
+        "spark.hadoop.fs.file.impl": NOFORK_FS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": f"{NOFORK_FS}$Afs",
+    }
+    reason = None
+    if master != "local" and not master.startswith("local["):
+        reason = f"master {master} runs executors outside the driver JVM"
+    elif SparkContext._jvm is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        SparkContext._ensure_initialized()  # attach to the gateway that is already running
+        if not SparkContext._jvm.org.apache.spark.util.Utils.classIsLoadable(NOFORK_FS):
+            # an earlier fallback in this process is why the JVM lacks the jar
+            reason = _local_fs_fallback or "the running JVM was started without the NoForkLocalFs jar"
+    else:
+        try:
+            jar = _nofork_jar()
+        except (OSError, subprocess.CalledProcessError) as ex:
+            detail = getattr(ex, "stderr", None) or str(ex)
+            reason = f"cannot build the NoForkLocalFs jar: {detail.strip().splitlines()[0]}"
+        else:
+            prior = extra_conf.get("spark.driver.extraClassPath")
+            conf["spark.driver.extraClassPath"] = os.pathsep.join(filter(None, (jar, prior)))
+    reason_changed, _local_fs_fallback = reason != _local_fs_fallback, reason
+    if reason is None:
+        return conf
+    if reason_changed:
+        warnings.warn(
+            f"file: stays on Hadoop's local file system, which starts a chmod/readlink "
+            f"process per file: {reason}",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+    return {}
+
+
+def local_fs_mode(spark: SparkSession) -> str:
+    """``"nio"`` when both Hadoop APIs serve ``spark``'s ``file:`` paths
+    through NoForkLocalFs, else ``"hadoop-shell: <reason>"``."""
+    jvm = spark.sparkContext._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(hconf).getClass().getName()
+    afs = jvm.org.apache.hadoop.fs.FileContext.getLocalFSFileContext(hconf)
+    afs = afs.getDefaultFileSystem().getClass().getName()
+    if fs == NOFORK_FS and afs == f"{NOFORK_FS}$Afs":
+        return "nio"
+    return f"hadoop-shell: {_local_fs_fallback or f'file: is served by {fs} and {afs}'}"

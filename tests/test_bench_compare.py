@@ -259,7 +259,7 @@ def test_adjudication_no_prev_hash_verdict():
     prev = {"query_src_hash": {"qb": "deadbeef0000"}}
     src = {"qa": "aaaaaaaaaaaa", "qb": "bbbbbbbbbbbb"}
     dummy = lambda *a, **k: None  # noqa: E731 - never called for these verdicts
-    out = bench.adjudicate_suspects(
+    out, _ = bench.adjudicate_suspects(
         None, {"qa": dummy, "qb": dummy}, rows, prev, 1.0, src
     )
     by = {r["query"]: r["verdict"] for r in out}
@@ -295,7 +295,7 @@ def test_adjudicate_persists_is_terminal(monkeypatch):
         _mkrow("steady", old=1.0),
     ]
     hashes = {"sus": "x", "noisy": "y", "steady": "z"}
-    out = bench.adjudicate_suspects(
+    out, _ = bench.adjudicate_suspects(
         None, {n: n for n in hashes}, rows, {"query_src_hash": hashes},
         1.0, dict(hashes),
     )
@@ -313,23 +313,69 @@ def test_headline_panel_frozen_and_shared_with_previous_round():
     and must share ≥100 queries with the previous round's committed
     sidecar, so the drift gate's session factor stays statistically
     powered round over round."""
-    import glob
-    import json
-    import os
-
     import bench
 
     assert len(bench.HEADLINE) <= 116, (
         "HEADLINE is a frozen measurement panel — rotate a same-family "
         "representative OUT for every query rotated in (see bench.py policy)"
     )
-    snaps = sorted(glob.glob(os.path.join(bench.OUT_DIR, "r*.json")))
-    if not snaps:  # fresh clone: nothing to share with
+    prev_detail = bench._load_prev_detail()
+    if prev_detail is None:  # fresh clone: nothing to share with
         return
-    with open(snaps[-1]) as f:
-        prev = set(json.load(f).get("queries", {}))
+    prev = set(prev_detail[0].get("queries", {}))
     shared = prev & set(bench.HEADLINE)
     assert len(shared) >= 100, (len(shared), "panel churn beyond the ±12/round bound")
+
+
+def test_load_prev_detail_orders_rounds_by_number(monkeypatch, tmp_path):
+    """The previous round is the highest round number, not the last name in
+    lexical order: r100 follows r17, and r17_baseline.json (the round's own
+    pre-change run) is never a previous round."""
+    import json
+
+    import bench
+
+    for name in ("r17.json", "r17_baseline.json", "r100.json", "r9.json"):
+        (tmp_path / name).write_text(json.dumps({"queries": {}, "name": name}))
+    monkeypatch.setattr(bench, "OUT_DIR", str(tmp_path))
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_PREV", raising=False)
+    assert bench._load_prev_detail() == ({"queries": {}, "name": "r100.json"}, "r100.json")
+    (tmp_path / "r100.json").unlink()
+    assert bench._load_prev_detail()[1] == "r17.json"
+
+
+def test_compare_refuses_sidecars_of_different_runs():
+    """A sf0.01 run against a sf0.1 sidecar (or 4 cores against 8) is not a
+    regression verdict; it is an error, with no rows to adjudicate."""
+    q = {"q": 1.0}
+    base = detail(q, {"q": [0.9, 1.1]})
+    for key, a, b in (("sf", 0.1, 0.01), ("cpus", 8, 4)):
+        c = compare({**base, key: a}, {**base, key: b}, "r17.json")
+        assert c["verdict"] == {"vs": "r17.json", "err": f"not comparable: {key} {a} vs {b}"}
+        assert c["rows"] == []
+        assert "Not compared" in to_markdown(c)
+    same = compare({**base, "sf": 0.1, "cpus": 4}, {**base, "sf": 0.1, "cpus": 4})
+    assert "err" not in same["verdict"] and len(same["rows"]) == 1
+    # sidecars from before the cpus field still compare on sf alone
+    assert "err" not in compare({**base, "sf": 0.1}, {**base, "sf": 0.1, "cpus": 4})["verdict"]
+
+
+def test_adjudicate_counts_rows_past_the_limit():
+    import bench
+
+    rows = [
+        {"query": f"q{i}", "status": "suspect", "old": 1.0, "new": 2.0,
+         "old_spread": [0.9, 1.1], "norm_ratio": 2.0}
+        for i in range(5)
+    ] + [_mkrow("steady")]
+    prev = {"query_src_hash": {f"q{i}": "old" for i in range(5)}}
+    src = {f"q{i}": "new" for i in range(5)}  # source-changed: nothing re-measured
+    fns = dict.fromkeys(src, "fn")
+    out, skipped = bench.adjudicate_suspects(None, fns, rows, prev, 1.0, src, limit=3)
+    assert [(r["query"], r["verdict"]) for r in out] == [(f"q{i}", "source-changed") for i in range(3)]
+    assert skipped == 2
+    assert bench.adjudicate_suspects(None, fns, rows, prev, 1.0, src)[1] == 0
+    assert "adj_skipped" not in bench._LINE_COMPARE_KEYS  # sidecar only
 
 
 def test_null_thresholds_normalized_with_floors(monkeypatch, tmp_path):

@@ -215,7 +215,22 @@ def compare_stream(old: dict, new: dict) -> dict:
     }
 
 
+# run parameters that must match for two sidecars to be compared at all
+SAME_RUN_KEYS = ("sf", "cpus")
+
+
 def compare(old: dict, new: dict, old_label: str = "old", new_label: str = "new") -> dict:
+    differ = [
+        f"{k} {old[k]} vs {new[k]}"
+        for k in SAME_RUN_KEYS
+        if k in old and k in new and old[k] != new[k]
+    ]
+    if differ:
+        return {
+            "old_label": old_label, "new_label": new_label,
+            "rows": [], "shuffle_rows": [], "only_new": [],
+            "verdict": {"vs": old_label, "err": "not comparable: " + ", ".join(differ)},
+        }
     names = [n for n in new.get("queries", {}) if n in old.get("queries", {})]
     ratios = {
         n: new["queries"][n] / old["queries"][n] for n in names if old["queries"][n]
@@ -324,6 +339,8 @@ def attach_adjudications(result: dict, new: dict) -> dict:
 def to_markdown(result: dict) -> str:
     old_l, new_l = result["old_label"], result["new_label"]
     v = result["verdict"]
+    if "err" in v:
+        return f"# Bench comparison: {old_l} → {new_l}\n\n**Not compared**: {v['err']}.\n"
     sus_thr, reg_thr = v.get("thr") or (SUSPECT_THRESHOLD, NORM_THRESHOLD)
     lines = [
         f"# Bench comparison: {old_l} → {new_l}",
@@ -444,6 +461,8 @@ def main() -> int:
             f.write(md)
     print(md)
     print(json.dumps(result["verdict"]))
+    if "err" in result["verdict"]:
+        return 2
     return 1 if (result["verdict"]["reg"] or result["verdict"]["shuf_reg"]) else 0
 
 
