@@ -42,6 +42,11 @@ from flink_net_spark.tables import QueryScope, scoped, shuffle_partitions
 
 HOUR_MS = 3_600_000
 
+# Stale-staging grace window: siblings/legacy dirs younger than this are
+# never pruned (a concurrent process may still be draining them; bench
+# drains finish in seconds, so an hour is conservative).
+_STAGE_PRUNE_GRACE_SEC = 3600
+
 # Physical state-shard fan-out for stream_incremental_minhash: the LSH band
 # index's logical buckets are hashed into keyed-state shards so per-batch
 # state-store traffic is bounded by shards, not by distinct buckets (see
@@ -56,11 +61,6 @@ HOUR_MS = 3_600_000
 # like SPARK_GRAFT_SHUFFLE_PARTITIONS.  The shard count is PHYSICAL layout
 # only — the emitted candidate set is identical under any value (pinned by
 # test_stream_incremental_minhash_equals_batch).
-# Stale-staging grace window: siblings/legacy dirs younger than this are
-# never pruned (a concurrent process may still be draining them; bench
-# drains finish in seconds, so an hour is conservative).
-_STAGE_PRUNE_GRACE_SEC = 3600
-
 _INC_TARGET_BUCKETS_PER_SHARD = 300
 _INC_SHARDS_MIN, _INC_SHARDS_MAX = 32, 4096
 

@@ -433,16 +433,22 @@ def test_null_thresholds_match_committed_artifact():
     assert bc.null_thresholds()[0] == max(bc.SUSPECT_THRESHOLD, null["norm_ratio_p90"])
 
 
-def test_time_queries_records_build_split(spark):
+def test_time_queries_records_build_split(spark, monkeypatch):
     """time_queries records, per query, the median fn() build seconds and
     the median collect seconds of the reps it times: a builder that does
-    its work eagerly reads build-heavy, a lazy plan reads collect-heavy."""
-    import time
+    its work eagerly reads build-heavy, a lazy plan reads collect-heavy.
+    The clock is fake and moves only inside q_eager, so every figure is
+    exact."""
+    import types
 
     import bench
 
+    now = [0.0]
+    fake_time = types.SimpleNamespace(perf_counter=lambda: now[0])
+    monkeypatch.setattr(bench, "time", fake_time)
+
     def q_eager(s, sf_dir):
-        time.sleep(0.2)  # stands in for a stream drain inside the builder
+        now[0] += 0.2  # stands in for a stream drain inside the query function
         return s.range(10).selectExpr("sum(id) AS s")
 
     def q_lazy(s, sf_dir):
@@ -453,9 +459,9 @@ def test_time_queries_records_build_split(spark):
     )
     assert set(split) == {"eager", "lazy"} and rows == {"eager": 1, "lazy": 1}
     build, collect = split["eager"]
-    assert build >= 0.2 and build > collect
-    assert split["lazy"][0] < 0.2
+    assert (build, collect) == (0.2, 0.0)
+    assert split["lazy"] == [0.0, 0.0]
+    assert timings == {"eager": 0.2, "lazy": 0.0}
     for name, (b, c) in split.items():
-        lo, hi = spread[name]
-        assert lo <= timings[name] <= hi
-        assert b + c <= hi + 0.01  # medians of the two parts of each timed rep
+        assert spread[name] == [timings[name], timings[name]]
+        assert b + c == spread[name][1]  # medians of the two parts of each timed rep

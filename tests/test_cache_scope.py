@@ -5,8 +5,10 @@ rounds; a ``tables.QueryScope`` holds them and is bound to the returned
 DataFrame, so ``release_persisted(result)`` (or, as a backstop, collecting
 the dropped handle) frees them.  The registry-wide check that every query
 releases what it cached lives in ``conftest.assert_matches_oracle``; this
-module covers the exception (the session-scoped shared LM tables), the GC
-backstop, the scope's error path and its concurrency contract.
+module covers the exception (the session-scoped shared LM tables, also
+when two threads build LM queries at once), the GC backstop, the scope's
+error path, its concurrency contract, and a static check that nothing else
+under ``flink_net_spark/`` caches or checkpoints outside a QueryScope.
 
 Runs in its own module: a module-scoped fixture elsewhere that holds live
 handles over the same query plans would alias cache entries (Spark's
@@ -15,8 +17,11 @@ CacheManager dedupes by canonicalized plan) and confound the delta check.
 
 from __future__ import annotations
 
+import ast
 import gc
 import os
+import pathlib
+import sys
 import threading
 import time
 
@@ -266,3 +271,102 @@ def test_shuffle_partitions_scopes_do_not_interleave(spark):
     assert not any(t.is_alive() for t in threads)
     assert seen == {3: {"3"}, 5: {"5"}}
     assert spark.conf.get(key) == base
+
+
+def test_lm_queries_share_the_session_from_two_threads(spark):
+    """Two LM consumers built at once from two threads, the way
+    sim_ann_planted_recall shares a session, both go through the shared
+    LM memo: each result equals its serial result, and releasing both
+    results and the memo leaves no cache and no plan reference behind."""
+    from flink_net_spark.queries import QUERIES
+    from flink_net_spark.queries.text import release_shared_lm
+    from flink_net_spark.tables import _PLAN_REFS, release_persisted
+
+    names = ("text_kn_bigram_nll", "curation_perplexity_gate")
+    release_shared_lm(spark)
+    gc.collect()
+    baseline = persistent_rdd_ids(spark)
+    refs = set(_PLAN_REFS)
+    serial = {}
+    for name in names:
+        df = QUERIES[name](spark, SF_DIR)
+        serial[name] = sorted(tuple(r) for r in df.collect())
+        release_persisted(df)
+    release_shared_lm(spark)
+    assert persistent_rdd_ids(spark) - baseline == set()
+    start = threading.Barrier(2)
+    built, errors = {}, []
+
+    def run(name: str) -> None:
+        try:
+            start.wait()
+            df = QUERIES[name](spark, SF_DIR)
+            built[name] = (df, sorted(tuple(r) for r in df.collect()))
+        except BaseException as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in names]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the two builds' Python steps finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    for name in names:
+        assert built[name][1] == serial[name], name
+    for df, _rows in built.values():
+        release_persisted(df)
+    release_shared_lm(spark)
+    assert persistent_rdd_ids(spark) - baseline == set()
+    assert set(_PLAN_REFS) == refs
+
+
+# The session-scoped LM memo (ROADMAP item 3): its two re-persists are the
+# one cache path outside a QueryScope.  Delete the entry with the memo.
+_LM_MEMO_PERSISTS = {
+    ("queries/text.py", "shared_lm_tables"),
+    ("queries/text.py", "_shared_slot"),
+}
+
+
+def test_only_query_scopes_cache():
+    """No ``.persist(``, ``.cache()``, ``.checkpoint(`` or
+    ``.localCheckpoint(`` call under flink_net_spark/ outside tables.py,
+    except on a parameter annotated ``QueryScope`` of an enclosing function
+    (and the LM memo above): every other cache and checkpoint goes through
+    a QueryScope, which ties it to the result that reads it."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "flink_net_spark"
+    found = []
+
+    def visit(node, rel: str, func: str, scopes: frozenset) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+            a = node.args
+            scopes = scopes | {
+                p.arg
+                for p in a.posonlyargs + a.args + a.kwonlyargs
+                if p.annotation is not None
+                and ast.unparse(p.annotation).split(".")[-1] == "QueryScope"
+            }
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("persist", "cache", "checkpoint", "localCheckpoint")
+        ):
+            recv = node.func.value
+            on_scope = isinstance(recv, ast.Name) and recv.id in scopes
+            if not on_scope and (rel, func) not in _LM_MEMO_PERSISTS:
+                found.append(f"{rel}:{node.lineno}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, func, scopes)
+
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel != "tables.py":
+            visit(ast.parse(path.read_text(), str(path)), rel, "", frozenset())
+    assert found == [], f"cache/checkpoint calls outside a QueryScope: {found}"
