@@ -147,22 +147,32 @@ def ship_package_to_executors(spark: SparkSession) -> None:
             for full in pkg_files():
                 z.write(full, os.path.join("flink_net_spark", os.path.relpath(full, pkg_dir)))
 
-    spark.sparkContext.addPyFile(_temp_artifact("flink_net_spark_pkg", h.hexdigest(), ".zip", build))
+    zip_path = os.path.join(tempfile.gettempdir(), f"flink_net_spark_pkg_{h.hexdigest()[:12]}.zip")
+    spark.sparkContext.addPyFile(publish_once(zip_path, build))
     spark._fns_pkg_shipped = True
 
 
-def _temp_artifact(stem: str, digest: str, suffix: str, build: Callable[[str], None]) -> str:
-    """``<tempdir>/<stem>_<digest[:12]><suffix>``, made by ``build(tmp_path)``
-    the first time and published with ``os.replace``: a concurrent process
-    sees no file or a complete one, never a partial one."""
-    path = os.path.join(tempfile.gettempdir(), f"{stem}_{digest[:12]}{suffix}")
+def publish_once(path: str, build: Callable[[str], None]) -> str:
+    """``path``, made the first time by ``build(tmp)`` into a private sibling
+    (a file or a dir) and published with one rename: a concurrent process sees
+    no ``path`` or a complete one, never a partial one, so the existence of
+    ``path`` is its marker.  When another process published a dir first, its
+    copy stands and ours is discarded; a killed build leaves only its
+    ``.tmp`` sibling."""
     if not os.path.exists(path):
         tmp = f"{path}.{uuid.uuid4().hex}.tmp"
         try:
             build(tmp)
-            os.replace(tmp, path)
+            try:
+                os.rename(tmp, path)
+            except OSError:
+                # a dir cannot replace a published one: keep the winner's
+                if not (os.path.isdir(tmp) and os.path.isdir(path)):
+                    raise
         finally:
-            if os.path.exists(tmp):
+            if os.path.isdir(tmp):
+                shutil.rmtree(tmp, ignore_errors=True)
+            elif os.path.lexists(tmp):
                 os.remove(tmp)
     return path
 
@@ -199,7 +209,8 @@ def _nofork_jar() -> str:
                         full = os.path.join(root, f)
                         z.write(full, os.path.relpath(full, classes))
 
-    return _temp_artifact("flink_net_spark_nofork", digest, ".jar", build)
+    jar = os.path.join(tempfile.gettempdir(), f"flink_net_spark_nofork_{digest[:12]}.jar")
+    return publish_once(jar, build)
 
 
 def _local_fs_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:

@@ -34,6 +34,7 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -48,7 +49,7 @@ class FileSource:
 
     path: str
     format: str = "text"
-    schema: str | None = None  # DDL string; required for streaming non-text
+    schema: str | StructType | None = None  # required for streaming non-text
     bounded: bool = False  # ≙ IUnifiedSource.IsBounded
     max_files_per_trigger: int | None = None  # ≙ source-side backpressure
     options: dict[str, str] = field(default_factory=dict)
@@ -218,23 +219,27 @@ def replay_table_as_stream(
 
     Mirrors the reference's E2E strategy (synthetic messages produced into
     Kafka, then consumed — stress_test_passed_output.txt:52-61): the table
-    is staged once into ``n_chunks`` parquet files, then read back with
+    is staged once into ``n_chunks`` parquet files (built privately and
+    published with one rename, ``session.publish_once``), then read back with
     ``readStream`` + ``maxFilesPerTrigger`` so the stream arrives in
     multiple micro-batches.  Used by the streaming correctness queries and
     the exactly-once tests.
     """
+    from flink_net_spark.session import publish_once
     from flink_net_spark.tables import ensure_read_confs, load_table
 
     ensure_read_confs(spark)
-    marker = os.path.join(stage_dir, "_staged")
-    if not os.path.exists(marker):
-        df = load_table(spark, sf_dir, name)
-        df.repartition(n_chunks).write.mode("overwrite").parquet(stage_dir)
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    schema = spark.read.parquet(stage_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(stage_dir)
+    publish_once(
+        stage_dir,
+        lambda tmp: load_table(spark, sf_dir, name).repartition(n_chunks).write.parquet(tmp),
     )
+    return parquet_stream(spark, stage_dir, max_files_per_trigger)
+
+
+def parquet_stream(spark: SparkSession, path: str, max_files_per_trigger: int) -> DataFrame:
+    """A file stream over the parquet files of the published stage ``path``,
+    ``max_files_per_trigger`` per micro-batch, in file mtime order, with the
+    schema of the staged files."""
+    return FileSource(
+        path, "parquet", spark.read.parquet(path).schema, max_files_per_trigger=max_files_per_trigger
+    ).load(spark)

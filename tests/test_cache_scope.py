@@ -143,7 +143,8 @@ def test_drains_leave_no_temp_dirs_or_sink_views(spark, tmp_path, monkeypatch):
     """A bounded stream drain removes its checkpoint dir and memory-sink
     view, the CDC drain its checkpoint and (on release) its snapshot dir,
     and MSF its parquet rounds: after collect + release only the reusable
-    fns_stage_* replay staging is left in the temp dir."""
+    published fns_stage_* replay staging is left in the temp dir, with no
+    private ``.tmp`` staging copy beside it."""
     import tempfile
 
     from flink_net_spark.queries import QUERIES
@@ -160,7 +161,8 @@ def test_drains_leave_no_temp_dirs_or_sink_views(spark, tmp_path, monkeypatch):
         release_persisted(df)
     left = sorted(
         p.name for p in tmp_path.iterdir()
-        if p.name.startswith("fns_") and not p.name.startswith("fns_stage_")
+        if p.name.startswith("fns_")
+        and not (p.name.startswith("fns_stage_") and not p.name.endswith(".tmp"))
     )
     assert left == [], f"temp entries leaked: {left}"
     views = [t.name for t in spark.catalog.listTables() if t.name.startswith("fns_mem_")]

@@ -9,7 +9,8 @@
    (VERDICT r16 #8 / r16 ADVICE): a *recent* sibling staging may belong to
    a concurrent process still draining its stream — only aged siblings are
    reclaimed.  Legacy pre-r16 ``fns_stage_<key>`` dirs (no fingerprint
-   suffix) are swept by the same aging rule.
+   suffix) are swept by the same aging rule, and so is the private temp
+   of a staging killed mid-build, which never publishes its stage.
 3. ``stream_incremental_minhash``'s state-shard count is derived from the
    staged band-row count (VERDICT r16 #6) and env-overridable — a constant
    128 was calibrated to sf0.1 and its per-shard blobs would grow with the
@@ -18,7 +19,10 @@
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import signal
 import subprocess
 import sys
 import threading
@@ -124,6 +128,55 @@ def test_stage_dir_prune_respects_mtime_grace(tmp_path):
     assert not os.path.exists(aged), "aged sibling not reclaimed"
     assert path not in (young, aged)
     os.rmdir(young)
+
+    # a staging SIGKILLed inside its build publishes nothing; the next call
+    # publishes a complete stage, and the killed one's private temp is
+    # reclaimed as an aged sibling
+    from flink_net_spark.session import publish_once
+
+    flag = os.path.join(sf_dir, "building")
+    killed = subprocess.Popen(
+        [sys.executable, "-c", _BUILD_THEN_HANG, path, flag],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    deadline = time.time() + 120
+    while not os.path.exists(flag):
+        assert killed.poll() is None and time.time() < deadline, "build never started"
+        time.sleep(0.01)
+    killed.send_signal(signal.SIGKILL)
+    killed.wait(timeout=60)
+    assert not os.path.exists(path), "a killed staging published its stage"
+    leftover = glob.glob(f"{path}.*.tmp")
+    assert len(leftover) == 1, leftover
+
+    def build(tmp):
+        os.makedirs(tmp)
+        for i in range(2):
+            open(os.path.join(tmp, f"chunk_{i:02d}.parquet"), "w").close()
+
+    assert publish_once(path, build) == path
+    assert sorted(os.listdir(path)) == ["chunk_00.parquet", "chunk_01.parquet"]
+    os.utime(leftover[0], (old, old))
+    assert _stage_dir(sf_dir, "events") == path
+    assert not os.path.exists(leftover[0]), "killed staging's temp not reclaimed"
+    assert os.path.isdir(path)
+    shutil.rmtree(path)
+
+
+# publish_once(argv[1]) whose build writes one chunk, signals through the
+# file argv[2], then hangs until killed
+_BUILD_THEN_HANG = """
+import os, sys, time
+from flink_net_spark.session import publish_once
+
+def build(tmp):
+    os.makedirs(tmp)
+    open(os.path.join(tmp, "chunk_00.parquet"), "w").close()
+    open(sys.argv[2], "w").close()
+    time.sleep(600)
+
+publish_once(sys.argv[1], build)
+"""
 
 
 def test_stage_dir_sweeps_aged_legacy_dirs(tmp_path):

@@ -67,40 +67,39 @@ def jvm_telemetry(spark) -> dict:
         return {}
 
 
-def stage_events(spark, sf_dir: str) -> tuple[str, "object"]:
+def stage_events(spark, sf_dir: str) -> str:
     """Stage ~6M events as 12 parquet files (×60 replication -> ~2M-row
     micro-batches at maxFilesPerTrigger=4) — staging v2, unchanged since
-    round 12; shared across sessions via the temp path, so the solo
-    subprocess reuses bench's staging and vice versa."""
+    round 12; published once per corpus fingerprint under the temp dir, so
+    the solo subprocess reuses bench's staging and vice versa."""
     import pyspark.sql.functions as F
 
+    from flink_net_spark.queries.streaming_queries import _stage_dir
+    from flink_net_spark.session import publish_once
     from flink_net_spark.tables import load_table
 
-    stage = os.path.join(
-        tempfile.gettempdir(), f"fns_bench_stream_v2_{os.path.basename(sf_dir)}"
-    )
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
+    def build(tmp: str) -> None:
         ev3 = load_table(spark, sf_dir, "events").withColumn(
             "rep", F.explode(F.sequence(F.lit(1), F.lit(60)))
         )
-        ev3.repartition(12).write.mode("overwrite").parquet(stage)
-    return stage, spark.read.parquet(stage).schema
+        ev3.repartition(12).write.parquet(tmp)
+
+    return publish_once(_stage_dir(sf_dir, "bench_stream_v2"), build)
 
 
 def stream_probe_once(
-    spark, stage: str, schema, n_keys: int, shuffle_parts: str
+    spark, stage: str, n_keys: int, shuffle_parts: str
 ) -> tuple[int | None, float, dict, int, int]:
     """One probe run: file stream -> keyed count -> sink, steady-state rate
     from the engine's own per-batch trigger timings (batch 0 excluded).
     Returns (rps, drain_sec, state, commit_ms, trigger_ms)."""
     import pyspark.sql.functions as F
 
+    from flink_net_spark.sources import parquet_stream
     from flink_net_spark.tables import shuffle_partitions
 
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(stage)
+        parquet_stream(spark, stage, 4)
         .withColumn("k", F.abs(F.hash("user_id", "event_type", "rep")) % n_keys)
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
@@ -170,7 +169,6 @@ def _settled_window(runs: list[int], width: int = 3) -> tuple[float, list[int]]:
 def stream_probe(
     spark,
     stage: str,
-    schema,
     n_keys: int,
     shuffle_parts: str,
     reps: int = 3,
@@ -195,12 +193,10 @@ def stream_probe(
     age = round(time.perf_counter() - _SESSION_T0, 1)
     max_reps = max_reps or reps + 4
     for _ in range(warmups):  # warm: listing+codegen (discarded)
-        stream_probe_once(spark, stage, schema, n_keys, shuffle_parts)
+        stream_probe_once(spark, stage, n_keys, shuffle_parts)
     runs, states, fracs, dt_last = [], [], [], 0.0
     while len(runs) < max_reps:
-        rps, dt_last, state, commit_ms, trig_ms = stream_probe_once(
-            spark, stage, schema, n_keys, shuffle_parts
-        )
+        rps, dt_last, state, commit_ms, trig_ms = stream_probe_once(spark, stage, n_keys, shuffle_parts)
         if rps is not None:
             runs.append(rps)
             states.append(state)
@@ -246,11 +242,9 @@ def run_probes(spark, sf_dir: str, log=print) -> dict:
     cardinality) and 1M keys (state-store stress).  Partitioning, rep
     counts, and provider choice are unchanged from rounds 9-14 (see
     bench.py's probe history comments) — only WHEN the probes run moved."""
-    stage, schema = stage_events(spark, sf_dir)
-    probe_1k = stream_probe(spark, stage, schema, 1024, "8", log=log)
-    probe_1m = stream_probe(
-        spark, stage, schema, 1_000_000, "16", reps=5, warmups=2, log=log
-    )
+    stage = stage_events(spark, sf_dir)
+    probe_1k = stream_probe(spark, stage, 1024, "8", log=log)
+    probe_1m = stream_probe(spark, stage, 1_000_000, "16", reps=5, warmups=2, log=log)
     return {"probe_1k": probe_1k, "probe_1m": probe_1m}
 
 
