@@ -111,6 +111,17 @@ def duckdb_token_hashes(text: str) -> str:
     return f"[{inner} for w in string_split({text}, ' ')]"
 
 
+def spark_nonempty_token_hashes(text: str) -> str:
+    """Spark SQL: ``spark_token_hashes`` without the empty tokens."""
+    inner = spark_char_polyhash("w")
+    return f"transform(filter(split({text}, ' '), x -> x <> ''), w -> {inner})"
+
+
+def duckdb_nonempty_token_hashes(text: str) -> str:
+    inner = duckdb_char_polyhash("w")
+    return f"[{inner} for w in list_filter(string_split({text}, ' '), x -> x <> '')]"
+
+
 def spark_hashed_shingles(th: str, n: int = 3) -> str:
     """Spark SQL: distinct n-gram shingle hashes over a token-hash ARRAY
     COLUMN ``th`` (pass a column name, not an inline expr — each element

@@ -17,7 +17,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from flink_net_spark.functions import detmath as DM
 from flink_net_spark.functions import hashing as H
 from flink_net_spark.queries import query
-from flink_net_spark.tables import QueryScope, load_table, scoped, spread_small_scan
+from flink_net_spark.tables import (
+    QueryScope,
+    load_table,
+    scoped,
+    session_shared,
+    spread_small_scan,
+)
 
 STOPWORDS = ("the", "a")  # present in the synthetic vocabulary
 
@@ -809,12 +815,7 @@ _TRI_MOD = H.MOD
 
 
 def _tri_toks_duckdb() -> str:
-    inner = H.duckdb_char_polyhash("w")
-    return (
-        "SELECT doc_id, "
-        f"[{inner} for w in list_filter(string_split(text, ' '), x -> x <> '')] AS h "
-        "FROM documents"
-    )
+    return f"SELECT doc_id, {H.duckdb_nonempty_token_hashes('text')} AS h FROM documents"
 
 
 # --------------------------------------------------------------------------
@@ -826,100 +827,23 @@ def _tri_toks_duckdb() -> str:
 # tables — the text family was ~23% of the whole bench.  The tables are
 # pure functions of (corpus, train split): one hashed token-array pass,
 # one bigram-keyed exchange, one trigram-keyed exchange, everything else
-# vocab-bounded re-aggregation.  Build them ONCE per (session, corpus)
-# and memoize: consumers re-enter through shared_lm_tables() and the
-# persist() call re-registers lazily if a cache sweep evicted them, so
-# correctness never depends on the cache — only the repeat cost does.
-#
-# Lifetime contract: these are deliberately SESSION-scoped (a curation
-# pipeline scores many signals over one corpus against one LM), unlike
-# the result-scoped caches of a QueryScope.  Bounded: token arrays + two
-# count tables.  release_shared_lm() drops them explicitly.
-_LM_SHARED: dict[tuple, dict] = {}
-_LM_TOKENS = __import__("itertools").count(1)
-# Fallback token registry for session objects that reject attribute
-# assignment: keyed by the OBJECT (weakly), so a token can never alias a
-# different live session the way id() reuse can (r11 ADVICE).
-_LM_TOKEN_FALLBACK = __import__("weakref").WeakKeyDictionary()
-
-
-def _session_token(spark: SparkSession) -> int:
-    """Stable per-session cache token.  ``id(spark)`` can be reused by
-    CPython after a stopped session is GC'd, aliasing a stale _LM_SHARED
-    entry onto a brand-new session (r10 ADVICE); a token ATTACHED to the
-    session object is unique per live object by construction.  When the
-    attribute is unsettable the token comes from a WeakKeyDictionary on
-    the object itself; if even weakrefs fail, a FRESH token is minted per
-    call — that forfeits memoization for such exotic sessions but can
-    never alias (r11 ADVICE: the old ``id(spark)`` fallback reintroduced
-    exactly the reuse bug the attribute fixes)."""
-    tok = getattr(spark, "_fns_lm_token", None)
-    if tok is None:
-        tok = next(_LM_TOKENS)
-        try:
-            spark._fns_lm_token = tok
-        except Exception:  # pragma: no cover - unsettable session object
-            try:
-                tok = _LM_TOKEN_FALLBACK.setdefault(spark, tok)
-            except TypeError:  # pragma: no cover - unweakrefable: fresh token
-                pass
-    return tok
-
-
-def _purge_dead_lm_entries() -> None:
-    """Drop _LM_SHARED entries whose session is gone or stopped.  Before
-    dropping, unpersist THROUGH the entry's own DataFrame handles: in the
-    ``newSession`` case the creating session's death does not kill the
-    shared SparkContext, whose JVM-side caches would otherwise become
-    unreleasable the moment the dict entry vanished (r11 ADVICE).  The
-    handles work from any live sibling session; on a stopped context the
-    unpersist raises and is swallowed — nothing left to free."""
-    from pyspark.sql import DataFrame as _DF
-
-    for key in list(_LM_SHARED):
-        t = _LM_SHARED[key]
-        ref = t.get("_session_ref")
-        sess = ref() if ref is not None else None
-        alive = False
-        if sess is not None:
-            try:
-                alive = not sess.sparkContext._jsc.sc().isStopped()
-            except Exception:
-                alive = False
-        if alive:
-            continue
-        for v in t.values():
-            if isinstance(v, _DF):
-                try:
-                    v.unpersist()
-                except Exception:
-                    pass
-        _LM_SHARED.pop(key, None)
-
-
+# vocab-bounded re-aggregation.  They, and each rung's score tables, are
+# ``tables.session_shared`` entries: built once per (session, corpus) and
+# re-registered on every use, so correctness never depends on the cache —
+# only the repeat cost does.  ``tables.release_session`` frees them.
 def shared_lm_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Memoized shared LM inputs: ``toks`` (doc_id, char-polyhash token
+    """Session-shared LM inputs: ``toks`` (doc_id, char-polyhash token
     array), ``bg_all``/``tg_all`` (lazy exploded n-gram streams, k12 pair
     keys — see the module comment on the bijective encoding), ``c2b``
     (train bigram counts, column ``c``), ``c3`` (train trigram counts),
     ``uni`` (train unigram counts, column ``u`` — derived from bigram
     STARTS plus each doc's last token, so it never re-shuffles the token
     stream).  toks/c2b/c3 are persisted; derivations are cheap re-aggs."""
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:  # pragma: no cover - stopped session
-        app = None
-    _purge_dead_lm_entries()
-    key = (app, _session_token(spark), sf_dir)
-    t = _LM_SHARED.get(key)
-    if t is None:
+
+    def build(scope: QueryScope) -> dict:
         d = spread_small_scan(load_table(spark, sf_dir, "documents"))
-        ph = H.spark_char_polyhash("w")
-        toks = d.select(
-            "doc_id",
-            F.expr(
-                f"transform(filter(split(text, ' '), x -> x <> ''), w -> {ph})"
-            ).alias("h"),
+        toks = scope.persist(
+            d.select("doc_id", F.expr(H.spark_nonempty_token_hashes("text")).alias("h"))
         )
         bg_all = toks.select(
             "doc_id",
@@ -946,12 +870,12 @@ def shared_lm_tables(spark: SparkSession, sf_dir: str) -> dict:
             .select("doc_id", F.explode("tgs").alias("p"))
             .select("doc_id", "p.k12", "p.h3")
         )
-        c2b = (
+        c2b = scope.persist(
             bg_all.filter(F.col("doc_id") % 10 != 0)
             .groupBy("k12")
             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         )
-        c3 = (
+        c3 = scope.persist(
             tg_all.filter(F.col("doc_id") % 10 != 0)
             .groupBy("k12", "h3")
             .agg(F.count(F.lit(1)).cast("bigint").alias("c3"))
@@ -968,53 +892,16 @@ def shared_lm_tables(spark: SparkSession, sf_dir: str) -> dict:
             .groupBy("h3")
             .agg(F.sum("c").cast("bigint").alias("u"))
         )
-        import weakref
-
-        t = {
+        return {
             "toks": toks,
             "bg_all": bg_all,
             "tg_all": tg_all,
             "c2b": c2b,
             "c3": c3,
             "uni": uni,
-            "_session_ref": weakref.ref(spark),
         }
-        _LM_SHARED[key] = t
-    # Idempotent re-registration: a clearCache()/eviction drops the entry;
-    # the next consumer re-persists lazily (no action runs here).
-    for name in ("toks", "c2b", "c3"):
-        t[name].persist()
-    return t
 
-
-def _shared_slot(t: dict, name: str, build, persist_names) -> None:
-    """Populate a lazy derived-table slot in the shared dict and (re-)
-    persist its cacheable members — the pattern every LM rung uses for its
-    vocab-bounded SCORE tables: the det-ln chains that produce them are
-    the dominant per-execution cost, they are pure functions of the count
-    tables, and persisting them turns a repeat execution into pure
-    scoring-stream joins."""
-    if name not in t:
-        t.update(build())
-    for n in persist_names:
-        t[n].persist()
-
-
-def release_shared_lm(spark: SparkSession | None = None) -> None:
-    """Explicitly drop the session-scoped shared LM caches (tests and
-    bounded-pool callers); no-op for sessions with no shared build."""
-    from pyspark.sql import DataFrame as _DF
-
-    tok = None if spark is None else _session_token(spark)
-    for key in list(_LM_SHARED):
-        if spark is None or key[1] == tok:
-            t = _LM_SHARED.pop(key)
-            for v in t.values():
-                if isinstance(v, _DF):
-                    try:
-                        v.unpersist()
-                    except Exception:
-                        pass
+    return session_shared(spark, ("lm", sf_dir), build)
 
 
 @query(
@@ -1110,7 +997,7 @@ def text_backoff_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross join."""
     t = shared_lm_tables(spark, sf_dir)
 
-    def _build() -> dict:
+    def _build(scope: QueryScope) -> dict:
         c2 = t["c2b"]
         c1 = (
             c2.groupBy(F.expr(f"k12 div {_TRI_MOD}").alias("h1"))
@@ -1152,16 +1039,20 @@ def text_backoff_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS BIGINT)"
             ).alias("floor_e6")
         )
-        return {"bo_seen": seen, "bo_unseen": unseen, "bo_floor": floor}
+        return {
+            "seen": scope.persist(seen),
+            "unseen": scope.persist(unseen),
+            "floor": floor,
+        }
 
-    _shared_slot(t, "bo_seen", _build, ("bo_seen", "bo_unseen"))
-    bo_floor = t["bo_floor"]  # 1-row OOV constant
+    bo = session_shared(spark, ("lm_backoff", sf_dir), _build)
+    bo_floor = bo["floor"]  # 1-row OOV constant
     scored = (
         t["bg_all"]
         .filter(F.col("doc_id") % 10 == 0)
-        .join(t["bo_seen"], "k12", "left")
+        .join(bo["seen"], "k12", "left")
         .withColumn("h2", F.expr(f"k12 % {_TRI_MOD}"))
-        .join(t["bo_unseen"], "h2", "left")
+        .join(bo["unseen"], "h2", "left")
         .crossJoin(F.broadcast(bo_floor))
         .select(
             "doc_id",
@@ -1327,7 +1218,7 @@ def text_trigram_backoff_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = shared_lm_tables(spark, sf_dir)
     tg_all = t["tg_all"]
 
-    def _build() -> dict:
+    def _build(scope: QueryScope) -> dict:
         c3 = t["c3"]
         ctx3 = c3.groupBy("k12").agg(F.sum("c3").cast("bigint").alias("cc3"))
         lm3 = DM.spark_with_det_ln(
@@ -1379,20 +1270,20 @@ def text_trigram_backoff_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("nll1_e6"),
         )
         return {
-            "tri_lm3": lm3,
-            "tri_lm2": lm2,
-            "tri_lm1": lm1,
-            "tri_k0": tot_ln.select("k0_e6"),
+            "lm3": scope.persist(lm3),
+            "lm2": scope.persist(lm2),
+            "lm1": scope.persist(lm1),
+            "k0": tot_ln.select("k0_e6"),
         }
 
-    _shared_slot(t, "tri_lm3", _build, ("tri_lm3", "tri_lm2", "tri_lm1"))
-    tri_k0 = t["tri_k0"]  # 1-row backoff-floor constant
+    tri = session_shared(spark, ("lm_trigram", sf_dir), _build)
+    tri_k0 = tri["k0"]  # 1-row backoff-floor constant
     scored = (
         tg_all.filter(F.col("doc_id") % 10 == 0)
         .withColumn("k23", F.expr(f"(k12 % {_TRI_MOD}) * {_TRI_MOD} + h3"))
-        .join(t["tri_lm3"], ["k12", "h3"], "left")
-        .join(t["tri_lm2"], "k23", "left")
-        .join(t["tri_lm1"], "h3", "left")
+        .join(tri["lm3"], ["k12", "h3"], "left")
+        .join(tri["lm2"], "k23", "left")
+        .join(tri["lm1"], "h3", "left")
         .crossJoin(F.broadcast(tri_k0))
         .select(
             "doc_id",
@@ -1535,22 +1426,13 @@ _KN_NLL_E6_EXPR = (
 )
 
 
-def kn_scored_transitions(spark: SparkSession, sf_dir: str):
-    """Spark half of the shared KN-lite LM: returns (scored, k0row) where
-    ``scored`` is every transition in the corpus as
-    (doc_id, bo, nll_e6) — bo 0 = seen bigram, 1 = ctx backoff, 2 = full
-    backoff — and ``k0row`` the 1-row full-backoff constant.  Callers
-    filter to their doc population (held-out scorer: doc_id % 10 = 0;
-    perplexity gate: all docs).
+def _kn_tables(spark: SparkSession, sf_dir: str, t: dict) -> dict:
+    """The session-shared KN-lite score tables over ``t``, the family-wide
+    shared_lm_tables build (round-10): ``lmseen`` (k12 → nll2_e6),
+    ``lmctx`` (h1 → a_e6), ``lmcont`` (h2 → cont_e6) and the 1-row
+    full-backoff constant ``k0row``."""
 
-    The LM always trains on doc_id % 10 != 0; see the module comment for
-    the probability model and determinism contract.  The token stream and
-    bigram count table come from the family-wide shared_lm_tables build
-    (round-10): they are session-scoped, not result-scoped."""
-    t = shared_lm_tables(spark, sf_dir)
-    bg_all = t["bg_all"]
-
-    def _build() -> dict:
+    def _build(scope: QueryScope) -> dict:
         c2 = t["c2b"]
         ctx = (
             c2.groupBy(F.expr(f"k12 div {_TRI_MOD}").alias("h1"))
@@ -1618,20 +1500,36 @@ def kn_scored_transitions(spark: SparkSession, sf_dir: str):
             ),
         )
         return {
-            "kn_lmseen": lmseen,
-            "kn_lmctx": lmctx,
-            "kn_lmcont": lmcont,
-            "kn_k0row": k0row,
+            "lmseen": scope.persist(lmseen),
+            "lmctx": scope.persist(lmctx),
+            "lmcont": scope.persist(lmcont),
+            "k0row": k0row,
         }
 
-    _shared_slot(t, "kn_lmseen", _build, ("kn_lmseen", "kn_lmctx", "kn_lmcont"))
-    k0row = t["kn_k0row"]
+    return session_shared(spark, ("lm_kn", sf_dir), _build)
+
+
+def kn_scored_transitions(spark: SparkSession, sf_dir: str):
+    """Spark half of the shared KN-lite LM: returns (scored, k0row) where
+    ``scored`` is every transition in the corpus as
+    (doc_id, bo, nll_e6) — bo 0 = seen bigram, 1 = ctx backoff, 2 = full
+    backoff — and ``k0row`` the 1-row full-backoff constant.  Callers
+    filter to their doc population (held-out scorer: doc_id % 10 = 0;
+    perplexity gate: all docs).
+
+    The LM always trains on doc_id % 10 != 0; see the module comment for
+    the probability model and determinism contract.  The token stream and
+    the score tables are session-shared, not result-scoped."""
+    t = shared_lm_tables(spark, sf_dir)
+    kn = _kn_tables(spark, sf_dir, t)
+    k0row = kn["k0row"]
     scored = (
-        bg_all.withColumn("h1", F.expr(f"k12 div {_TRI_MOD}"))
+        t["bg_all"]
+        .withColumn("h1", F.expr(f"k12 div {_TRI_MOD}"))
         .withColumn("h2", F.expr(f"k12 % {_TRI_MOD}"))
-        .join(t["kn_lmseen"], "k12", "left")
-        .join(t["kn_lmctx"], "h1", "left")
-        .join(t["kn_lmcont"], "h2", "left")
+        .join(kn["lmseen"], "k12", "left")
+        .join(kn["lmctx"], "h1", "left")
+        .join(kn["lmcont"], "h2", "left")
         .crossJoin(F.broadcast(k0row))
         .select(
             "doc_id",
@@ -1726,9 +1624,7 @@ def _zipf_oracle() -> str:
     WITH tk AS (
         SELECT lang, u.t AS t
         FROM (SELECT lang,
-                     [{H.duckdb_char_polyhash('w')}
-                      for w in list_filter(string_split(text, ' '),
-                                           x -> x <> '')] AS hs
+                     {H.duckdb_nonempty_token_hashes('text')} AS hs
               FROM documents),
              UNNEST(hs) AS u(t)
     ),
@@ -1793,12 +1689,8 @@ def text_zipf_ttr(spark: SparkSession, sf_dir: str) -> DataFrame:
     See the module comment above for the int64 bounds and the salted
     two-phase rank that keeps the ordered window vocabulary-independent."""
     d = spread_small_scan(load_table(spark, sf_dir, "documents"))
-    ph = H.spark_char_polyhash("w")
     tk = d.select(
-        "lang",
-        F.explode(
-            F.expr(f"transform(filter(split(text, ' '), x -> x <> ''), w -> {ph})")
-        ).alias("t"),
+        "lang", F.explode(F.expr(H.spark_nonempty_token_hashes("text"))).alias("t")
     )
     tc = tk.groupBy("lang", "t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     stats = tc.groupBy("lang").agg(
@@ -1876,9 +1768,7 @@ def text_zipf_ttr(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH tc AS (
         SELECT doc_id, tok AS h, CAST(COUNT(*) AS BIGINT) AS c
         FROM (SELECT doc_id,
-                     unnest([{H.duckdb_char_polyhash('w')}
-                             for w in list_filter(string_split(text, ' '),
-                                                  x -> x <> '')]) AS tok
+                     unnest({H.duckdb_nonempty_token_hashes('text')}) AS tok
               FROM documents)
         GROUP BY doc_id, tok
     ),
@@ -1920,8 +1810,7 @@ def text_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated one-row-per-doc reduction.  No joins, no windows.
     Measured @mf: 0.1-class vs 2.39 for the naive (doc, token) groupBy."""
     d = spread_small_scan(load_table(spark, sf_dir, "documents"))
-    ph = H.spark_char_polyhash("w")
-    toks = f"transform(filter(split(text, ' '), x -> x <> ''), w -> {ph})"
+    toks = H.spark_nonempty_token_hashes("text")
     runs = d.select(
         "doc_id",
         F.expr(
@@ -2025,8 +1914,8 @@ def text_lm_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: zero new corpus-level shuffles — the transition stream, the
     unigram table and the KN score tables are the shared session build;
-    this query adds only vocab-bounded det-ln work (cached as a shared
-    slot) and ONE per-doc partial aggregation.
+    this query adds only vocab-bounded det-ln work (cached as its own
+    session-shared entry) and ONE per-doc partial aggregation.
 
     r16 (guide §2.4 — operations keyed the same way share one exchange):
     the unigram-cost and KN-cost legs used to be two separate consumptions
@@ -2042,7 +1931,7 @@ def text_lm_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc join → 1× stream)."""
     t = shared_lm_tables(spark, sf_dir)
 
-    def _build() -> dict:
+    def _build(scope: QueryScope) -> dict:
         tot = t["uni"].agg(F.sum("u").cast("bigint").alias("big_u"))
         tot_ln = DM.spark_with_det_ln(tot, "big_u", "bt").select("bt_ln")
         ucost = DM.spark_with_det_ln(
@@ -2060,25 +1949,23 @@ def text_lm_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ufloor_e6"
             )
         )
-        return {"ux_cost": ucost, "ux_floor": floor}
+        return {"cost": scope.persist(ucost), "floor": floor}
 
-    _shared_slot(t, "ux_cost", _build, ("ux_cost",))
-    ux_floor = t["ux_floor"]  # 1-row OOV constant
-    # Populate the shared KN score-table slots (kn_lmseen/kn_lmctx/
-    # kn_lmcont/kn_k0row); the returned pre-assembled stream is not used —
-    # the fused chain below re-joins the same tables so the unigram leg
-    # can share its exchanges.
-    kn_scored_transitions(spark, sf_dir)
-    k0row = t["kn_k0row"]  # 1-row full-backoff constant
+    ux = session_shared(spark, ("lm_unigram_cost", sf_dir), _build)
+    ux_floor = ux["floor"]  # 1-row OOV constant
+    # The KN score tables, re-joined here rather than through
+    # kn_scored_transitions so the unigram leg can share their exchanges.
+    kn = _kn_tables(spark, sf_dir, t)
+    k0row = kn["k0row"]  # 1-row full-backoff constant
     fused = (
         t["bg_all"]
         .filter(F.col("doc_id") % 10 == 0)
         .withColumn("h1", F.expr(f"k12 div {_TRI_MOD}"))
         .withColumn("h2", F.expr(f"k12 % {_TRI_MOD}"))
-        .join(t["kn_lmseen"], "k12", "left")
-        .join(t["kn_lmctx"], "h1", "left")
-        .join(t["kn_lmcont"], "h2", "left")
-        .join(t["ux_cost"], "h2", "left")
+        .join(kn["lmseen"], "k12", "left")
+        .join(kn["lmctx"], "h1", "left")
+        .join(kn["lmcont"], "h2", "left")
+        .join(ux["cost"], "h2", "left")
         .crossJoin(F.broadcast(k0row))
         .crossJoin(F.broadcast(ux_floor))
         .groupBy("doc_id")

@@ -11,7 +11,7 @@ import functools
 import os
 import threading
 import weakref
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Hashable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -149,18 +149,22 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[st
 # of one query share one entry, unpersisted when the LAST holder releases.
 # Refcounts and persist/unpersist share one lock, so a persist racing the
 # last release re-persists; re-entrant, as a finalizer may run under it.
-_PLAN_REFS: dict[int, list] = {}  # key -> [refcount, DataFrame handle]
+_PLAN_REFS: dict[tuple, list] = {}  # key -> [refcount, DataFrame handle]
 _PLAN_LOCK = threading.RLock()
 
 
-def _plan_key(df: DataFrame) -> int:
+def _plan_key(df: DataFrame) -> tuple[int, int]:
+    """The plan's semantic hash within its SparkContext, so caches a stopped
+    context still counts never pin an equal plan of the next one.  A held
+    handle keeps its context object alive, so the id is not reused."""
+    ctx = id(df.sparkSession.sparkContext)
     try:
-        return int(df._jdf.queryExecution().logical().semanticHash())
+        return ctx, int(df._jdf.queryExecution().logical().semanticHash())
     except Exception:  # pragma: no cover - py4j surface drift
-        return id(df)
+        return ctx, id(df)
 
 
-def _unref(key: int) -> None:
+def _unref(key: tuple) -> None:
     with _PLAN_LOCK:
         ent = _PLAN_REFS.get(key)
         if ent is None:
@@ -253,6 +257,48 @@ def release_persisted(result: DataFrame) -> None:
     fin = getattr(result, "_fns_release", None)
     if fin is not None:
         fin()
+
+
+# Session lifetimes.  Some builds are shared by many queries of a session
+# (the text family's LM tables): ``session_shared`` keeps one per (session,
+# key) on the SparkSession object itself, so a new session, or one created
+# again after stop(), starts with none.  Each entry persists through its own
+# QueryScope, so its caches are refcounted like any query's, and one
+# session's release never evicts another's equal plan.
+def session_shared(
+    spark: SparkSession, key: Hashable, build: Callable[[QueryScope], dict]
+) -> dict:
+    """``build(scope)`` once per (session, key), kept until
+    ``release_session``.  A hit re-registers what the build persisted (a
+    lazy no-op unless ``clearCache()`` evicted it).  Two threads that miss
+    at once both build; the first to publish wins, the other releases."""
+    with _PLAN_LOCK:
+        entry = vars(spark).get("_fns_shared", {}).get(key)
+        if entry is not None:
+            for df, fn in entry[1]._held:
+                if getattr(fn, "func", None) is _unref:  # a scope.persist
+                    df.persist()
+            return entry[0]
+    scope = QueryScope()
+    try:
+        value = build(scope)
+    except BaseException:
+        scope.release()
+        raise
+    with _PLAN_LOCK:
+        entries = vars(spark).setdefault("_fns_shared", {})
+        entry = entries.setdefault(key, (value, scope))
+    if entry[1] is not scope:
+        scope.release()
+    return entry[0]
+
+
+def release_session(spark: SparkSession) -> None:
+    """Free every ``session_shared`` entry of ``spark`` (idempotent)."""
+    with _PLAN_LOCK:
+        entries = vars(spark).pop("_fns_shared", {})
+    for _value, scope in entries.values():
+        scope.release()
 
 
 # r17 (guide §2.2): iterative builders (CC/SSSP/LPA/resolve-groups) run

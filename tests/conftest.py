@@ -14,7 +14,12 @@ import duckdb
 import pytest
 
 from flink_net_spark.session import get_spark
-from flink_net_spark.tables import TABLE_NAMES, release_persisted, table_path
+from flink_net_spark.tables import (
+    TABLE_NAMES,
+    release_persisted,
+    release_session,
+    table_path,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -89,10 +94,8 @@ def persistent_rdd_ids(spark) -> set[int]:
 def assert_matches_oracle(spark, duck, spark_fn, oracle: str, name: str = "?"):
     """Also the registry-wide lifetime check: after collect,
     ``release_persisted`` must free everything the build cached, apart from
-    text.py's session-scoped shared LM tables (the one deliberate
-    exception, dropped here before the check)."""
-    from flink_net_spark.queries.text import release_shared_lm
-
+    the session's ``session_shared`` entries (text.py's shared LM tables,
+    released here before the check)."""
     before = persistent_rdd_ids(spark)
     sdf = spark_fn(spark, SF_DIR)
     assert_flat_schema(sdf, name)
@@ -100,7 +103,7 @@ def assert_matches_oracle(spark, duck, spark_fn, oracle: str, name: str = "?"):
     spark_rows = [tuple(r) for r in sdf.collect()]
     release_persisted(sdf)
     if persistent_rdd_ids(spark) - before:
-        release_shared_lm(spark)
+        release_session(spark)
     leaked = persistent_rdd_ids(spark) - before
     assert not leaked, f"{name}: RDDs {sorted(leaked)} still cached after release"
 

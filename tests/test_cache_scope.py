@@ -5,9 +5,10 @@ rounds; a ``tables.QueryScope`` holds them and is bound to the returned
 DataFrame, so ``release_persisted(result)`` (or, as a backstop, collecting
 the dropped handle) frees them.  The registry-wide check that every query
 releases what it cached lives in ``conftest.assert_matches_oracle``; this
-module covers the exception (the session-scoped shared LM tables, also
-when two threads build LM queries at once), the GC backstop, the scope's
-error path, its concurrency contract, and a static check that nothing else
+module covers the session lifetime (``tables.session_shared``: the shared
+LM tables, also across sessions, across a stopped context and when two
+threads build LM queries at once), the GC backstop, the scope's error
+path, its concurrency contract, and a static check that nothing else
 under ``flink_net_spark/`` caches or checkpoints outside a QueryScope.
 
 Runs in its own module: a module-scoped fixture elsewhere that holds live
@@ -19,9 +20,12 @@ from __future__ import annotations
 
 import ast
 import gc
+import json
 import os
 import pathlib
+import subprocess
 import sys
+import textwrap
 import threading
 import time
 
@@ -31,14 +35,14 @@ from tests.conftest import SF_DIR, persistent_rdd_ids
 
 
 def test_shared_lm_tables_do_not_grow(spark):
-    """The session-scoped shared LM tables (round-10: text.shared_lm_tables)
-    are the ONE deliberate survivor of release_persisted: they appear once,
-    never GROW across LM queries, and vanish on release_shared_lm()."""
+    """The session-shared LM tables (round-10: text.shared_lm_tables) are
+    the ONE deliberate survivor of release_persisted: they appear once,
+    never GROW across LM queries, are registered again after a
+    clearCache(), and vanish on release_session()."""
     from flink_net_spark.queries import QUERIES
-    from flink_net_spark.queries.text import release_shared_lm
-    from flink_net_spark.tables import release_persisted
+    from flink_net_spark.tables import release_persisted, release_session
 
-    release_shared_lm(spark)
+    release_session(spark)
     gc.collect()  # flush finalizers pending from earlier modules
     baseline = persistent_rdd_ids(spark)
     shared = None
@@ -53,7 +57,42 @@ def test_shared_lm_tables_do_not_grow(spark):
             assert live, "expected the shared LM build to stay cached"
             shared = live
         assert live <= shared, (name, live - shared)
-    release_shared_lm(spark)
+    # clearCache() evicts them; the next LM query registers them again,
+    # and no more of them than the first build cached
+    spark.catalog.clearCache()
+    baseline = persistent_rdd_ids(spark)
+    df = QUERIES["text_backoff_nll"](spark, SF_DIR)
+    df.collect()
+    release_persisted(df)
+    live = persistent_rdd_ids(spark) - baseline
+    assert live, "expected the shared LM tables to be cached again"
+    assert len(live) <= len(shared), (live, shared)
+    release_session(spark)
+    assert persistent_rdd_ids(spark) - baseline == set()
+
+
+def test_lm_release_in_one_session_keeps_anothers_tables(spark):
+    """Two sessions of one SparkContext share one CacheManager.  Releasing
+    the second session's LM tables must not evict the first's equal plans
+    from under it; releasing both leaves the baseline."""
+    from flink_net_spark.queries import QUERIES
+    from flink_net_spark.tables import release_persisted, release_session
+
+    other = spark.newSession()
+    release_session(spark)
+    gc.collect()
+    baseline = persistent_rdd_ids(spark)
+    df = QUERIES["text_kn_bigram_nll"](spark, SF_DIR)
+    rows = df.collect()
+    release_persisted(df)
+    shared = persistent_rdd_ids(spark) - baseline
+    assert shared, "expected the shared LM build to stay cached"
+    df = QUERIES["text_kn_bigram_nll"](other, SF_DIR)
+    assert df.collect() == rows
+    release_persisted(df)
+    release_session(other)
+    assert shared <= persistent_rdd_ids(spark), shared - persistent_rdd_ids(spark)
+    release_session(spark)
     assert persistent_rdd_ids(spark) - baseline == set()
 
 
@@ -73,30 +112,124 @@ def test_gc_backstop_releases_dropped_result(spark):
         assert persistent_rdd_ids(spark) - baseline == set(), name
 
 
-def test_purge_dead_lm_entries_unpersists_through_handles(spark):
-    """Round-11 ADVICE: when a shared-LM entry's creating session is gone
-    but the SparkContext still lives (the newSession case), purging must
-    release the JVM caches THROUGH the stored DataFrame handles before
-    dropping the dict entry — not leak them.  And the token fallback must
-    never be id()-based (aliasing after GC reuse)."""
-    import weakref
+def test_session_entries_are_per_session_and_release_their_caches(spark):
+    """A session_shared entry is built once per session: a hit builds
+    nothing, a second session of the same SparkContext never reuses the
+    first's entry, and releasing an entry unpersists its caches while the
+    SparkContext lives (the other session's equal plan stays cached)."""
+    from flink_net_spark.tables import release_session, session_shared
 
-    from flink_net_spark.queries import text as T
+    other = spark.newSession()
+    built = []
 
-    df = spark.range(10).persist()
-    df.count()
-    assert df.storageLevel.useMemory
+    def build_in(session):
+        def build(scope):
+            built.append(session)
+            df = scope.persist(session.range(10))
+            df.count()
+            return {"df": df}
 
-    class Ephemeral:
-        pass
+        return build
 
-    ghost = Ephemeral()
-    key = ("test-app", -1, "test-dir")
-    T._LM_SHARED[key] = {"toks": df, "_session_ref": weakref.ref(ghost)}
-    del ghost  # CPython refcount: the weakref is dead immediately
-    T._purge_dead_lm_entries()
-    assert key not in T._LM_SHARED
-    assert not df.storageLevel.useMemory  # unpersisted, not leaked
+    mine = session_shared(spark, "probe", build_in(spark))
+    assert session_shared(spark, "probe", build_in(spark)) is mine
+    theirs = session_shared(other, "probe", build_in(other))
+    assert built == [spark, other] and theirs is not mine
+    release_session(other)
+    assert mine["df"].storageLevel.useMemory  # still backs this session
+    release_session(spark)
+    assert not mine["df"].storageLevel.useMemory  # unpersisted, not leaked
+    assert session_shared(spark, "probe", build_in(spark)) is not mine
+    release_session(spark)
+    assert not mine["df"].storageLevel.useMemory
+
+
+def test_concurrent_session_misses_publish_one_entry(spark):
+    """Threads that miss one session_shared key at once all get the one
+    published entry; the losing builds release what they persisted, so
+    releasing the session leaves no cache and no plan reference behind."""
+    from flink_net_spark.tables import _PLAN_REFS, release_session, session_shared
+
+    release_session(spark)
+    gc.collect()
+    baseline, refs = persistent_rdd_ids(spark), set(_PLAN_REFS)
+    start = threading.Barrier(8)
+    got, errors = [], []
+
+    def build(scope):
+        df = scope.persist(spark.range(13))
+        df.count()
+        return {"df": df}
+
+    def run() -> None:
+        try:
+            start.wait()
+            got.append(session_shared(spark, "race", build))
+        except BaseException as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and len(got) == 8
+    assert all(g is got[0] for g in got)
+    assert got[0]["df"].storageLevel.useMemory
+    release_session(spark)
+    assert persistent_rdd_ids(spark) - baseline == set()
+    assert set(_PLAN_REFS) == refs
+
+
+# Holds a session_shared entry in one SparkContext, stops it without a
+# release, then builds and releases the same entry in a new context; prints
+# how many RDDs the new context still caches after its release.
+STOP_THEN_REBUILD = textwrap.dedent(
+    """
+    import json
+    from flink_net_spark.session import get_spark
+    from flink_net_spark.tables import release_session, session_shared
+
+    def build_in(session):
+        def build(scope):
+            scope.persist(session.range(10)).count()
+            return {}
+        return build
+
+    def cached(session):
+        return session.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    first = get_spark("stopped-context", master="local[1]", shuffle_partitions=1)
+    session_shared(first, "probe", build_in(first))
+    first.stop()
+    second = get_spark("next-context", master="local[1]", shuffle_partitions=1)
+    before = cached(second)
+    session_shared(second, "probe", build_in(second))
+    release_session(second)
+    print(json.dumps({"left": cached(second) - before}))
+    second.stop()
+    """
+)
+
+
+def test_stopped_context_does_not_pin_the_next_ones_caches(tmp_path):
+    """A session stopped while it still holds entries leaves their plan
+    references behind.  An equal plan in the next SparkContext is counted
+    apart from them, so its release unpersists it."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    env = dict(os.environ, PYTHONPATH=str(root), TMPDIR=str(tmp_path))
+    proc = subprocess.run(
+        [sys.executable, "-c", STOP_THEN_REBUILD],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == {"left": 0}
 
 
 def test_keep_best_forwards_deterministic_release(spark):
@@ -278,14 +411,13 @@ def test_shuffle_partitions_scopes_do_not_interleave(spark):
 def test_lm_queries_share_the_session_from_two_threads(spark):
     """Two LM consumers built at once from two threads, the way
     sim_ann_planted_recall shares a session, both go through the shared
-    LM memo: each result equals its serial result, and releasing both
-    results and the memo leaves no cache and no plan reference behind."""
+    LM tables: each result equals its serial result, and releasing both
+    results and the session leaves no cache and no plan reference behind."""
     from flink_net_spark.queries import QUERIES
-    from flink_net_spark.queries.text import release_shared_lm
-    from flink_net_spark.tables import _PLAN_REFS, release_persisted
+    from flink_net_spark.tables import _PLAN_REFS, release_persisted, release_session
 
     names = ("text_kn_bigram_nll", "curation_perplexity_gate")
-    release_shared_lm(spark)
+    release_session(spark)
     gc.collect()
     baseline = persistent_rdd_ids(spark)
     refs = set(_PLAN_REFS)
@@ -294,7 +426,7 @@ def test_lm_queries_share_the_session_from_two_threads(spark):
         df = QUERIES[name](spark, SF_DIR)
         serial[name] = sorted(tuple(r) for r in df.collect())
         release_persisted(df)
-    release_shared_lm(spark)
+    release_session(spark)
     assert persistent_rdd_ids(spark) - baseline == set()
     start = threading.Barrier(2)
     built, errors = {}, []
@@ -323,31 +455,22 @@ def test_lm_queries_share_the_session_from_two_threads(spark):
         assert built[name][1] == serial[name], name
     for df, _rows in built.values():
         release_persisted(df)
-    release_shared_lm(spark)
+    release_session(spark)
     assert persistent_rdd_ids(spark) - baseline == set()
     assert set(_PLAN_REFS) == refs
-
-
-# The session-scoped LM memo (ROADMAP item 3): its two re-persists are the
-# one cache path outside a QueryScope.  Delete the entry with the memo.
-_LM_MEMO_PERSISTS = {
-    ("queries/text.py", "shared_lm_tables"),
-    ("queries/text.py", "_shared_slot"),
-}
 
 
 def test_only_query_scopes_cache():
     """No ``.persist(``, ``.cache()``, ``.checkpoint(`` or
     ``.localCheckpoint(`` call under flink_net_spark/ outside tables.py,
-    except on a parameter annotated ``QueryScope`` of an enclosing function
-    (and the LM memo above): every other cache and checkpoint goes through
-    a QueryScope, which ties it to the result that reads it."""
+    except on a parameter annotated ``QueryScope`` of an enclosing function:
+    every cache and checkpoint goes through a QueryScope, which ties it to
+    the result (or the session entry) that reads it."""
     pkg = pathlib.Path(__file__).resolve().parents[1] / "flink_net_spark"
     found = []
 
-    def visit(node, rel: str, func: str, scopes: frozenset) -> None:
+    def visit(node, rel: str, scopes: frozenset) -> None:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            func = node.name
             a = node.args
             scopes = scopes | {
                 p.arg
@@ -362,13 +485,13 @@ def test_only_query_scopes_cache():
         ):
             recv = node.func.value
             on_scope = isinstance(recv, ast.Name) and recv.id in scopes
-            if not on_scope and (rel, func) not in _LM_MEMO_PERSISTS:
+            if not on_scope:
                 found.append(f"{rel}:{node.lineno}")
         for child in ast.iter_child_nodes(node):
-            visit(child, rel, func, scopes)
+            visit(child, rel, scopes)
 
     for path in sorted(pkg.rglob("*.py")):
         rel = path.relative_to(pkg).as_posix()
         if rel != "tables.py":
-            visit(ast.parse(path.read_text(), str(path)), rel, "", frozenset())
+            visit(ast.parse(path.read_text(), str(path)), rel, frozenset())
     assert found == [], f"cache/checkpoint calls outside a QueryScope: {found}"

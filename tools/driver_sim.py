@@ -4,19 +4,24 @@
 oracle at sf0.01, and report rows/schema/hash matches per query.
 
 Usage: python tools/driver_sim.py [sf_dir] [name_substring ...]
+
+Each query's record is written to a fresh ``driver_sim_*.json`` temp file,
+whose path is printed after the green tally.
 """
 
 from __future__ import annotations
 
 import json
 import math
+import os
 import sys
+import tempfile
 import time
 
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = sys.argv[2:]
@@ -142,8 +147,10 @@ def main():
         print(("PASS" if ok else "FAIL"), name, rec.get("sec"), rec.get("err", "")[:160], flush=True)
 
     print(f"\n{n_green}/{len(names)} green")
-    with open("/tmp/driver_sim.json", "w") as f:
+    fd, out = tempfile.mkstemp(prefix="driver_sim_", suffix=".json")
+    with os.fdopen(fd, "w") as f:
         json.dump(results, f, indent=1, default=str)
+    print(f"results: {out}")
     bad = {k: v for k, v in results.items() if v.get("hash_match") is False or v.get("err")}
     if bad:
         print(json.dumps(bad, indent=1, default=str))
