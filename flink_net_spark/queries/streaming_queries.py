@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
 from flink_net_spark.queries import query
-from flink_net_spark.session import env_positive_int, publish_once
+from flink_net_spark.session import publish_once
 from flink_net_spark.sinks import UpsertSink, run_to_completion
 from flink_net_spark.sources import parquet_stream, replay_table_as_stream
 from flink_net_spark.streaming import session, tumbling, with_bounded_out_of_orderness
@@ -69,8 +69,7 @@ _STAGE_LAYOUT = "published-dir"
 # clamped — at sf0.1 (~40k band rows) this lands on the measured-good 128;
 # a 10× corpus gets 10× the shards, keeping per-shard blob size (and the
 # per-touch state-store write amplification) roughly constant.  Pow2 so
-# the pmod spreads xxhash64 uniformly.  Env-overridable for cluster sizing
-# like SPARK_GRAFT_SHUFFLE_PARTITIONS.  The shard count is PHYSICAL layout
+# the pmod spreads xxhash64 uniformly.  The shard count is PHYSICAL layout
 # only — the emitted candidate set is identical under any value (pinned by
 # test_stream_incremental_minhash_equals_batch).
 _INC_TARGET_BUCKETS_PER_SHARD = 300
@@ -78,8 +77,6 @@ _INC_SHARDS_MIN, _INC_SHARDS_MAX = 32, 4096
 
 
 def _inc_state_shards(n_band_rows: int) -> int:
-    if env := env_positive_int("SPARK_GRAFT_INC_STATE_SHARDS"):
-        return env
     n = max(1, n_band_rows // _INC_TARGET_BUCKETS_PER_SHARD)
     return max(_INC_SHARDS_MIN, min(_INC_SHARDS_MAX, 1 << (n.bit_length() - 1)))
 
@@ -170,8 +167,8 @@ def _write_chunks(df: DataFrame, out_dir: str, n_chunks: int) -> None:
 
 
 # Shuffle partitions of the bounded stream drains (state volume; see
-# _run_stream), env-overridable for cluster sizing.
-STREAM_SHUFFLE_PARTITIONS = env_positive_int("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", 8)
+# _run_stream).
+STREAM_SHUFFLE_PARTITIONS = 8
 
 
 def _run_stream(df: DataFrame, mode: str = "complete") -> DataFrame:
@@ -855,8 +852,9 @@ def stream_cdc_upsert_snapshot(
     """CDC materialization end-to-end: the event stream is treated as a
     keyed changelog (event_id = the LSN), drained through
     ``sinks.UpsertSink`` — per-batch argmax compaction, snapshot merge that
-    tolerates out-of-order delivery, versioned atomic publish, batchId
-    replay skip — and the FINAL PUBLISHED SNAPSHOT is hash-checked against
+    tolerates out-of-order delivery, one snapshot per batch published as
+    ``batch_id=<batchId>`` by one rename, a replayed batch read in full and
+    then skipped — and the FINAL PUBLISHED SNAPSHOT is hash-checked against
     the batch argmax truth.  This gates the materialized-view maintenance
     path itself (≙ the reference's keyed-state Redis sink,
     RedisIncrementSinkFunction.cs:1, as an upsert sink on a retract
@@ -1271,7 +1269,7 @@ def stream_incremental_minhash(
     # warm drain, with addBatch ~8-10 s and RocksDB commit ~6.5-7 s/batch.
     # The PHYSICAL state key is now a bounded shard `g = hash(b, band_key)
     # mod n_shards` (r17: n_shards derived from the staged band-row count,
-    # env-overridable — see _inc_state_shards); each shard's state blob
+    # see _inc_state_shards); each shard's state blob
     # holds the per-bucket
     # (olds, news) lists keyed "b:band_key", and the handler re-groups its
     # batch rows per bucket, so the LOGICAL accumulation — and therefore

@@ -40,7 +40,7 @@ from typing import Callable
 from pyspark.sql import SparkSession
 
 
-def env_positive_int(name: str, default: int | None = None) -> int | None:
+def env_positive_int(name: str, default: int) -> int:
     """The positive integer in environment variable ``name``, or
     ``default`` when it is unset or empty; any other value raises
     ValueError naming the variable."""

@@ -12,8 +12,9 @@ Reference contracts:
   - ``ITransactionalSinkFunction`` 2-phase-commit
     (Sinks/ITransactionalSinkFunction.cs:8) → ``TransactionalParquetSink``:
     Spark's micro-batch commit log plays the coordinator; the sink makes the
-    batch write atomic+idempotent (stage to temp, rename, skip committed
-    batchIds), which under checkpointed replay yields exactly-once output —
+    batch write atomic+idempotent (stage to temp, rename, a published batch
+    dir is never rewritten), which under checkpointed replay yields
+    exactly-once output —
     the same guarantee the reference builds from barriers + 2PC
     (docs/wiki/Core-Concepts-Exactly-Once-Semantics.md).
   - ``RedisIncrementSinkFunction`` counter sink
@@ -23,15 +24,20 @@ Reference contracts:
     global-sequence verification (stress_test_passed_output.txt:85-104).
 
 Scale: every sink is executor-side (foreachBatch receives a distributed
-DataFrame); the only driver-side state is the tiny batchId commit log.
+DataFrame).  The exactly-once sinks keep no driver-side log: a batch is
+committed exactly when its output is published under the sink's directory,
+by one rename out of the hidden ``.staging/`` dir (``_publish``), and a
+replayed batch whose output is published is read in full, then skipped.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -124,18 +130,50 @@ class ForeachSinkAdapter:
             self._on_close(error)
 
 
+def _publish(out_dir: str, name: str, write: Callable[[str], None]) -> bool:
+    """The sinks' one commit rule: ``out_dir/name`` is written once.
+    ``write(path)`` builds it (a file or a dir) inside the hidden
+    ``out_dir/.staging/`` and one rename publishes it, so a published name is
+    always complete and its existence records the commit.  Returns False,
+    without calling ``write``, when ``name`` is already published."""
+    final = os.path.join(out_dir, name)
+    if os.path.exists(final):
+        return False
+    staging = os.path.join(out_dir, ".staging", f"{name}-{uuid.uuid4().hex}")
+    os.makedirs(os.path.dirname(staging), exist_ok=True)
+    write(staging)
+    os.replace(staging, final)
+    return True
+
+
+def _consume(batch_df: DataFrame) -> None:
+    """Read a replayed batch in full and write nothing.  Upstream stateful
+    operators commit their state-store deltas only when every partition is
+    processed, and Spark validates those commits per batch, so a replay that
+    skips the read would leave their state uncommitted."""
+    batch_df.write.format("noop").mode("overwrite").save()
+
+
+def _published_batches(out_dir: str) -> set[int]:
+    """Batch ids published under ``out_dir`` as ``batch_id=<id>``."""
+    if not os.path.isdir(out_dir):
+        return set()
+    return {int(n.split("=", 1)[1]) for n in os.listdir(out_dir) if n.startswith("batch_id=")}
+
+
 @dataclass
 class TransactionalParquetSink:
     """Exactly-once parquet sink as idempotent ``foreachBatch``.
 
     2PC mapping (≙ ITransactionalSinkFunction.cs:8 BeginTransaction/
     PreCommit/Commit/Abort):
-      - BeginTransaction → write batch to ``<out>/.staging/<batchId>-<uuid>``
+      - BeginTransaction → write batch to ``<out>/.staging/batch_id=<batchId>-<uuid>``
       - PreCommit        → staging write completes (any failure = auto-abort,
                            the orphaned staging dir is ignored)
-      - Commit           → atomic rename to ``<out>/batch_id=<batchId>`` +
-                           append to the commit log
-      - replayed batch   → batchId already in commit log → skip (idempotent)
+      - Commit           → atomic rename to ``<out>/batch_id=<batchId>``; the
+                           published dir is the commit record
+      - replayed batch   → ``batch_id=<batchId>`` already published → read the
+                           batch in full, write nothing (idempotent)
 
     Under checkpoint-restart Spark replays the last uncommitted batch with
     the SAME batchId, so output is exactly-once end-to-end.
@@ -143,40 +181,12 @@ class TransactionalParquetSink:
 
     out_dir: str
 
-    def _log_path(self) -> str:
-        return os.path.join(self.out_dir, "_commits.json")
-
     def committed_batches(self) -> set[int]:
-        try:
-            with open(self._log_path()) as fh:
-                return set(json.load(fh))
-        except (OSError, ValueError):
-            return set()
+        return _published_batches(self.out_dir)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        committed = self.committed_batches()
-        if batch_id in committed:
-            # Replay after restart — output already durable, so don't write.
-            # The batch must still be CONSUMED in full: upstream stateful
-            # operators only commit their state-store deltas when every
-            # partition is processed, and Spark validates those commits per
-            # batch.  A noop-format write drains all partitions without
-            # touching the sink output (the "abort keeps the transaction
-            # side-effect-free" half of the 2PC contract).
-            batch_df.write.format("noop").mode("overwrite").save()
-            return
-        final = os.path.join(self.out_dir, f"batch_id={batch_id}")
-        staging = os.path.join(self.out_dir, ".staging", f"{batch_id}-{uuid.uuid4().hex}")
-        batch_df.write.mode("overwrite").parquet(staging)
-        if os.path.exists(final):
-            shutil.rmtree(final)  # half-renamed prior attempt
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        os.replace(staging, final)
-        committed.add(batch_id)
-        tmp_log = self._log_path() + ".tmp"
-        with open(tmp_log, "w") as fh:
-            json.dump(sorted(committed), fh)
-        os.replace(tmp_log, self._log_path())
+        if not _publish(self.out_dir, f"batch_id={batch_id}", batch_df.write.parquet):
+            _consume(batch_df)
 
     def writer(self, df: DataFrame, checkpoint: str) -> DataStreamWriter:
         return df.writeStream.foreachBatch(self).option("checkpointLocation", checkpoint)
@@ -185,20 +195,21 @@ class TransactionalParquetSink:
 @dataclass
 class CounterSink:
     """Idempotent counting sink ≙ RedisIncrementSinkFunction (201 LoC of
-    Lua-batched INCRBY in the reference).  Persists one JSON file per
-    batchId (atomic rename), so a replayed batch overwrites rather than
-    double-counts; ``total()`` sums the per-batch counts — the reference's
-    Redis global-sequence invariant check."""
+    Lua-batched INCRBY in the reference).  Publishes one JSON file per
+    batchId, ``batch-<batchId>.json``, so a replayed batch is counted once;
+    ``total()`` sums the per-batch counts — the reference's Redis
+    global-sequence invariant check."""
 
     state_dir: str
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        n = batch_df.count()
-        os.makedirs(self.state_dir, exist_ok=True)
-        tmp = os.path.join(self.state_dir, f".{batch_id}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"batch_id": batch_id, "count": n}, fh)
-        os.replace(tmp, os.path.join(self.state_dir, f"batch-{batch_id}.json"))
+        n = batch_df.count()  # reads a replayed batch in full too
+
+        def write(path: str) -> None:
+            with open(path, "w") as fh:
+                json.dump({"batch_id": batch_id, "count": n}, fh)
+
+        _publish(self.state_dir, f"batch-{batch_id}.json", write)
 
     def total(self) -> int:
         total = 0
@@ -299,8 +310,9 @@ class DeadLetterSink:
     directory with batch/reason metadata, and ``resubmit`` reads the DLQ
     back as a source so repaired records re-enter the pipeline.
 
-    Exactly-once: both writes key their directory on batchId, so a replayed
-    batch overwrites its own prior output instead of duplicating it.
+    Exactly-once: each output is published once as ``batch_id=<batchId>``
+    (2PC Commit = the rename out of ``.staging/``), so a replayed batch leaves
+    the output it already committed as it stands.
     Executor-side throughout; the split predicate is a Column (codegen).
     """
 
@@ -313,16 +325,16 @@ class DeadLetterSink:
         from pyspark.sql import functions as F
 
         cond = F.expr(self.invalid_cond_sql)
-        batch_df.filter(~cond).write.mode("overwrite").parquet(
-            os.path.join(self.main_path, f"batch_id={batch_id}")
-        )
-        (
+        name = f"batch_id={batch_id}"
+        dead = (
             batch_df.filter(cond)
             .withColumn("dlq_reason", F.lit(self.reason))
             .withColumn("dlq_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.dlq_path, f"batch_id={batch_id}"))
         )
+        wrote_main = _publish(self.main_path, name, batch_df.filter(~cond).write.parquet)
+        wrote_dlq = _publish(self.dlq_path, name, dead.write.parquet)
+        if not (wrote_main or wrote_dlq):
+            _consume(batch_df)
 
     def writer(self, df: DataFrame, checkpoint: str) -> DataStreamWriter:
         return (
@@ -346,10 +358,12 @@ class UpsertSink:
     retract stream).
 
     Each micro-batch is compacted to its newest row per key (max ``seq_col``),
-    merged with the current snapshot (old rows for touched keys are
-    replaced), and published as a new immutable snapshot version with an
-    atomic pointer swap.  Replayed batchIds are skipped via the version log,
-    so checkpoint-restart keeps the snapshot exactly-once.
+    merged with the newest published snapshot (old rows for touched keys are
+    replaced), and published as a new immutable snapshot ``batch_id=<batchId>``
+    named by the batch that produced it (2PC Commit = the rename out of
+    ``.staging/``).  A replayed batchId whose snapshot is published is read in
+    full and writes nothing, so checkpoint-restart keeps the snapshot
+    exactly-once.  Every snapshot is kept.
 
     Scale: the merge is a key-partitioned anti-join + union — one shuffle on
     the key.  Rewriting the full snapshot per batch is the plain-parquet
@@ -363,62 +377,35 @@ class UpsertSink:
     key_cols: tuple[str, ...]
     seq_col: str
 
-    def _meta_path(self) -> str:
-        return os.path.join(self.out_dir, "_upsert_meta.json")
-
-    def _meta(self) -> dict:
-        try:
-            with open(self._meta_path()) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return {"version": -1, "batches": []}
+    def _newest(self) -> str | None:
+        ids = _published_batches(self.out_dir)
+        return os.path.join(self.out_dir, f"batch_id={max(ids)}") if ids else None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
-        meta = self._meta()
-        if batch_id in meta["batches"]:
-            return  # replay after restart — snapshot already reflects it
-        keys = list(self.key_cols)
-        w = Window.partitionBy(*keys).orderBy(F.col(self.seq_col).desc())
-        latest = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        spark = batch_df.sparkSession
-        if meta["version"] >= 0:
-            cur = spark.read.parquet(os.path.join(self.out_dir, f"v{meta['version']}"))
-            # argmax over snapshot ∪ batch, not "batch wins": an
-            # out-of-order changelog may deliver an older row later.
-            merged = (
-                cur.unionByName(latest)
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        else:
-            merged = latest
-        new_version = meta["version"] + 1
-        staging = os.path.join(self.out_dir, ".staging", f"{new_version}-{uuid.uuid4().hex}")
-        merged.write.mode("overwrite").parquet(staging)
-        final = os.path.join(self.out_dir, f"v{new_version}")
-        if os.path.exists(final):
-            shutil.rmtree(final)  # half-published prior attempt
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        os.replace(staging, final)
-        meta = {"version": new_version, "batches": sorted(meta["batches"] + [batch_id])}
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, self._meta_path())
+        w = Window.partitionBy(*self.key_cols).orderBy(F.col(self.seq_col).desc())
+
+        def argmax(df: DataFrame) -> DataFrame:
+            return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+
+        def write(path: str) -> None:
+            merged = latest = argmax(batch_df)
+            if (newest := self._newest()) is not None:
+                # argmax over snapshot ∪ batch, not "batch wins": an
+                # out-of-order changelog may deliver an older row later.
+                merged = argmax(batch_df.sparkSession.read.parquet(newest).unionByName(latest))
+            merged.write.parquet(path)
+
+        if not _publish(self.out_dir, f"batch_id={batch_id}", write):
+            _consume(batch_df)
 
     def snapshot(self, spark) -> DataFrame:
-        meta = self._meta()
-        if meta["version"] < 0:
+        newest = self._newest()
+        if newest is None:
             raise FileNotFoundError(f"no snapshot published under {self.out_dir}")
-        return spark.read.parquet(os.path.join(self.out_dir, f"v{meta['version']}"))
+        return spark.read.parquet(newest)
 
     def writer(self, df: DataFrame, checkpoint: str) -> DataStreamWriter:
         return df.writeStream.foreachBatch(self).option("checkpointLocation", checkpoint)
@@ -455,10 +442,6 @@ def compact_parquet(
     filesystem; a ``path`` that is itself a mount point would fail the
     rename (EXDEV) before anything is touched.  Returns the new file
     count."""
-    import math
-    import os
-    import shutil
-
     staging = path.rstrip("/") + "._compacting"
     backup = path.rstrip("/") + "._precompact"
     if os.path.exists(backup):

@@ -15,7 +15,6 @@ from collections.abc import Callable, Hashable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from flink_net_spark.session import env_positive_int
 
 TABLE_NAMES = [
     "region",
@@ -306,14 +305,12 @@ def release_session(spark: SparkSession) -> None:
 # floored at 4, instead of the session default — at sf0.1 each round's
 # frame is a few thousand rows (tools/exp_iter_parts.py, fingerprints
 # identical: CC 6.60→3.36 s, SSSP 5.79→3.20 s, LPA 3.77→2.70 s,
-# resolve_groups 2.80→1.99 s).  Env-overridable for cluster sizing.
+# resolve_groups 2.80→1.99 s).
 _ITER_PART_TARGET_BYTES = 128 * 1024 * 1024
 _ITER_PART_FLOOR = 4
 
 
 def derived_shuffle_partitions(sf_dir: str, tables: list[str]) -> int:
-    if env := env_positive_int("SPARK_GRAFT_ITER_SHUFFLE_PARTITIONS"):
-        return env
     total = sum(table_disk_bytes(sf_dir, t) for t in tables)
     return max(_ITER_PART_FLOOR, -(-total // _ITER_PART_TARGET_BYTES))
 

@@ -203,9 +203,9 @@ def test_stage_dir_sweeps_aged_legacy_dirs(tmp_path):
     assert not os.path.exists(legacy), "aged legacy staging dir not swept"
 
 
-def test_derived_shuffle_partitions(tmp_path, monkeypatch):
+def test_derived_shuffle_partitions(tmp_path):
     """Input-byte derivation: floor at 4 for tiny corpora, grows with bytes
-    (128 MB/partition), sums directory-backed tables, env override wins."""
+    (128 MB/partition), sums directory-backed tables."""
     from flink_net_spark.tables import derived_shuffle_partitions
 
     # single-file table
@@ -221,13 +221,11 @@ def test_derived_shuffle_partitions(tmp_path, monkeypatch):
             f.truncate(100 * 1024 * 1024)
     # 700 MB / 128 MB -> ceil = 6 (> the floor of 4, so the sum is visible)
     assert derived_shuffle_partitions(str(tmp_path), ["orders"]) == 6
-    monkeypatch.setenv("SPARK_GRAFT_ITER_SHUFFLE_PARTITIONS", "11")
-    assert derived_shuffle_partitions(str(tmp_path), ["orders"]) == 11
 
 
-def test_inc_state_shards_derivation_and_override(monkeypatch):
+def test_inc_state_shards_derivation_and_override():
     """Derived shard count scales with the band-row estimate (bounded both
-    ends) and the env override wins."""
+    ends).  No environment variable overrides it."""
     from flink_net_spark.queries.streaming_queries import _inc_state_shards
 
     # derivation: rows / target-per-shard, clamped
@@ -237,31 +235,18 @@ def test_inc_state_shards_derivation_and_override(monkeypatch):
     lo = _inc_state_shards(40_000)
     hi = _inc_state_shards(400_000)
     assert hi > lo, "shard count must grow with the corpus"
-    monkeypatch.setenv("SPARK_GRAFT_INC_STATE_SHARDS", "7")
-    assert _inc_state_shards(40_000) == 7
 
 
-_ENV_KNOBS = [
-    "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-    "SPARK_GRAFT_ITER_SHUFFLE_PARTITIONS",
-    "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS",
-    "SPARK_GRAFT_INC_STATE_SHARDS",
-]
+_ENV_KNOBS = ["SPARK_GRAFT_SHUFFLE_PARTITIONS"]
 
 
 @pytest.mark.parametrize("raw", ["0", "-3", "abc"])
 @pytest.mark.parametrize("var", _ENV_KNOBS)
 def test_env_knobs_reject_non_positive_ints(var, raw):
     """Every positive-int env knob is read through one validated parser: a
-    bad value fails with a ValueError naming the variable, at import for
-    the import-time knobs and at first use for the derived ones.  Each
+    bad value fails at import with a ValueError naming the variable.  Each
     case runs in a fresh interpreter so import-time reads are exercised."""
-    code = (
-        "from flink_net_spark.queries import streaming_queries as S\n"
-        "from flink_net_spark import tables as T\n"
-        "T.derived_shuffle_partitions('.', [])\n"
-        "S._inc_state_shards(1)\n"
-    )
+    code = "from flink_net_spark.queries import streaming_queries\n"
     env = {k: v for k, v in os.environ.items() if k not in _ENV_KNOBS}
     env[var] = raw
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -18,6 +18,7 @@ from flink_net_spark.sinks import (
     CounterSink,
     ForeachSinkAdapter,
     TransactionalParquetSink,
+    UpsertSink,
     memory_sink,
     run_to_completion,
 )
@@ -50,13 +51,14 @@ def test_exact_count_invariant(spark, events_stream, tmp_path):
     assert len(batches) >= 4
 
 
-class _FailingOnceSink(TransactionalParquetSink):
+class _FailOnce:
     """Commits the batch, then dies once — the crash window between sink
     commit and Spark's checkpoint commit, the classic double-write hazard
-    that 2PC/idempotency must close (≙ reliability-test fault injection)."""
+    that 2PC/idempotency must close (≙ reliability-test fault injection).
+    Mixed in ahead of a sink class, whose own arguments come first."""
 
-    def __init__(self, out_dir: str, fail_at_batch: int, flag_path: str):
-        super().__init__(out_dir)
+    def __init__(self, *sink_args, fail_at_batch: int, flag_path: str):
+        super().__init__(*sink_args)
         self.fail_at_batch = fail_at_batch
         self.flag_path = flag_path
 
@@ -66,6 +68,14 @@ class _FailingOnceSink(TransactionalParquetSink):
             with open(self.flag_path, "w") as fh:
                 fh.write("injected")
             raise RuntimeError("injected failure after sink commit")
+
+
+class _FailingOnceSink(_FailOnce, TransactionalParquetSink):
+    pass
+
+
+class _FailingOnceUpsertSink(_FailOnce, UpsertSink):
+    pass
 
 
 def test_exactly_once_kill_restart(spark, tmp_path):
@@ -362,33 +372,84 @@ def test_dead_letter_sink_splits_and_resubmits(spark, events_stream, tmp_path):
     assert sorted(back.columns) == sorted(ev.columns)
 
 
+def _user_event_ids(df) -> list[tuple[int, int]]:
+    return sorted((r.user_id, r.event_id) for r in df.select("user_id", "event_id").collect())
+
+
+def _argmax_truth(spark) -> list[tuple[int, int]]:
+    """One row per user_id, the one with the highest event_id: what an
+    UpsertSink snapshot of the events changelog must hold."""
+    events = load_table(spark, SF_DIR, "events")
+    return _user_event_ids(events.groupBy("user_id").agg(F.max("event_id").alias("event_id")))
+
+
 def test_upsert_sink_latest_state_per_key(spark, events_stream, tmp_path):
     """CDC upsert: replaying the events changelog through UpsertSink must
     leave exactly one row per user_id — the one with the highest event_id —
     identical to the batch argmax truth, and replaying a committed batchId
     must be a no-op (exactly-once snapshot)."""
-    from pyspark.sql.window import Window
-
-    from flink_net_spark.sinks import UpsertSink
-
     sink = UpsertSink(str(tmp_path / "upsert"), key_cols=("user_id",), seq_col="event_id")
     run_to_completion(sink.writer(events_stream, str(tmp_path / "ckpt")))
 
-    snap = sink.snapshot(spark)
-    batch = load_table(spark, SF_DIR, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("event_id").desc())
-    truth = batch.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+    want = _argmax_truth(spark)
+    assert _user_event_ids(sink.snapshot(spark)) == want
 
-    assert snap.count() == truth.count()
-    got = {(r.user_id, r.event_id) for r in snap.select("user_id", "event_id").collect()}
-    want = {(r.user_id, r.event_id) for r in truth.select("user_id", "event_id").collect()}
-    assert got == want
+    # replaying an already-committed batchId publishes nothing new and
+    # leaves the snapshot unchanged
+    published = sorted(os.listdir(sink.out_dir))
+    assert "batch_id=0" in published
+    sink(load_table(spark, SF_DIR, "events").limit(5), 0)
+    assert sorted(os.listdir(sink.out_dir)) == published
+    assert _user_event_ids(sink.snapshot(spark)) == want
 
-    # replaying an already-committed batchId must not bump the version
-    v_before = sink._meta()["version"]
-    replay_id = sink._meta()["batches"][0]
-    sink(batch.limit(5), replay_id)
-    assert sink._meta()["version"] == v_before
+
+def test_upsert_sink_restart_behind_stateful_upstream(spark, tmp_path):
+    """Kill the query after UpsertSink published batch 1 but before Spark
+    checkpointed it, behind a stateful ``dropDuplicates``; restart from the
+    same checkpoint.  The replayed batch must be read in full (so the
+    upstream's state commits) and write nothing: the final snapshot equals
+    the batch argmax truth, each batch id is published once, and nothing is
+    left in ``.staging``."""
+    stream = replay_table_as_stream(
+        spark, SF_DIR, "events", str(tmp_path / "stage"), n_chunks=6, max_files_per_trigger=1
+    ).dropDuplicates(["event_id"])
+    out_dir = str(tmp_path / "upsert")
+    ckpt = str(tmp_path / "ckpt")
+    keys = ("user_id",)
+    fail_sink = _FailingOnceUpsertSink(
+        out_dir, keys, "event_id", fail_at_batch=1, flag_path=str(tmp_path / "flag")
+    )
+    q = fail_sink.writer(stream, ckpt).start()
+    with pytest.raises(Exception):  # noqa: PT011 - injected failure surfaces via awaitTermination
+        q.awaitTermination()
+    assert os.path.exists(fail_sink.flag_path), "failure was not injected"
+
+    sink = UpsertSink(out_dir, keys, "event_id")
+    run_to_completion(sink.writer(stream, ckpt))
+
+    assert _user_event_ids(sink.snapshot(spark)) == _argmax_truth(spark)
+    published = sorted(n for n in os.listdir(out_dir) if n != ".staging")
+    assert published == [f"batch_id={i}" for i in range(6)]
+    assert os.listdir(os.path.join(out_dir, ".staging")) == []
+
+
+def test_dead_letter_sink_replay_keeps_committed_output(spark, tmp_path):
+    """A replayed batchId must leave the main and DLQ output it already
+    committed as they stand, even when the replay carries other rows."""
+    from flink_net_spark.sinks import DeadLetterSink
+
+    sink = DeadLetterSink(
+        main_path=str(tmp_path / "main"),
+        dlq_path=str(tmp_path / "dlq"),
+        invalid_cond_sql="v % 3 = 0",
+    )
+    sink(spark.range(10).withColumnRenamed("id", "v"), 0)
+    sink(spark.range(100, 120).withColumnRenamed("id", "v"), 0)  # replay, other rows
+
+    main = spark.read.parquet(str(tmp_path / "main" / "batch_id=0"))
+    dlq = spark.read.parquet(str(tmp_path / "dlq" / "batch_id=0"))
+    assert sorted(r.v for r in main.collect()) == [1, 2, 4, 5, 7, 8]
+    assert sorted(r.v for r in dlq.collect()) == [0, 3, 6, 9]
 
 
 def test_rocksdb_state_backend_is_active_and_correct(spark, tmp_path):
