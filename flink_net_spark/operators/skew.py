@@ -17,6 +17,9 @@ Spark-first equivalents, in preference order:
   3. SALTED JOIN for a skewed fact key against a replicable build side:
      fact rows deterministically spread over ``n_salts`` sub-keys, build
      side replicated ×``n_salts``.  Result identical to the plain join.
+  4. SALTED TOP-K for a per-group rank over few groups (SURVEY.md §2.13's
+     windowed ``row_number``): a per-salt pre-prune, then a rank of the
+     survivors only, so no single task sorts a whole group.
 
 Salts are derived with ``pmod(xxhash64(...), n)`` from row content, never
 ``rand()`` — deterministic replay is what makes these testable and
@@ -25,8 +28,11 @@ checkpoint-safe.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.window import Window
 
 # ops with trivial merges: merge(sum)=sum, merge(count)=sum, merge(min)=min...
 _PARTIAL = {
@@ -94,3 +100,37 @@ def salted_join(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<long>"))
     )
     return f_salted.join(b_repl, [on, "__salt"], how).drop("__salt")
+
+
+def salted_top_k(
+    df: DataFrame,
+    k: int,
+    order: Sequence[str | Column],
+    group: Sequence[str | Column] = (),
+    *,
+    salt: Column,
+    rank: str = "rank",
+) -> DataFrame:
+    """The rows ranked 1..``k`` within each ``group`` by ``order``, with a
+    ``long`` ``rank`` column; ``group=()`` ranks the whole frame.
+
+    Two phases: rows are first ranked within each ``(group, salt)`` cell
+    and only each cell's top ``k`` survive; the survivors are then ranked
+    within ``group``.  Every row of a group's top ``k`` is in its cell's
+    top ``k`` (fewer than ``k`` rows of the group precede it, so fewer than
+    ``k`` of its cell do), so the result is the plain one-phase rank's,
+    while phase 1 spreads a group over its salt cells and phase 2 sorts at
+    most ``k`` rows per cell.  Precondition: ``order`` is a TOTAL order
+    within a group (end it with a unique id); with ties the two phases
+    may keep different rows.  ``salt`` is a deterministic column term such
+    as ``F.col("doc_id") % 16``.
+    """
+    phase1 = Window.partitionBy(*group, salt).orderBy(*order)
+    phase2 = Window.partitionBy(*group).orderBy(*order)
+    return (
+        df.withColumn("__r1", F.row_number().over(phase1))
+        .filter(F.col("__r1") <= k)
+        .drop("__r1")
+        .withColumn(rank, F.row_number().over(phase2).cast("long"))
+        .filter(F.col(rank) <= k)
+    )

@@ -24,6 +24,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_net_spark.functions import hashing as H
+from flink_net_spark.functions import vectors as V
+from flink_net_spark.operators.skew import salted_top_k
 from flink_net_spark.queries import query
 from flink_net_spark.tables import (
     QueryScope,
@@ -760,12 +762,7 @@ def dedup_simhash_pairs(
     "dedup_embedding_cosine",
     scale_safe=False,
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v,
-               sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding])) AS nrm
-        FROM embeddings
-        WHERE list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding]) > 0
-    )
+    WITH e AS ({V.duckdb_unit_frame()})
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
            ROUND(list_sum([a.v[i] * b.v[i] for i in range(1, 65)]) / (a.nrm * b.nrm), 4)
                AS cosine
@@ -779,14 +776,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (all-pairs form — correctness oracle;
     the LSH-bucketed scale path is ``sim_ann_lsh``).  Dot products in
     column expressions (zip_with + aggregate), no Python."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-        F.expr(
-            "sqrt(aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-            "0.0D, (acc, x) -> acc + x))"
-        ).alias("nrm"),
-    ).filter(F.col("nrm") > 0)  # zero-norm vectors have no cosine: excluded on BOTH engines
+    e = V.spark_unit_frame(spark, sf_dir)
     a = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     b = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
     dot = F.expr("aggregate(zip_with(va, vb, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)")
@@ -1393,27 +1383,17 @@ def dedup_lsh_recall_audit(
     the module comment for why the sampled estimate transfers to the full
     corpus and why the sample is a fixed COUNT (constant truth cost).
 
-    The key pick is the salted two-phase top-k (never a global sort of
-    the corpus): per-salt smallest-md5 survivors, then a global rank over
-    the <= SALT * K survivor rows.  The K keys then broadcast back onto
-    the document scan BEFORE the CPU-heavy shingle/minhash compute, so
-    the heavy stages only ever see K rows."""
-    from pyspark.sql.window import Window
-
+    The key pick is ``skew.salted_top_k`` (never a global sort of the
+    corpus).  The K keys then broadcast back onto the document scan
+    BEFORE the CPU-heavy shingle/minhash compute, so the heavy stages only
+    ever see K rows."""
     docs = load_table(spark, sf_dir, "documents")
-    mk = F.md5(F.col("doc_id").cast("string"))
-    w1 = Window.partitionBy(F.col("doc_id") % _LSH_AUDIT_SALT).orderBy(
-        mk, "doc_id"
-    )
-    w2 = Window.orderBy(mk, "doc_id")
-    keys = (
-        docs.select("doc_id")
-        .withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= _LSH_AUDIT_TARGET_DOCS)
-        .withColumn("r2", F.row_number().over(w2))
-        .filter(F.col("r2") <= _LSH_AUDIT_TARGET_DOCS)
-        .select("doc_id")
-    )
+    keys = salted_top_k(
+        docs.select("doc_id"),
+        _LSH_AUDIT_TARGET_DOCS,
+        [F.md5(F.col("doc_id").cast("string")), "doc_id"],
+        salt=F.col("doc_id") % _LSH_AUDIT_SALT,
+    ).select("doc_id")
     samp = scope.persist(
         spread_small_scan(docs.join(F.broadcast(keys), "doc_id"))
         .withColumn("th", F.expr(H.spark_token_hashes("text")))

@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_net_spark.functions import hashing as H
+from flink_net_spark.operators.skew import salted_top_k
 from flink_net_spark.queries import query
 from flink_net_spark.tables import QueryScope, load_table, scoped, spread_small_scan
 
@@ -1180,24 +1181,13 @@ def vocab_topk_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = t.groupBy("term", "h").agg(
         F.count(F.lit(1)).cast("bigint").alias("exact_count")
     )
-    # Salted two-phase top-k (the zipf/reservoir idiom): a global
-    # Window.orderBy over the full vocabulary is a single-task sort; the
-    # global top-k is provably inside the union of per-salt top-ks, so
-    # pre-prune within (h % SALT) — 8-way parallel — then rank only the
-    # <= SALT * TOPK survivors globally.
-    _CMS_SALT = 8
-    w1 = Window.partitionBy(F.col("h") % _CMS_SALT).orderBy(
-        F.col("exact_count").desc(), F.col("term")
-    )
-    survivors = (
-        exact.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= _CMS_TOPK)
-        .drop("r1")
-    )
-    w = Window.orderBy(F.col("exact_count").desc(), F.col("term"))
-    top = (
-        survivors.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _CMS_TOPK)
+    # Salted top-k: a global Window.orderBy over the full vocabulary is a
+    # single-task sort; pre-pruning within (h % 8) is 8-way parallel.
+    top = salted_top_k(
+        exact,
+        _CMS_TOPK,
+        [F.col("exact_count").desc(), F.col("term")],
+        salt=F.col("h") % 8,
     )
     est = (
         top.select("rank", "term", "exact_count", F.explode(F.expr(pos_structs)).alias("u"))
@@ -1544,12 +1534,10 @@ def curation_dsir_importance(
 # layouts, and engines).
 #
 # Scale (100 TB): a naive per-group window sorts every group in one task —
-# a straggler when a group holds billions of rows.  The Spark plan runs
-# TWO phases: top-k within (group, doc_id % RSV_SALT) — 8-way parallel,
-# each sort 1/8 the group — then top-k of the <= 8k survivors.  The global
-# top-k is provably inside the union of per-salt top-ks, so the result is
-# identical to the oracle's single window while the biggest sort shrinks
-# 8-fold (raise RSV_SALT with cluster size).
+# a straggler when a group holds billions of rows.  The Spark plan ranks
+# with ``skew.salted_top_k`` salted by doc_id % RSV_SALT, so the result is
+# the oracle's single window while the biggest sort shrinks 8-fold (raise
+# RSV_SALT with cluster size).
 RSV_K = 4
 RSV_SALT = 8
 
@@ -1571,7 +1559,7 @@ RSV_SALT = 8
 def sample_reservoir_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-k deterministic reservoir per (lang, source): the k docs with
     the smallest md5('rsv:'||doc_id) rank hash, with their in-group rank.
-    Two-phase salted top-k — see the module comment for why the plan stays
+    Salted top-k — see the module comment for why the plan stays
     straggler-free when one group holds billions of rows."""
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -1581,18 +1569,15 @@ def sample_reservoir_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank_hash"
         ),
     )
-    w1 = Window.partitionBy(
-        "lang", "source", F.col("doc_id") % RSV_SALT
-    ).orderBy("rank_hash", "doc_id")
-    survivors = (
-        d.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= RSV_K)
-        .drop("r1")
-    )
-    w2 = Window.partitionBy("lang", "source").orderBy("rank_hash", "doc_id")
     return (
-        survivors.withColumn("rk", F.row_number().over(w2).cast("bigint"))
-        .filter(F.col("rk") <= RSV_K)
+        salted_top_k(
+            d,
+            RSV_K,
+            ["rank_hash", "doc_id"],
+            ["lang", "source"],
+            salt=F.col("doc_id") % RSV_SALT,
+            rank="rk",
+        )
         .select("lang", "source", "rk", "doc_id", "rank_hash")
         .orderBy("lang", "source", "rk")
     )
@@ -1652,8 +1637,7 @@ def sample_priority_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     total weight, which is what makes priority samples auditable).
 
     Scale: the priority is a scan-side projection (no corpus sort); the
-    global top-(K+1) rides the salted two-phase top-k (the provable
-    union-of-per-salt-tops bound, module comment), so no single task ever
+    global top-(K+1) is ``skew.salted_top_k``, so no single task ever
     sorts the corpus; tau is a 1-row broadcast."""
     u_expr = H.spark_char_polyhash("concat('pri:', CAST(doc_id AS STRING))")
     pri = spread_small_scan(load_table(spark, sf_dir, "documents")).select(
@@ -1663,18 +1647,11 @@ def sample_priority_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             "priority_q"
         ),
     )
-    w1 = Window.partitionBy(F.col("doc_id") % PRI_SALT).orderBy(
-        F.col("priority_q").desc(), "doc_id"
-    )
-    survivors = (
-        pri.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= PRI_K + 1)
-        .drop("r1")
-    )
-    w2 = Window.orderBy(F.col("priority_q").desc(), "doc_id")
-    ranked = (
-        survivors.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= PRI_K + 1)
+    ranked = salted_top_k(
+        pri,
+        PRI_K + 1,
+        [F.col("priority_q").desc(), "doc_id"],
+        salt=F.col("doc_id") % PRI_SALT,
     )
     tau = ranked.filter(F.col("rank") == PRI_K + 1).agg(
         F.coalesce(F.max("priority_q"), F.lit(0)).cast("long").alias("tau_q")

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
 from flink_net_spark.functions import hashing as H
+from flink_net_spark.functions import vectors as V
+from flink_net_spark.operators.skew import salted_top_k
 from flink_net_spark.queries import query
 from flink_net_spark.tables import QueryScope, load_table, scoped, spread_small_scan
 
@@ -27,24 +29,6 @@ N_PLANES = 8
 DIM = 64
 
 
-def _emb_with_norm(
-    spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
-) -> DataFrame:
-    """(vec_id, v double[], nrm) with zero-norm vectors excluded.  ``emb``
-    overrides the parquet scan with an alternate (vec_id, embedding) frame —
-    the planted-fixture audit runs the EXACT production ANN plans over a
-    derived corpus this way (VERDICT r10 #4)."""
-    base = emb if emb is not None else load_table(spark, sf_dir, "embeddings")
-    return base.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-        F.expr(
-            "sqrt(aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-            "0.0D, (acc, x) -> acc + x))"
-        ).alias("nrm"),
-    ).filter(F.col("nrm") > 0)  # zero-norm vectors have no cosine: excluded on BOTH engines
-
-
 _DOT = "aggregate(zip_with(qv, nv, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
 
 
@@ -52,12 +36,7 @@ _DOT = "aggregate(zip_with(qv, nv, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
     "sim_cosine_topk",
     scale_safe=False,
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v,
-               sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding])) AS nrm
-        FROM embeddings
-        WHERE list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding]) > 0
-    ),
+    WITH e AS ({V.duckdb_unit_frame()}),
     scored AS (
         SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
                list_sum([q.v[i] * n.v[i] for i in range(1, {DIM + 1})]) / (q.nrm * n.nrm) AS cosine
@@ -77,7 +56,7 @@ _DOT = "aggregate(zip_with(qv, nv, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k for a broadcast query set: ANN ground truth."""
-    e = _emb_with_norm(spark, sf_dir)
+    e = V.spark_unit_frame(spark, sf_dir)
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
@@ -134,12 +113,7 @@ def _duckdb_bucket_expr() -> str:
 @query(
     "sim_ann_lsh",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v,
-               sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding])) AS nrm
-        FROM embeddings
-        WHERE list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding]) > 0
-    ),
+    WITH e AS ({V.duckdb_unit_frame()}),
     bucketed AS (
         SELECT vec_id, v, nrm, {_duckdb_bucket_expr()} AS bucket FROM e
     ),
@@ -169,7 +143,7 @@ def sim_ann_lsh(
     the scalable shuffle shape.  (Single-table variant; the production path
     with recall control is ``sim_ann_multiprobe``.)"""
     e = (
-        _emb_with_norm(spark, sf_dir, emb)
+        V.spark_unit_frame(spark, sf_dir, emb)
         .crossJoin(F.broadcast(_st_planes_df(spark)))
         .withColumn("bucket", F.expr(_ST_BUCKET_EXPR))
         .drop("ws")
@@ -272,12 +246,7 @@ def _mp_tb_cte() -> str:
 @query(
     "sim_ann_multiprobe",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v,
-               sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding])) AS nrm
-        FROM embeddings
-        WHERE list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding]) > 0
-    ),
+    WITH e AS ({V.duckdb_unit_frame()}),
     {_mp_tb_cte()},
     probes AS (  -- query side probes its bucket + every Hamming-1 neighbor
         SELECT vec_id, t, UNNEST([bucket] || [xor(bucket, 1 << p) for p in range(0, {N_PLANES_MP})])
@@ -319,7 +288,7 @@ def sim_ann_multiprobe(
     = L rows of (vec_id, bucket) per vector; query side = L×(P+1) probe
     rows per query; exact re-rank touches only deduped candidates.
     """.format(L=N_TABLES, P=N_PLANES_MP)
-    e = _emb_with_norm(spark, sf_dir, emb)  # column-pruned scan; recompute beats caching at scale
+    e = V.spark_unit_frame(spark, sf_dir, emb)  # column-pruned scan; recompute beats caching at scale
     tb = _mp_bucketed(spark, e)
     probes = (
         tb.filter(F.col("vec_id") < N_QUERIES)
@@ -370,12 +339,7 @@ def sim_ann_multiprobe(
 @query(
     "dedup_embedding_ann",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v,
-               sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding])) AS nrm
-        FROM embeddings
-        WHERE list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding]) > 0
-    ),
+    WITH e AS ({V.duckdb_unit_frame()}),
     {_mp_tb_cte()},
     cand AS (
         SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
@@ -397,7 +361,7 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle only and is excluded from the bench).  Candidates = same bucket
     in ANY of the L tables; exact cosine verify on candidates only.  No
     O(n²) join anywhere."""
-    e = _emb_with_norm(spark, sf_dir)
+    e = V.spark_unit_frame(spark, sf_dir)
     tb = _mp_bucketed(spark, e)
     cand = (
         tb.alias("a")
@@ -432,12 +396,7 @@ NPROBE = 4
 @query(
     "sim_ann_ivf",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v,
-               sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding])) AS nrm
-        FROM embeddings
-        WHERE list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding]) > 0
-    ),
+    WITH e AS ({V.duckdb_unit_frame()}),
     cent AS (
         SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM e
         WHERE vec_id >= {CENTROID_ID_LO} AND vec_id < {CENTROID_ID_LO + N_CENTROIDS}
@@ -508,7 +467,7 @@ def sim_ann_ivf(
       - skew: cell sizes follow data density; AQE skew-join splits hot
         cells (same residual risk as LSH buckets).
     """
-    e = _emb_with_norm(spark, sf_dir, emb)
+    e = V.spark_unit_frame(spark, sf_dir, emb)
     cent = e.filter(
         (F.col("vec_id") >= CENTROID_ID_LO)
         & (F.col("vec_id") < CENTROID_ID_LO + N_CENTROIDS)
@@ -718,11 +677,7 @@ def emb_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "emb_kmeans_iterate",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id,
-               [CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in embedding] AS vq
-        FROM embeddings
-    ),
+    WITH e AS ({V.DUCKDB_VQ_FRAME}),
     c0 AS (
         SELECT vec_id AS cid, vq AS cv FROM e WHERE vec_id < {KMEANS_K}
     ),
@@ -789,12 +744,7 @@ def emb_kmeans_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
         declarative treeAggregate; shuffles N×D small rows with map-side
         partial sums, never collects vectors to the driver.
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))").alias(
-            "vq"
-        ),
-    )
+    e = V.spark_vq_frame(spark, sf_dir)
     dist = F.expr(
         "aggregate(zip_with(vq, cv, (x, y) -> (x - y) * (x - y)), 0L, (acc, x) -> acc + x)"
     )
@@ -941,12 +891,7 @@ _SUB_HASH_DUCKDB = (
 @query(
     "sim_range_search_blocked",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id, label, [CAST(x AS DOUBLE) for x in embedding] AS v,
-               sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding])) AS nrm
-        FROM embeddings
-        WHERE list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding]) > 0
-    ),
+    WITH e AS ({V.duckdb_unit_frame(['label'])}),
     sz AS (
         SELECT label, CAST(CEIL(COUNT(*) / {RANGE_BLOCK_CAP}.0) AS BIGINT) AS n_sub
         FROM embeddings GROUP BY label
@@ -983,15 +928,7 @@ def sim_range_search_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     Float discipline: the dot product folds in the same left-to-right
     order on both engines (zip_with+aggregate vs list_sum of an ordered
     comprehension — proven bit-stable in sim_cosine_topk)."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-        F.expr(
-            "sqrt(aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-            "0.0D, (acc, x) -> acc + x))"
-        ).alias("nrm"),
-    ).filter(F.col("nrm") > 0)  # zero-norm vectors have no cosine: excluded on BOTH engines
+    e = V.spark_unit_frame(spark, sf_dir, keep=["label"])
     # Block sizes aggregate to N_LABELS rows and broadcast back — the
     # vector stream itself is never shuffled for the sub-split assignment.
     sizes = (
@@ -1046,12 +983,7 @@ SEMDEDUP_COS_THRESHOLD = 0.40
 @query(
     "sim_semdedup",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v,
-               sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding])) AS nrm
-        FROM embeddings
-        WHERE list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding]) > 0
-    ),
+    WITH e AS ({V.duckdb_unit_frame()}),
     c AS (
         SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {KMEANS_K}
     ),
@@ -1107,14 +1039,7 @@ def sim_semdedup(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataFra
     straddle the cap, so the sub-split is exercised — and mirrored in the
     oracle — at base scale).  Cosine folds in identical order on both
     engines (bit-stable, cf. sim_cosine_topk)."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-        F.expr(
-            "sqrt(aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-            "0.0D, (acc, x) -> acc + x))"
-        ).alias("nrm"),
-    ).filter(F.col("nrm") > 0)  # zero-norm vectors have no cosine: excluded on BOTH engines
+    e = V.spark_unit_frame(spark, sf_dir)
     c = e.filter(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
@@ -1474,11 +1399,7 @@ PQ_K = 16        # centroids per subspace (4-bit codes)
 @query(
     "emb_pq_quantize",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id,
-               [CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in embedding] AS vq
-        FROM embeddings
-    ),
+    WITH e AS ({V.DUCKDB_VQ_FRAME}),
     c AS (
         SELECT vec_id AS k, vq AS cv FROM e WHERE vec_id < {PQ_K}
     ),
@@ -1526,12 +1447,7 @@ def emb_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated (m, cid) census — at most {PQ_M}x{PQ_K} rows per
     task.  At 100 TB this is one linear pass, the same shape FAISS's encode
     step distributes."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-        ).alias("vq"),
-    )
+    e = V.spark_vq_frame(spark, sf_dir)
     cents = (
         e.filter(F.col("vec_id") < PQ_K)
         .select(F.struct(F.col("vec_id").alias("k"), F.col("vq").alias("cv")).alias("c"))
@@ -1737,12 +1653,7 @@ def _rrf_fuse(lex_r: DataFrame, emb_r: DataFrame) -> DataFrame:
     scale_safe=False,
     oracle=f"""
     WITH {_rrf_lex_ctes()},
-    e AS (
-        SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v,
-               sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding])) AS nrm
-        FROM embeddings
-        WHERE list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding]) > 0
-    ),
+    e AS ({V.duckdb_unit_frame()}),
     emb AS (
         SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
                list_sum([q.v[i] * n.v[i] for i in range(1, {DIM + 1})]) / (q.nrm * n.nrm) AS cosine
@@ -1781,7 +1692,7 @@ def sim_rrf_hybrid(spark: SparkSession, sf_dir: str, scope: QueryScope) -> DataF
     leg is ``sim_rrf_hybrid_ann`` below, since RRF consumes only
     (query, neighbor, rank) tuples."""
     lex_r = _rrf_lex_leg(spark, sf_dir, scope)
-    e = _emb_with_norm(spark, sf_dir)
+    e = V.spark_unit_frame(spark, sf_dir)
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
@@ -1851,11 +1762,7 @@ IVFPQ_CB_LO = 200  # vec_id 200..215's residuals seed the PQ codebook
 @query(
     "sim_ann_ivfpq",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id,
-               [CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in embedding] AS vq
-        FROM embeddings
-    ),
+    WITH e AS ({V.DUCKDB_VQ_FRAME}),
     cells AS (
         SELECT vec_id AS cell_id, vq AS cv FROM e
         WHERE vec_id >= {CENTROID_ID_LO} AND vec_id < {CENTROID_ID_LO + N_CENTROIDS}
@@ -1960,12 +1867,7 @@ def sim_ann_ivfpq(
     broadcast-construction jobs per run, pure fixed overhead the r12
     drift gate flagged; driver-folding them cut the query's job count to
     the one encode+score pass.)"""
-    e = (emb if emb is not None else load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-        ).alias("vq"),
-    )
+    e = V.spark_vq_frame(spark, sf_dir, emb)
     # Bounded collect: coarse centers, codebook seed vectors, probe queries.
     small = {
         int(r["vec_id"]): [int(x) for x in r["vq"]]
@@ -2656,11 +2558,7 @@ _MAXSIM_SALT = 16  # per-query salt fan-out for the two-phase rank
 @query(
     "sim_maxsim_late_interaction",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id,
-               [CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in embedding] AS vq
-        FROM embeddings
-    ),
+    WITH e AS ({V.DUCKDB_VQ_FRAME}),
     q AS (
         SELECT vec_id AS qv, vec_id // {MAXSIM_QTOK} AS query_id, vq
         FROM e WHERE vec_id < {MAXSIM_NQ * MAXSIM_QTOK}
@@ -2717,22 +2615,14 @@ def sim_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs × qtokens, never corpus × corpus.  This is exactly how ColBERT
     serving fans out: per-token candidate max, then per-query sum.
 
-    Round-14 (VERDICT r13 #1): the final per-query rank is the SALTED
-    TWO-PHASE top-k (the zipf/reservoir/cms idiom), not a bare
-    row_number over partitionBy(query_id) — with only {MAXSIM_NQ} query
-    partitions the old shape sorted the full corpus-sized score frame on
-    a per-query single reducer at 100× scale.  The global per-query
-    top-k is provably inside the union of per-(query, doc_id % SALT)
-    top-ks, so phase 1 pre-prunes within each of the
-    {MAXSIM_NQ}×{_MAXSIM_SALT} salt cells in parallel and phase 2 ranks
-    only the ≤ SALT×TOPK survivors per query — a bounded sort whatever
-    the corpus size."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-        ).alias("vq"),
-    )
+    The final per-query rank is ``skew.salted_top_k``, not a bare
+    row_number over partitionBy(query_id): with only {MAXSIM_NQ} query
+    partitions that shape sorts the full corpus-sized score frame on a
+    per-query single reducer at 100× scale, while the salted rank sorts
+    {MAXSIM_NQ}×{_MAXSIM_SALT} salt cells in parallel and then at most
+    SALT×TOPK survivors per query — a bounded sort whatever the corpus
+    size."""
+    e = V.spark_vq_frame(spark, sf_dir)
     nq = MAXSIM_NQ * MAXSIM_QTOK
     qtok = sorted(
         (int(r["vec_id"]), [int(x) for x in r["vq"]])
@@ -2768,21 +2658,14 @@ def sim_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", F.expr(f"qv div {MAXSIM_QTOK}").alias("query_id"))
         .agg(F.sum("m").alias("score"))
     )
-    # Phase 1: per-salt pre-prune — NQ × SALT parallel partitions, each
-    # keeping its own top-TOPK (the global top-TOPK per query is a subset
-    # of this union).  Phase 2 ranks the bounded survivor set.
-    w1 = Window.partitionBy(
-        "query_id", F.col("doc_id") % _MAXSIM_SALT
-    ).orderBy(F.desc("score"), "doc_id")
-    survivors = (
-        scores.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= MAXSIM_TOPK)
-        .drop("r1")
-    )
-    wf = Window.partitionBy("query_id").orderBy(F.desc("score"), "doc_id")
     return (
-        survivors.withColumn("rank", F.row_number().over(wf).cast("long"))
-        .filter(F.col("rank") <= MAXSIM_TOPK)
+        salted_top_k(
+            scores,
+            MAXSIM_TOPK,
+            [F.desc("score"), "doc_id"],
+            ["query_id"],
+            salt=F.col("doc_id") % _MAXSIM_SALT,
+        )
         .select("query_id", "doc_id", "rank", "score")
         .orderBy("query_id", "rank")
     )
@@ -2797,11 +2680,7 @@ MAXSIM_PRUNE_M = 32  # per-query-token candidate fan-in
 @query(
     "sim_maxsim_pruned",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id,
-               [CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in embedding] AS vq
-        FROM embeddings
-    ),
+    WITH e AS ({V.DUCKDB_VQ_FRAME}),
     q AS (
         SELECT vec_id AS qv, vec_id // {MAXSIM_QTOK} AS query_id, vq
         FROM e WHERE vec_id < {MAXSIM_NQ * MAXSIM_QTOK}
@@ -2887,15 +2766,10 @@ def sim_maxsim_pruned(spark: SparkSession, sf_dir: str, scope: QueryScope) -> Da
 
     Scale: the (doc, qtok) max-dot frame is computed once (same bounded
     query-bag broadcast as the exhaustive leg); per-token nomination is
-    the SALTED two-phase top-M (qtokens × {_MAXSIM_SALT} parallel
-    pre-prune cells, then a ≤ SALT·M survivor rank per token); everything
+    ``skew.salted_top_k`` (qtokens × {_MAXSIM_SALT} parallel pre-prune
+    cells, then a ≤ SALT·M survivor rank per token); everything
     downstream is bounded by queries × qtokens × M rows."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-        ).alias("vq"),
-    )
+    e = V.spark_vq_frame(spark, sf_dir)
     nq = MAXSIM_NQ * MAXSIM_QTOK
     qtok = sorted(
         (int(r["vec_id"]), [int(x) for x in r["vq"]])
@@ -2930,17 +2804,11 @@ def sim_maxsim_pruned(spark: SparkSession, sf_dir: str, scope: QueryScope) -> Da
         .agg(F.max("dot").alias("m"))
         .withColumn("query_id", F.expr(f"qv div {MAXSIM_QTOK}"))
     )
-    # per-token nomination: salted two-phase top-M (the exhaustive leg's
-    # rank discipline applied to candidate generation)
-    w1 = Window.partitionBy("qv", F.col("doc_id") % _MAXSIM_SALT).orderBy(
-        F.desc("m"), "doc_id"
-    )
-    w2 = Window.partitionBy("qv").orderBy(F.desc("m"), "doc_id")
+    # per-token nomination: salted top-M (the exhaustive leg's rank
+    # discipline applied to candidate generation)
+    salt = F.col("doc_id") % _MAXSIM_SALT
     cand = (
-        mx.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= MAXSIM_PRUNE_M)
-        .withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= MAXSIM_PRUNE_M)
+        salted_top_k(mx, MAXSIM_PRUNE_M, [F.desc("m"), "doc_id"], ["qv"], salt=salt)
         .select("query_id", "doc_id")
         .distinct()
     )
@@ -2955,18 +2823,11 @@ def sim_maxsim_pruned(spark: SparkSession, sf_dir: str, scope: QueryScope) -> Da
         .filter(F.col("rank") <= MAXSIM_TOPK)
         .select("query_id", "rank", "doc_id", F.col("score").cast("long").alias("score"))
     )
-    # exhaustive truth (bounded rank: reuse the salted two-phase shape)
+    # exhaustive truth (bounded rank: the salted top-k again)
     scores = mx.groupBy("query_id", "doc_id").agg(F.sum("m").alias("score"))
-    we1 = Window.partitionBy(
-        "query_id", F.col("doc_id") % _MAXSIM_SALT
-    ).orderBy(F.desc("score"), "doc_id")
-    exh = (
-        scores.withColumn("r1", F.row_number().over(we1))
-        .filter(F.col("r1") <= MAXSIM_TOPK)
-        .withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= MAXSIM_TOPK)
-        .select("query_id", F.col("doc_id").alias("e_doc"))
-    )
+    exh = salted_top_k(
+        scores, MAXSIM_TOPK, [F.desc("score"), "doc_id"], ["query_id"], salt=salt
+    ).select("query_id", F.col("doc_id").alias("e_doc"))
     ncand = cand.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_candidates")
     )
@@ -3160,14 +3021,7 @@ def _duck_binary_hamming_oracle() -> str:
           "i -> CASE WHEN v[i] > 0 THEN 1 << (i - 33) ELSE 0 END))")
     dot = f"list_sum([q.v[i] * n.v[i] for i in range(1, {DIM + 1})])"
     return f"""
-    WITH e AS MATERIALIZED (
-        SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v,
-               sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                              for x in embedding])) AS nrm
-        FROM embeddings
-        WHERE list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                        for x in embedding]) > 0
-    ),
+    WITH e AS MATERIALIZED ({V.duckdb_unit_frame()}),
     b AS MATERIALIZED (
         SELECT vec_id, v, nrm,
                CAST({w0} AS BIGINT) AS w0,
@@ -3246,7 +3100,7 @@ def sim_binary_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-width rows against the broadcast {N_QUERIES}-row query
     fingerprint frame; only the bounded survivor frame reaches the exact
     dot products."""
-    e = _emb_with_norm(spark, sf_dir)
+    e = V.spark_unit_frame(spark, sf_dir)
     pack = (
         "aggregate(sequence({lo}, {hi}), 0L, (acc, i) -> acc + "
         "CASE WHEN element_at(v, i) > 0D THEN shiftleft(1L, i - {lo}) "

@@ -34,7 +34,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
-from flink_net_spark.queries import query
+from flink_net_spark.queries import ORACLES, query
 from flink_net_spark.session import publish_once
 from flink_net_spark.sinks import UpsertSink, run_to_completion
 from flink_net_spark.sources import parquet_stream, replay_table_as_stream
@@ -153,17 +153,22 @@ def _stage_dir(sf_dir: str, name: str, src: str | list[str] = "events") -> str:
 def _write_chunks(df: DataFrame, out_dir: str, n_chunks: int) -> None:
     """Write the rows of ``df`` with ``chunk == i`` (without that column) as
     ``out_dir/chunk_{i:02d}.parquet`` for i in 0..n_chunks-1, one file each.
+    All chunks are written by one job, so ``df``'s plan runs once: each
+    chunk lands in one shuffle partition, whose task writes its one file.
     FileStreamSource delivers files in mtime order, and sequential writes
     can tie at coarse fs granularity and deliver a later chunk first, so the
     mtimes are pinned strictly increasing in chunk order."""
+    parts = os.path.join(out_dir, "_chunks")
+    df.repartition(n_chunks, "chunk").write.partitionBy("chunk").parquet(parts)
     for i in range(n_chunks):
-        part_dir = os.path.join(out_dir, f"_chunk_{i}")
-        df.filter(F.col("chunk") == i).drop("chunk").coalesce(1).write.parquet(part_dir)
+        part_dir = os.path.join(parts, f"chunk={i}")
+        if not os.path.isdir(part_dir):  # an empty chunk: its schema-only file
+            df.limit(0).drop("chunk").coalesce(1).write.parquet(part_dir)
         part = next(f for f in sorted(os.listdir(part_dir)) if f.startswith("part-"))
         dest = os.path.join(out_dir, f"chunk_{i:02d}.parquet")
         os.replace(os.path.join(part_dir, part), dest)
         os.utime(dest, (1_600_000_000 + i, 1_600_000_000 + i))
-        shutil.rmtree(part_dir)
+    shutil.rmtree(parts)
 
 
 # Shuffle partitions of the bounded stream drains (state volume; see
@@ -216,18 +221,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_window_tumbling_hourly",
-    oracle=f"""
-    SELECT (epoch_ms(ts) // {HOUR_MS}) * {HOUR_MS} AS window_start_ms,
-           event_type,
-           COUNT(*)             AS n_events,
-           ROUND(SUM(value), 2) AS sum_value
-    FROM events
-    GROUP BY 1, 2
-    ORDER BY window_start_ms, event_type
-    """,
-)
+@query("stream_window_tumbling_hourly", oracle=ORACLES["window_tumbling_hourly"])
 def stream_window_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream replay → watermark (1h bounded out-of-orderness,
     ≙ MonotonicWatermarkGenerator) → keyed tumbling window aggregate →
@@ -249,37 +243,7 @@ def stream_window_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame
     return _run_stream(win).orderBy("window_start_ms", "event_type")
 
 
-@query(
-    "stream_session_windows",
-    oracle="""
-    WITH ev AS (
-        -- µs-truncated ts (round-14 ADVICE sweep): order by the same µs
-        -- values Spark sees, never raw ns.
-        SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events
-    ),
-    marked AS (
-        SELECT user_id, epoch_ms(ts) AS ms,
-               CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                      OR epoch_ms(ts) - LAG(epoch_ms(ts))
-                         OVER (PARTITION BY user_id ORDER BY ts) >= 7200000
-                    THEN 1 ELSE 0 END AS new_session
-        FROM ev
-    ),
-    sess AS (
-        SELECT user_id, ms,
-               SUM(new_session) OVER (PARTITION BY user_id ORDER BY ms
-                                      ROWS UNBOUNDED PRECEDING) AS sid
-        FROM marked
-    )
-    SELECT user_id,
-           MIN(ms)           AS session_start_ms,
-           MAX(ms) + 7200000 AS session_end_ms,
-           COUNT(*)          AS n_events
-    FROM sess
-    GROUP BY user_id, sid
-    ORDER BY user_id, session_start_ms
-    """,
-)
+@query("stream_session_windows", oracle=ORACLES["window_session"])
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming session windows (2h gap, keyed by user) — sessions must
     merge correctly ACROSS micro-batches (≙ the Trigger.OnMerge/
@@ -701,15 +665,7 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_batch_backfill_union",
-    oracle="""
-    SELECT event_type, COUNT(*) AS n_events, ROUND(SUM(value), 2) AS sum_value
-    FROM events
-    GROUP BY event_type
-    ORDER BY event_type
-    """,
-)
+@query("stream_batch_backfill_union", oracle=ORACLES["stream_keyed_exact_count"])
 def stream_batch_backfill_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unified batch/stream execution (≙ IUnifiedSource.IsBounded,
     Sources/IUnifiedSource.cs:6): the HISTORICAL half of the event log
@@ -1171,16 +1127,9 @@ def stream_tiered_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_stream(tier2, mode="append").orderBy("window_start_ms", "event_type")
 
 
-def _lazy_inc_minhash_oracle() -> str:
-    """The batch dedup_incremental_minhash oracle VERBATIM — the stream op's
-    contract is 'same answer through real micro-batches' (r14 verdict #7),
-    so the oracle is literally the batch result's SQL."""
-    from flink_net_spark.queries import ORACLES
-
-    return ORACLES["dedup_incremental_minhash"]
-
-
-@query("stream_incremental_minhash", oracle=_lazy_inc_minhash_oracle())
+# The stream op's contract is "same answer through real micro-batches", so
+# its oracle is the batch dedup_incremental_minhash oracle itself.
+@query("stream_incremental_minhash", oracle=ORACLES["dedup_incremental_minhash"])
 @scoped
 def stream_incremental_minhash(
     spark: SparkSession, sf_dir: str, scope: QueryScope

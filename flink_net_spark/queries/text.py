@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_net_spark.functions import detmath as DM
 from flink_net_spark.functions import hashing as H
+from flink_net_spark.operators.skew import salted_top_k
 from flink_net_spark.queries import query
 from flink_net_spark.tables import (
     QueryScope,
@@ -1610,11 +1611,9 @@ def text_kn_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale (100 TB): term counts combiner-reduce into the one token shuffle
 # (reduce side is vocabulary-bounded); the per-lang summary re-aggregates
-# the count table.  The rank window never sees the full vocabulary: Spark
-# runs top-64 within (lang, t % 8) first — 8 parallel sorts of 1/8 the
-# vocab — then ranks the <= 512 survivors (provably a superset of the
-# global top-64, identically ordered), so the only global-ordered window
-# in the plan is over <= 512 rows per lang.
+# the count table.  The rank window never sees the full vocabulary: the
+# rank is ``skew.salted_top_k`` salted by t % 8, so the only
+# global-ordered window in the plan is over <= 512 rows per lang.
 _ZIPF_TOP = 64
 _ZIPF_SALT = 8
 
@@ -1700,20 +1699,14 @@ def text_zipf_ttr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_hapax"),
     )
-    w1 = Window.partitionBy("lang", F.col("t") % _ZIPF_SALT).orderBy(
-        F.col("c").desc(), "t"
-    )
-    survivors = (
-        tc.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= _ZIPF_TOP)
-        .drop("r1")
-    )
-    w2 = Window.partitionBy("lang").orderBy(F.col("c").desc(), "t")
-    top = (
-        survivors.withColumn("rn", F.row_number().over(w2).cast("bigint"))
-        .filter(F.col("rn") <= _ZIPF_TOP)
-        .select("lang", "c", "rn")
-    )
+    top = salted_top_k(
+        tc,
+        _ZIPF_TOP,
+        [F.col("c").desc(), "t"],
+        ["lang"],
+        salt=F.col("t") % _ZIPF_SALT,
+        rank="rn",
+    ).select("lang", "c", "rn")
     pts = DM.spark_with_det_ln(
         DM.spark_with_det_ln(top, "rn", "zx"), "c", "zy"
     ).select(

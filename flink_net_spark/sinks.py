@@ -308,7 +308,9 @@ class DeadLetterSink:
     a ``foreachBatch`` sink that splits every micro-batch on a validity
     predicate — valid rows land in the main output, rejects land in a DLQ
     directory with batch/reason metadata, and ``resubmit`` reads the DLQ
-    back as a source so repaired records re-enter the pipeline.
+    back as a source so repaired records re-enter the pipeline.  A row whose
+    predicate is NULL is dead-lettered too, so the main and DLQ outputs
+    together hold every row of the batch, each row once.
 
     Exactly-once: each output is published once as ``batch_id=<batchId>``
     (2PC Commit = the rename out of ``.staging/``), so a replayed batch leaves
@@ -318,13 +320,13 @@ class DeadLetterSink:
 
     main_path: str
     dlq_path: str
-    invalid_cond_sql: str  # SQL boolean expr; true → dead-letter
+    invalid_cond_sql: str  # SQL boolean expr; true or NULL → dead-letter
     reason: str = "validation_failed"
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        cond = F.expr(self.invalid_cond_sql)
+        cond = F.coalesce(F.expr(self.invalid_cond_sql), F.lit(True))
         name = f"batch_id={batch_id}"
         dead = (
             batch_df.filter(cond)

@@ -10,7 +10,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from flink_net_spark.operators.rich import RichFunction, rich_map_in_pandas
-from flink_net_spark.operators.skew import salted_aggregate, salted_join
+from flink_net_spark.operators.skew import salted_aggregate, salted_join, salted_top_k
 from flink_net_spark.queries import ORACLES, QUERIES
 from flink_net_spark.sinks import memory_sink, run_to_completion, with_trigger
 from flink_net_spark.sources import FileSource, source_to_counter
@@ -69,6 +69,30 @@ def test_salted_aggregate_avg_decomposition_matches_plain(spark):
     for k in p:
         assert s[k][0] == pytest.approx(p[k][0], rel=1e-12)
         assert s[k][1] == pytest.approx(p[k][1], rel=1e-12)
+
+
+@pytest.mark.parametrize("n_salts", [1, 16])
+@pytest.mark.parametrize("group", [(), ("g",)], ids=["global", "grouped"])
+@pytest.mark.parametrize("k", [3, 50])
+def test_salted_top_k_matches_plain_row_number(spark, k, group, n_salts):
+    """One group holds 1900 of 2000 rows, the order key takes four values
+    (ties broken by id), and k=50 exceeds the five small groups' 20 rows:
+    the salted top-k must return the plain one-phase row_number top-k."""
+    from pyspark.sql.window import Window
+
+    df = spark.range(0, 2000).select(
+        "id",
+        F.when(F.col("id") < 1900, 0).otherwise(F.col("id") % 5 + 1).alias("g"),
+        (F.col("id") * 7 % 4).alias("score"),
+    )
+    order = [F.col("score").desc(), "id"]
+    got = salted_top_k(df, k, order, group, salt=F.col("id") % n_salts)
+    w = Window.partitionBy(*group).orderBy(*order)
+    want = df.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
+    )
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect()) == sorted(want.collect())
 
 
 def test_salted_join_left_outer(spark):

@@ -435,8 +435,20 @@ def test_upsert_sink_restart_behind_stateful_upstream(spark, tmp_path):
 
 def test_dead_letter_sink_replay_keeps_committed_output(spark, tmp_path):
     """A replayed batchId must leave the main and DLQ output it already
-    committed as they stand, even when the replay carries other rows."""
+    committed as they stand, even when the replay carries other rows; a
+    row whose predicate is NULL is dead-lettered, never dropped."""
     from flink_net_spark.sinks import DeadLetterSink
+
+    nulls = DeadLetterSink(
+        main_path=str(tmp_path / "nmain"),
+        dlq_path=str(tmp_path / "ndlq"),
+        invalid_cond_sql="v > 5",
+    )
+    nulls(spark.createDataFrame([(1,), (7,), (None,)], "v BIGINT"), 0)
+    main = spark.read.parquet(str(tmp_path / "nmain" / "batch_id=0"))
+    dlq = spark.read.parquet(str(tmp_path / "ndlq" / "batch_id=0"))
+    assert [r.v for r in main.collect()] == [1]
+    assert sorted((r.v for r in dlq.collect()), key=lambda v: v is None) == [7, None]
 
     sink = DeadLetterSink(
         main_path=str(tmp_path / "main"),

@@ -5,9 +5,12 @@ Usage: python tools/qtime.py q1 q2 ... [--reps N] [--explain DIR]
 
 For each named query: build (fn() body), first collect (fresh), then
 ``reps`` timed fn()+collect units exactly like bench.time_queries, with a
-build/collect split per rep.  Optionally dumps .explain("formatted") to
-``DIR/<name>.txt``.  Same session shape as bench.py (get_spark, local
-[$SPARK_GRAFT_CPUS]).  Stderr only; one JSON line on stdout.
+build/collect split per rep, and the ``fingerprint`` of the last collect's
+rows (``exp_iter_parts.fingerprint``, taken after the timer stops), so an
+A/B's JSON shows by itself that both arms returned the same rows.
+Optionally dumps .explain("formatted") to ``DIR/<name>.txt``.  Same
+session shape as bench.py (get_spark, local[$SPARK_GRAFT_CPUS]).  Stderr
+only; one JSON line on stdout.
 """
 
 from __future__ import annotations
@@ -42,6 +45,7 @@ def main() -> int:
 
     from flink_net_spark.session import get_spark
     from flink_net_spark.tables import release_persisted
+    from tools.exp_iter_parts import fingerprint
 
     import __spark_entry__ as entry_mod
 
@@ -61,7 +65,7 @@ def main() -> int:
         df = fn(spark, SF_DIR)
         build0 = time.perf_counter() - t0
         t0 = time.perf_counter()
-        n = len(df.collect())  # r16 ADVICE: --reps 0 left `n` unassigned
+        rows = df.collect()
         coll0 = time.perf_counter() - t0
         if explain_dir:
             os.makedirs(explain_dir, exist_ok=True)
@@ -78,7 +82,7 @@ def main() -> int:
             d2 = fn(spark, SF_DIR)
             b = time.perf_counter() - t0
             t0 = time.perf_counter()
-            n = len(d2.collect())
+            rows = d2.collect()
             c = time.perf_counter() - t0
             runs.append({"build": round(b, 4), "collect": round(c, 4),
                          "total": round(b + c, 4)})
@@ -92,7 +96,8 @@ def main() -> int:
             "cold_build": round(build0, 4),
             "cold_collect": round(coll0, 4),
             "median": round(med, 4),
-            "rows": n,
+            "rows": len(rows),
+            "fingerprint": fingerprint(rows),
             "runs": runs,
         }
         print(f"[qtime] {name}: cold {build0:.3f}+{coll0:.3f}s, "
